@@ -139,8 +139,8 @@ def _queries(sf_dir: str):
         # full-table scan + row-local md5 fold + 3-group partial agg:
         # the pure scan/hash-throughput probe (reconciliation primitive)
         "q14_table_checksum": _checksum,
-        # PQ/ADC ANN: broadcast-crossJoin encode + integer rerank — the
-        # array-expression throughput probe over the embeddings table
+        # PQ/ADC ANN: numpy ADC encode + exact integer rerank, both
+        # over Arrow batches in Python workers, on the embeddings table
         "q15_simsearch_pq": _pq,
         # hybrid retrieval: BM25 + dense-cosine shortlists fused by RRF
         # (two score-and-reduce pipelines + a bounded fusion join)
@@ -152,8 +152,9 @@ def _queries(sf_dir: str):
         # decode) inside mapInPandas — the Python/Arrow batch-transfer
         # + per-row compute throughput probe
         "q18_multimodal_decode": _decode,
-        # cell-restricted ANN retrieval: broadcast centroid assign +
-        # same-cell candidate join + decimal rerank (the IVF scale path)
+        # cell-restricted ANN retrieval: numpy centroid assign over
+        # Arrow batches + same-cell candidate join + decimal rerank
+        # (the IVF scale path)
         "q19_ivf_knn_join": _ivf_knn,
         # baseline JPEG round trip per row (FDCT+Huffman encode →
         # entropy decode+IDCT) inside mapInPandas — the heavier-codec
@@ -184,6 +185,23 @@ def _ref_query_s(spark) -> float:
     return round(statistics.median(runs), 3)
 
 
+def _warm_up(spark, warm_dir: str, queries: dict) -> list[str]:
+    """Run each query once on ``warm_dir`` to the noop sink.  Returns
+    the names of the queries that failed; each failure is also reported
+    on stderr with its traceback."""
+    import traceback
+
+    failed: list[str] = []
+    for name, fn in queries.items():
+        try:
+            fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
+        except Exception:
+            failed.append(name)
+            print(f"warm-up failed: {name}", file=sys.stderr)
+            traceback.print_exc(file=sys.stderr)
+    return failed
+
+
 def _run_one(spark, sf_dir: str, name: str, fn, n_runs: int) -> float:
     """Median wall of n_runs noop-sink executions of one query."""
     import statistics
@@ -208,11 +226,9 @@ def _child_one_query(name: str) -> None:
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).count()
     fn = _queries(sf_dir)[name]
     warm_dir = "/root/testdata/sf0.001"
+    warmup_failed: list[str] = []
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        try:
-            fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
-        except Exception:
-            pass
+        warmup_failed = _warm_up(spark, warm_dir, {name: fn})
     n_runs = int(os.environ.get("BENCH_RUNS", "5"))
     sec = _run_one(spark, sf_dir, name, fn, n_runs)
     # normalize inside the SAME child JVM the query ran in: cross-run
@@ -227,6 +243,7 @@ def _child_one_query(name: str) -> None:
                 "sec": sec,
                 "ref_query_s": ref_s,
                 "norm": round(sec / ref_s, 3) if ref_s else None,
+                "warmup_failed": warmup_failed,
             }
         )
     )
@@ -251,6 +268,7 @@ def main() -> None:
 
         timings: dict[str, float] = {}
         normalized: dict[str, float] = {}
+        warmup_failed: list[str] = []
         for name in _queries(sf_dir):
             out = subprocess.run(
                 [sys.executable, os.path.abspath(__file__), "--query", name],
@@ -261,6 +279,7 @@ def main() -> None:
             rec = json.loads(out.stdout.strip().splitlines()[-1])
             timings[name] = rec["sec"]
             normalized[name] = rec.get("norm")
+            warmup_failed += rec["warmup_failed"]
         from pandasqlite_spark.session import get_spark
 
         spark = get_spark("pandasqlite_spark_bench")
@@ -284,7 +303,8 @@ def main() -> None:
                     "ref_query_s": ref_s,
                     "load_1m_start": round(load_start, 2),
                     "load_1m_end": round(os.getloadavg()[0], 2),
-                    "cpus": os.cpu_count(),
+                    "cpus": spark.sparkContext.defaultParallelism,
+                    "warmup_failed": warmup_failed,
                 }
             )
         )
@@ -300,12 +320,9 @@ def main() -> None:
     # (JIT compilation is per-plan, not per-data; measuring it would
     # benchmark javac, not the engine)
     warm_dir = "/root/testdata/sf0.001"
+    warmup_failed: list[str] = []
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        for fn in _queries(warm_dir).values():
-            try:
-                fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
-            except Exception:
-                pass
+        warmup_failed = _warm_up(spark, warm_dir, _queries(warm_dir))
 
     # median of N warm runs per query (default 5, env-tunable): the
     # round-4 bench drifted +24-26% on UNTOUCHED TPC-H queries under
@@ -343,7 +360,8 @@ def main() -> None:
                 "ref_query_s": ref_s,
                 "load_1m_start": round(load_start, 2),
                 "load_1m_end": round(os.getloadavg()[0], 2),
-                "cpus": os.cpu_count(),
+                "cpus": spark.sparkContext.defaultParallelism,
+                "warmup_failed": warmup_failed,
             }
         )
     )

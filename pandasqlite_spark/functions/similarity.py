@@ -17,11 +17,16 @@ Two tiers:
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pandasqlite_spark.operators.common import load, spread_scan
+from pandasqlite_spark.operators.common import (
+    ensure_package_on_workers,
+    load,
+    spread_scan,
+)
 
 _DEC = "decimal(8,6)"
 
@@ -150,18 +155,111 @@ def _fold_rows(
     ).select(id_col, "xs", F.expr(_SUMSQ_FOLD.format(col="xs")).alias("nn"))
 
 
-IVF_ARROW_CELLS = 32
+# ---------------------------------------------------------------------------
+# Arrow kernel adapter: the one row→matrix conversion of the numpy ANN
+# kernels (IVF assignment, PQ ADC encode, PQ exact rerank)
+# ---------------------------------------------------------------------------
+
+# Largest |scaled coordinate| the Arrow float64 kernels accept, and the
+# most terms one kernel sum may add.  At 2^22 a squared difference is
+# ≤ (2·2^22)² = 2^46, so 128 of them sum to ≤ 2^53, and a dot product
+# term is ≤ 2^44 — every float64 intermediate is an exactly-represented
+# integer, in any summation order.  The DECIMAL(8,6) domain nominally
+# admits 99.999999 (scaled 1e8), and nothing in the schema bounds the
+# vector length: the kernels assert both limits so a data-domain
+# widening fails loudly instead of silently losing bit-exactness.
+_SCALED_ABS_MAX = 1 << 22
+_MAX_TERMS = 128
+
+
+def _check_scaled_bound(arr, what: str) -> None:
+    """Raise if a scaled vector or matrix leaves the float64-exactness
+    envelope: any |coordinate| above ``_SCALED_ABS_MAX``, or rows wider
+    than ``_MAX_TERMS`` terms.  NaN-safe: null elements compare False
+    and pass."""
+    if arr.ndim and arr.shape[-1] > _MAX_TERMS:
+        raise ValueError(
+            f"{what}: {arr.shape[-1]} terms per sum exceeds {_MAX_TERMS}; "
+            "the scaled-long float64 exactness bound (sums < 2^53) no "
+            "longer holds — re-derive the quantization scale"
+        )
+    if arr.size and np.any(np.abs(arr) > _SCALED_ABS_MAX):
+        raise ValueError(
+            f"{what}: |scaled coordinate| exceeds {_SCALED_ABS_MAX}; "
+            "the scaled-long float64 exactness bound (sums < 2^53) no "
+            "longer holds — re-derive the quantization scale"
+        )
+
+
+def _to_matrix(lists, width: int | None = None):
+    """Array rows → ``(mat, lens, nulls)``: a ``(len(lists), width)``
+    float64 matrix with NaN for null elements and for the positions past
+    a row's end (longer rows are cut at ``width``, which defaults to the
+    longest row), the true row lengths, and the null-row mask (a null
+    array has length 0)."""
+    n = len(lists)
+    nulls = np.fromiter((v is None for v in lists), dtype=bool, count=n)
+    lens = np.fromiter(
+        (0 if v is None else len(v) for v in lists), dtype=np.int64, count=n
+    )
+    if width is None:
+        width = int(lens.max(initial=0))
+    mat = np.full((n, width), np.nan)
+    if n and width:
+        # pandas pads ragged rows and maps null elements to NaN in C
+        raw = pd.DataFrame([() if v is None else v for v in lists]).to_numpy(
+            np.float64
+        )
+        w = min(width, raw.shape[1])
+        mat[:, :w] = raw[:, :w]
+    return mat, lens, nulls
+
+
+def _scaled_matrix(lists, what: str, width: int | None = None):
+    """:func:`_to_matrix` followed by the exactness check."""
+    mat, lens, nulls = _to_matrix(lists, width)
+    _check_scaled_bound(mat, what)
+    return mat, lens, nulls
+
+
+def _nullable_int64(v) -> pd.api.extensions.ExtensionArray:
+    """float64 kernel results → an Int64 column, NaN → SQL NULL."""
+    nan = np.isnan(v)
+    return pd.arrays.IntegerArray(np.where(nan, 0, v).astype(np.int64), nan)
+
+
+def _arrow_map(
+    scan: DataFrame, operand, kernel, schema: str, what: str, width: int
+) -> DataFrame:
+    """Run ``kernel(pdf, X, lens, nulls, operand)`` over the Arrow batches
+    of ``scan``, whose column ``arr`` holds the scaled vectors.  Each
+    non-empty batch's ``arr`` becomes ``(X, lens, nulls)`` via
+    :func:`_scaled_matrix` at the fixed ``width`` of the driver-side
+    ``operand`` (the centroid matrix, codebook or query), which is
+    broadcast once per call.  Scale shape: one narrow map pass — no
+    join, no shuffle."""
+    spark = scan.sparkSession
+    ensure_package_on_workers(spark)
+    bc = spark.sparkContext.broadcast(operand)
+
+    def run(batches):
+        op = bc.value
+        for pdf in batches:
+            if len(pdf):
+                X, lens, nulls = _scaled_matrix(pdf["arr"].tolist(), what, width)
+                yield kernel(pdf, X, lens, nulls, op)
+
+    return scan.mapInPandas(run, schema=schema)
 
 
 def _collect_scaled_centroids(centroids: DataFrame):
     """Driver-side materialization of the centroid set as scaled-long
-    rows, sorted by cid — ONE job shared by both assignment paths.
+    rows, sorted by cid.
 
     The centroid set is broadcast-by-contract (≤ the 2²⁰ sizing cap,
     ≪ executor memory under √N sizing), so collecting it is the same
     driver cost the broadcast already paid.  Doing it once at build
-    time replaces (a) the ``count()`` probe job that only chose the
-    path, and (b) the per-branch ObjectHashAggregate/collect rebuilds
+    time replaces the per-branch ObjectHashAggregate/collect rebuilds
     a multi-use plan (knn-join, recall-eval: 5 broadcast branches)
     re-executed per run (round-9 profile: 2×count + rebuilds ≈ 0.5 s
     of the 2.4 s q19 wall)."""
@@ -183,14 +281,28 @@ def _collect_scaled_centroids(centroids: DataFrame):
 _spread_scan = spread_scan
 
 
+def _ivf_kernel(pdf, X, lens, nulls, op):
+    """Argmax-dot cell of each scan row.  ``zip_with`` semantics: a null
+    element or a position past the shorter vector is a null term, and
+    the assignment skips null terms — a zero product is the same thing,
+    so both sides zero-fill (the centroid matrix on the driver).  Rows
+    wider than the centroids are cut at the centroid width, where every
+    further term would be null.  ``np.argmax`` takes the first maximum
+    and the centroid rows are cid-sorted: the (dot DESC, cid ASC)
+    tie-break."""
+    cids, C = op
+    best = np.argmax(np.nan_to_num(X) @ C.T, axis=1)
+    return pdf.iloc[:, :1].assign(cell=cids[best].astype(np.int32))
+
+
 def _ivf_assign_arrow(emb: DataFrame, crows, id_col: str) -> DataFrame:
-    """Large-cell-count assignment: exact scaled-long GEMM over Arrow
-    batches.  Coordinates quantize to DECIMAL(8,6)·10⁶ longs, so every
-    product ≤ 2.5×10¹¹ and every 64-term partial sum ≤ 1.6×10¹³ < 2⁵³
-    — float64 BLAS computes each dot with ZERO rounding in any
-    summation order, so the scores (and the argmax with its
-    dot-DESC/cid-ASC tie-break: centroid rows sorted by cid, argmax
-    takes the first maximum) are bit-identical to the decimal oracle.
+    """Cell assignment as an exact scaled-long GEMM over Arrow batches.
+    Coordinates quantize to DECIMAL(8,6)·10⁶ longs, so every product
+    ≤ 2.5×10¹¹ and every 64-term partial sum ≤ 1.6×10¹³ < 2⁵³ — float64
+    BLAS computes each dot with ZERO rounding in any summation order,
+    so the scores and the argmax are bit-identical to the DECIMAL
+    oracle and to the row-wise BIGINT ``zip_with``/``aggregate`` fold
+    kept as ``_ref_ivf_assign`` in ``tests/test_sketch_embedding_ops.py``.
     2×10¹¹ flops at sf10's derived 2048 cells run in seconds where the
     same math as a posexplode ⋈ groupBy materialized 2×10¹¹ join rows
     (38 min, round-8 sweep) and an interpreted HOF fold was still
@@ -201,42 +313,24 @@ def _ivf_assign_arrow(emb: DataFrame, crows, id_col: str) -> DataFrame:
     real corpus — a 10¹²-vector corpus would shard the assignment
     hierarchically before this is the bottleneck), the fact side is
     one narrow Arrow map pass — no shuffle, no join."""
-    import numpy as np
-    import pandas as pd
-
     cids = np.asarray([r["cid"] for r in crows], dtype=np.int64)
-    # null ELEMENTS contribute nothing to a SQL SUM — a zero product is
-    # the same thing, so both the centroid matrix and the row batches
-    # null-fill with 0 (the nulls-contract sweep pinned this: the old
-    # explode ⋈ SUM path skipped null products)
-    C = pd.DataFrame([r["cs"] for r in crows]).fillna(0.0).to_numpy(np.float64)
-    _check_scaled_bound(C, "ivf centroids")
-    bc = emb.sparkSession.sparkContext.broadcast((cids, C))
-
+    C, _, _ = _scaled_matrix([r["cs"] for r in crows], "ivf centroids")
+    # null / empty embeddings never reached the old explode ⋈ SUM
+    # assignment (posexplode emits no rows) — the nulls-contract sweep
+    # pins this
     src = emb.filter(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     ).select(
-        F.col(id_col), F.expr(_SCALED_LONG.format(col="embedding")).alias("xl")
+        F.col(id_col), F.expr(_SCALED_LONG.format(col="embedding")).alias("arr")
     )
-
-    def assign_batches(batches):
-        b_cids, b_C = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = (
-                pd.DataFrame(pdf["xl"].tolist())
-                .fillna(0.0)
-                .to_numpy(np.float64)
-            )
-            _check_scaled_bound(X, "ivf scan")
-            best = np.argmax(X @ b_C.T, axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].values,
-                 "cell": b_cids[best].astype(np.int32)}
-            )
-
-    return src.mapInPandas(assign_batches, schema=f"{id_col} long, cell int")
+    return _arrow_map(
+        src,
+        (cids, np.nan_to_num(C)),
+        _ivf_kernel,
+        f"{id_col} long, cell int",
+        "ivf scan",
+        C.shape[1],
+    )
 
 
 def ivf_assign(
@@ -252,29 +346,24 @@ def ivf_assign(
     Round-8 shape: the previous posexplode ⋈ broadcast ⋈ groupBy
     materialized |corpus|·|cells| grouped rows (2×10¹¹ at sf10's
     derived 2048 cells — 38 min of BigDecimal aggregation, found live
-    in the sf10 sweep).  Now the dot products run in SCALED-LONG
+    in the sf10 sweep).  The dot products run in SCALED-LONG
     arithmetic (DECIMAL(8,6)·10⁶ per coordinate ⇒ |dot| < 2⁵³ — exact,
-    order-free, engine-independent): small cell counts fold row-wise
-    over a broadcast centroid array in pure JVM expressions; above
-    ``IVF_ARROW_CELLS`` the same exact math runs as a float64 GEMM
-    over Arrow batches (:func:`_ivf_assign_arrow`), where BLAS does
-    the flops instead of an interpreted per-element lambda.  Both
-    paths produce bit-identical assignments (same quantization, same
-    (dot DESC, cid ASC) tie-break).  The pre-compute repartition keeps
+    order-free, engine-independent) as one float64 GEMM over Arrow
+    batches (:func:`_ivf_assign_arrow`), for every cell count, with the
+    (dot DESC, cid ASC) tie-break.  The pre-compute repartition keeps
     the pass spread across the cluster when the scan under-partitions
     (sf10 parquet = 7 input splits).
 
     Round-9: the centroid set materializes on the driver ONCE at build
     time (:func:`_collect_scaled_centroids`) — it is the broadcast side
     by contract, so this is the same bytes the broadcast already moved,
-    and it replaces the path-probe ``count()`` job plus the per-branch
-    centroid-aggregate rebuilds that a multi-use plan re-executed every
-    run; the partition probe is the ``inputFiles()`` metadata call
-    instead of an RDD conversion (:func:`_spread_scan`).  Callers that
-    assign several tables against the SAME centroid set (knn-join,
-    recall-eval: corpus + query batch) pass the collected rows via
-    ``centroid_rows`` so the centroid job runs once per query, not per
-    assignment."""
+    and it replaces the per-branch centroid-aggregate rebuilds that a
+    multi-use plan re-executed every run; the partition probe is the
+    ``inputFiles()`` metadata call instead of an RDD conversion
+    (:func:`_spread_scan`).  Callers that assign several tables against
+    the SAME centroid set (knn-join, recall-eval: corpus + query batch)
+    pass the collected rows via ``centroid_rows`` so the centroid job
+    runs once per query, not per assignment."""
     emb = _spread_scan(emb, id_col)
     crows = (
         _collect_scaled_centroids(centroids)
@@ -287,49 +376,7 @@ def ivf_assign(
         return emb.select(F.col(id_col)).limit(0).select(
             F.col(id_col), F.lit(None).cast("int").alias("cell")
         )
-    if len(crows) > IVF_ARROW_CELLS:
-        return _ivf_assign_arrow(emb, crows, id_col)
-    # 1-row broadcast relation carrying every centroid's scaled-long
-    # vector, cid-sorted (built from the driver rows — values identical
-    # to the old array_sort(collect_list(struct(cid, cs))) aggregate);
-    # null / empty centroid embeddings were dropped pre-collect exactly
-    # as the explode formulation dropped them
-    spark = emb.sparkSession
-    cents = spark.createDataFrame(
-        [([(int(r["cid"]), r["cs"]) for r in crows],)],
-        "cents: array<struct<cid:int,cs:array<bigint>>>",
-    )
-    scored = (
-        emb
-        # null / empty embeddings never reached the old explode ⋈ SUM
-        # assignment (posexplode emits no rows) — the nulls-contract
-        # sweep pins this
-        .filter(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
-        .crossJoin(F.broadcast(cents))
-        .select(
-            id_col,
-            F.expr(_SCALED_LONG.format(col="embedding")).alias("xl"),
-            "cents",
-        )
-    )
-    # one exact scaled-long dot per centroid, then an explicit
-    # (dot DESC, cid ASC) argmax fold — order-independent.  Null
-    # ELEMENTS yield null products; SQL SUM skips nulls, so the fold
-    # filters them before accumulating (same value, same contract).
-    best = F.expr(
-        "aggregate("
-        " transform(cents, c -> struct("
-        "   aggregate(filter(zip_with(xl, c.cs, (a, b) -> a * b),"
-        "                    p -> p IS NOT NULL),"
-        "             CAST(0 AS BIGINT), (s, v) -> s + v) AS dot,"
-        "   c.cid AS cid)),"
-        " struct(CAST(-9223372036854775808 AS BIGINT) AS dot,"
-        "        CAST(2147483647 AS INT) AS cid),"
-        " (acc, s) -> CASE WHEN s.dot > acc.dot"
-        "                    OR (s.dot = acc.dot AND s.cid < acc.cid)"
-        "             THEN s ELSE acc END)"
-    )
-    return scored.select(id_col, best.getField("cid").alias("cell"))
+    return _ivf_assign_arrow(emb, crows, id_col)
 
 
 def q_simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -705,18 +752,9 @@ def ivf_candidate_cosine(
     1.01 s).  ``cand`` pairs must be unique — true of every caller
     (one cell per vector) and already an implicit precondition of the
     old shape, whose SUM would have double-counted duplicated pairs."""
-    # PANDASQLITE_IVF_NO_PRUNE=1 is a BENCH-ONLY escape hatch for the
-    # prune-in/prune-out A/B (round-6 verdict #4); results are
-    # identical either way (the candidate equi-join below bounds the
-    # output), only the fold input size changes
-    import os as _os
-
-    if _os.environ.get("PANDASQLITE_IVF_NO_PRUNE") == "1":
-        cand_vecs = corpus
-    else:
-        cand_vecs = corpus.join(
-            F.broadcast(cand.select("vec_id").distinct()), "vec_id", "left_semi"
-        )
+    cand_vecs = corpus.join(
+        F.broadcast(cand.select("vec_id").distinct()), "vec_id", "left_semi"
+    )
     c = _fold_rows(cand_vecs)
     q = (
         queries.filter(F.col("qv").isNotNull() & (F.size("qv") > 0))
@@ -1105,55 +1143,56 @@ def _pq_sub_dist(a: str, b: str, m: int):
     return F.aggregate(sq, F.lit(0).cast("bigint"), lambda acc, v: acc + v)
 
 
-# Largest |scaled coordinate| the Arrow float64 kernels accept.  At
-# 2^22 a PQ squared-diff 8-term sum stays ≤ 8·(2·2^22)² = 2^47 and a
-# 64-dim scaled-long dot stays ≤ 64·(2^22)² = 2^50 — both < 2^53, so
-# every float64 intermediate is an exactly-represented integer.  The
-# DECIMAL(8,6) domain nominally admits 99.999999 (scaled 1e8), which
-# WOULD overflow the exactness argument — the kernels assert this
-# bound so a future data-domain widening fails loudly instead of
-# silently losing bit-exactness (round-8 advice).
-_SCALED_ABS_MAX = 1 << 22
+def _pq_adc_kernel(pdf, X, lens, nulls, op):
+    """Per scan row: the PQ code of each subspace (argmin of the
+    combined ``dv·PQ_K + cid`` key) and the sum of its query-side
+    distances ``dq``.
 
-
-def _check_scaled_bound(arr, what: str) -> None:
-    """Raise if any |scaled coordinate| exceeds the float64-exactness
-    envelope.  NaN-safe: null elements compare False and pass."""
-    import numpy as np
-
-    if arr.size and np.any(np.abs(arr) > _SCALED_ABS_MAX):
-        raise ValueError(
-            f"{what}: |scaled coordinate| exceeds {_SCALED_ABS_MAX}; "
-            "the scaled-long float64 exactness bound (sums < 2^53) no "
-            "longer holds — re-derive the quantization scale"
-        )
-
-
-PQ_ARROW = True  # Arrow/numpy ADC encode (False = legacy JVM HOF fold)
+    Reproduces the fold's ``zip_with`` pad contract: ``zip_with(arr,
+    carr)`` pads the shorter side with null to max(len), so positions
+    below that length are INCLUDED (a null term nulls the subspace
+    sum), positions at or past it do not exist (an empty slice sums to
+    0), and a null array on either side nulls every sum.  The argmin
+    keeps ``min(struct(dv·PQ_K+cid, dq))``'s null-struct-field-sorts-
+    FIRST rule (``min`` over ``struct(NULL,5),struct(3,9)`` picks the
+    NULL) through a −inf fill; among equal keys the smallest ``dq``
+    wins, and on a full tie the first (smallest) cid."""
+    cids, C, c_lens, c_null, dq = op
+    neg_inf = np.float64("-inf")
+    dq_fill = np.where(np.isnan(dq), neg_inf, dq)  # (PQ_K, PQ_M)
+    maxlen = np.maximum(lens[:, None], c_lens[None, :])  # (n, PQ_K)
+    t = np.zeros((len(pdf), PQ_M))  # chosen dq per subspace
+    for m in range(PQ_M):
+        lo = m * PQ_DSUB
+        d2 = (
+            X[:, None, lo : lo + PQ_DSUB] - C[None, :, lo : lo + PQ_DSUB]
+        ) ** 2  # (n, PQ_K, PQ_DSUB); NaN where either side is null/missing
+        include = (lo + np.arange(PQ_DSUB)[None, None, :]) < maxlen[:, :, None]
+        dv = np.where(include, d2, 0.0).sum(axis=2)  # (n, PQ_K)
+        dv[nulls, :] = np.nan
+        dv[:, c_null] = np.nan
+        k = dv * PQ_K + cids[None, :]
+        kf = np.where(np.isnan(k), neg_inf, k)  # null sorts first
+        tie = kf == kf.min(axis=1, keepdims=True)
+        pick = np.where(tie, dq_fill[None, :, m], np.inf).argmin(axis=1)
+        t[:, m] = dq[pick, m]
+    # NaN propagates through the sum like SQL NULL
+    return pdf[["vec_id"]].assign(adc_dist=_nullable_int64(t.sum(axis=1)))
 
 
 def _pq_adc_arrow(scan: DataFrame, cb_adc: DataFrame) -> DataFrame:
-    """ADC encode as a NaN-aware numpy kernel over Arrow batches —
-    the round-9 extension of the round-8 ``_ivf_assign_arrow`` rewrite
-    to the PQ hot path (the last interpreted-HOF scan: |corpus|×PQ_K
-    broadcast rows through ``zip_with``/``slice``/``aggregate``
-    lambdas).
+    """ADC encode as a NaN-aware numpy kernel over Arrow batches
+    (:func:`_pq_adc_kernel`).  The (≤PQ_K)-row ADC table — codebook
+    vectors plus their query-side subspace distances ``dq0..dq7`` — is
+    collected at build time and broadcast; the scan is one narrow Arrow
+    map pass, no join, no shuffle.
 
-    Bit-identical to the JVM fold by construction: the same scaled
-    BIGINT grid (``_pq_scaled``), every per-subspace squared-L2 ≤
-    8·(2·_SCALED_ABS_MAX)² < 2^53 so float64 arithmetic is exact in
-    any order, and the argmin reproduces ``min(struct(dv·PQ_K+cid,
-    dq))`` exactly — including Spark's null-struct-field-sorts-FIRST
-    rule (verified: ``min`` over ``struct(NULL,5),struct(3,9)`` picks
-    the NULL) via a −inf fill, and the zip_with length-pad contract
-    (missing element → null term; empty slice → 0; null array → all
-    null).  Scale shape: the (≤PQ_K)-row ADC table is a broadcast
-    variable; the scan is one narrow Arrow map pass — no join, no
-    shuffle.
-    """
-    import numpy as np
-    import pandas as pd
-
+    Bit-identical to the BIGINT ``zip_with``/``slice``/``aggregate``
+    fold + ``min(struct)`` groupBy kept as ``_ref_pq_adc_scores`` in
+    ``tests/test_sketch_embedding_ops.py``: the same scaled BIGINT grid
+    (``_pq_scaled``), and every per-subspace squared-L2 ≤
+    8·(2·_SCALED_ABS_MAX)² < 2^53, so float64 arithmetic is exact in
+    any order."""
     crows = cb_adc.collect()
     if not crows:
         # empty codebook → the crossJoin formulation yields zero rows
@@ -1162,197 +1201,64 @@ def _pq_adc_arrow(scan: DataFrame, cb_adc: DataFrame) -> DataFrame:
         )
     crows.sort(key=lambda r: r["cid"])
     cids = np.asarray([r["cid"] for r in crows], dtype=np.int64)
-    DIM = PQ_M * PQ_DSUB
-    n_cents = len(crows)
-
-    def to_mat(lists):
-        """rows → (len(lists), DIM) float64, NaN where the element is
-        null or the array is shorter than DIM; also the true lengths
-        (null array → length 0 + an explicit null-row mask)."""
-        lens = np.asarray(
-            [0 if v is None else len(v) for v in lists], dtype=np.int64
-        )
-        nulls = np.asarray([v is None for v in lists], dtype=bool)
-        n = len(lists)
-        if n and not nulls.any():
-            # vectorized C path (the common case: no null arrays).
-            # pd.DataFrame pads ragged rows and null ELEMENTS with NaN
-            # — exactly the kernel's representation.
-            raw = pd.DataFrame(lists).to_numpy(np.float64)
-            if raw.shape[1] >= DIM:
-                return raw[:, :DIM], lens, nulls
-            mat = np.full((n, DIM), np.nan)
-            if raw.shape[1]:
-                mat[:, : raw.shape[1]] = raw
-            return mat, lens, nulls
-        mat = np.full((n, DIM), np.nan)
-        for i, v in enumerate(lists):
-            if v is None:
-                continue
-            w = min(len(v), DIM)
-            if w:
-                mat[i, :w] = [
-                    np.nan if x is None else float(x) for x in v[:w]
-                ]
-        return mat, lens, nulls
-
-    C, c_lens, c_null = to_mat([r["carr"] for r in crows])
-    _check_scaled_bound(C[~np.isnan(C)], "pq codebook")
-    dq = np.full((n_cents, PQ_M), np.nan)
-    for m in range(PQ_M):
-        col = [r[f"dq{m}"] for r in crows]
-        dq[:, m] = [np.nan if x is None else float(x) for x in col]
-
-    bc = scan.sparkSession.sparkContext.broadcast(
-        (cids, C, c_lens, c_null, dq)
+    dim = PQ_M * PQ_DSUB
+    C, c_lens, c_null = _scaled_matrix([r["carr"] for r in crows], "pq codebook", dim)
+    dq, _, _ = _to_matrix([[r[f"dq{m}"] for m in range(PQ_M)] for r in crows], PQ_M)
+    return _arrow_map(
+        scan.select("vec_id", "arr"),
+        (cids, C, c_lens, c_null, dq),
+        _pq_adc_kernel,
+        "vec_id long, adc_dist long",
+        "pq scan",
+        dim,
     )
 
-    def encode_batches(batches):
-        b_cids, b_C, b_clens, b_cnull, b_dq = bc.value
-        neg_inf = np.float64("-inf")
-        dq_fill = np.where(np.isnan(b_dq), neg_inf, b_dq)  # (16, M)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X, x_lens, x_null = to_mat(pdf["arr"].tolist())
-            _check_scaled_bound(X[~np.isnan(X)], "pq scan")
-            n = len(pdf)
-            # sq = zip_with(arr, carr, (x,y)->(x-y)^2) pads the shorter
-            # side with null to max(len) — positions < maxlen are
-            # INCLUDED (null term → null sum), positions ≥ maxlen do
-            # not exist (empty slice → 0)
-            maxlen = np.maximum(
-                x_lens[:, None], b_clens[None, :]
-            )  # (n, 16)
-            t = np.zeros((n, PQ_M))  # chosen dq per subspace
-            for m in range(PQ_M):
-                lo = m * PQ_DSUB
-                d2 = (
-                    X[:, None, lo : lo + PQ_DSUB]
-                    - b_C[None, :, lo : lo + PQ_DSUB]
-                ) ** 2  # (n, 16, 8); NaN where either side missing/null
-                include = (
-                    lo + np.arange(PQ_DSUB)[None, None, :]
-                ) < maxlen[:, :, None]
-                dv = np.where(include, d2, 0.0).sum(axis=2)  # (n, 16)
-                # null array on either side → the whole zip is null
-                dv[x_null, :] = np.nan
-                dv[:, b_cnull] = np.nan
-                k = dv * PQ_K + b_cids[None, :]
-                kf = np.where(np.isnan(k), neg_inf, k)  # null sorts first
-                tie = kf == kf.min(axis=1, keepdims=True)
-                pick = np.where(tie, dq_fill[None, :, m], np.inf).argmin(
-                    axis=1
-                )  # first index on ties == smallest cid
-                t[:, m] = b_dq[pick, m]
-            adc = t.sum(axis=1)  # NaN propagates like SQL null
-            out = pd.DataFrame({"vec_id": pdf["vec_id"].values})
-            nan_mask = np.isnan(adc)
-            if not nan_mask.any():
-                out["adc_dist"] = adc.astype(np.int64)
-            else:
-                out["adc_dist"] = pd.array(
-                    [None if m else int(v) for v, m in zip(adc, nan_mask)],
-                    dtype="Int64",
-                )
-            yield out
 
-    return scan.select("vec_id", "arr").mapInPandas(
-        encode_batches, schema="vec_id long, adc_dist long"
-    )
+def _pq_exact_kernel(pdf, X, lens, nulls, op):
+    """Exact squared-L2 of each shortlist row to the query.  ``zip_with``
+    spans max(len(arr), len(qarr)) positions, a missing or null element
+    nulls its term, and the unfiltered fold nulls the whole sum — so a
+    row has a distance only when it is exactly as long as the query and
+    null-free (two empty arrays fold to 0), and a NULL array on either
+    side nulls it."""
+    q, q_null = op
+    s = ((X - q[None, :]) ** 2).sum(axis=1)
+    s[(lens != len(q)) | nulls | q_null] = np.nan
+    return pdf[["vec_id", "adc_dist"]].assign(exact_dist=_nullable_int64(s))
 
 
 def _pq_exact_arrow(shortlist: DataFrame, qrow: DataFrame) -> DataFrame:
     """The PQ exact rerank as a NaN-aware numpy kernel over Arrow
-    batches — round-10 closure of the q15 family (round-8 advice #1's
-    tail): the LAST interpreted ``aggregate``/``zip_with`` fold in a
-    headline query, converted to the same kernel shape as
-    :func:`_pq_adc_arrow`.  Input is the PQ_CAND-bounded shortlist
-    (vec_id, adc_dist, arr); the single query row is collected at build
-    time (≤1 row by vec_id uniqueness — the same driver cost the old
-    crossJoin broadcast already paid).
+    batches (:func:`_pq_exact_kernel`).  Input is the PQ_CAND-bounded
+    shortlist (vec_id, adc_dist, arr); the single query row is
+    collected at build time (≤1 row by vec_id uniqueness) and
+    broadcast, and a MISSING query row yields zero output rows (the
+    empty-broadcast crossJoin contract).  The collect is a
+    driver-synchronous job at plan build, acceptable under the
+    one-query-per-invocation driver contract.
 
-    Bit-identical to the JVM fold by construction: same scaled BIGINT
-    grid, every squared-diff 64-term sum < 2^53 (asserted via
-    ``_check_scaled_bound``) so float64 is exact in any order, and the
-    ``zip_with`` pad contract is reproduced exactly — terms exist up to
-    max(len(arr), len(qarr)), a missing/null element inside that range
-    nulls the whole sum, two empty arrays fold to 0, a NULL array on
-    either side nulls the row, and a MISSING query row yields zero
-    output rows (the old empty-broadcast crossJoin)."""
-    import numpy as np
-    import pandas as pd
-
+    Bit-identical to the BIGINT ``zip_with``/``aggregate`` fold kept as
+    ``_ref_pq_topk`` in ``tests/test_sketch_embedding_ops.py``: same
+    scaled BIGINT grid, and every squared-diff sum has at most
+    ``_MAX_TERMS`` terms below the 2^22 coordinate bound (both asserted
+    by ``_check_scaled_bound``), so float64 is exact in any order."""
     qrows = qrow.collect()
     if not qrows:
         return shortlist.limit(0).select(
             "vec_id", "adc_dist", F.lit(None).cast("bigint").alias("exact_dist")
         )
-    qa = qrows[0]["qarr"]
-    q_null = qa is None
-    q = np.asarray(
-        [np.nan if x is None else float(x) for x in (qa or [])],
-        dtype=np.float64,
-    )
-    _check_scaled_bound(q[~np.isnan(q)], "pq exact query")
-    qlen = len(q)
-    bc = shortlist.sparkSession.sparkContext.broadcast((q_null, q, qlen))
-
-    def fold_batches(batches):
-        b_qnull, b_q, b_qlen = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vs = pdf["arr"].tolist()
-            n = len(vs)
-            lens = np.asarray(
-                [0 if v is None else len(v) for v in vs], dtype=np.int64
-            )
-            nulls = np.asarray([v is None for v in vs], dtype=bool)
-            dim = int(max(lens.max(initial=0), b_qlen))
-            mat = np.full((n, max(dim, 1)), np.nan)
-            for i, v in enumerate(vs):
-                if v is None or not len(v):
-                    continue
-                mat[i, : len(v)] = [
-                    np.nan if x is None else float(x) for x in v
-                ]
-            _check_scaled_bound(mat[~np.isnan(mat)], "pq exact scan")
-            qpad = np.full(max(dim, 1), np.nan)
-            qpad[:b_qlen] = b_q
-            d2 = (mat - qpad[None, :]) ** 2
-            maxlen = np.maximum(lens, b_qlen)
-            include = np.arange(max(dim, 1))[None, :] < maxlen[:, None]
-            s = np.where(include, d2, 0.0).sum(axis=1)
-            s[nulls] = np.nan
-            if b_qnull:
-                s[:] = np.nan
-            out = pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].values,
-                    "adc_dist": pdf["adc_dist"],
-                }
-            )
-            nan_mask = np.isnan(s)
-            if not nan_mask.any():
-                out["exact_dist"] = s.astype(np.int64)
-            else:
-                out["exact_dist"] = pd.array(
-                    [None if m else int(v) for v, m in zip(s, nan_mask)],
-                    dtype="Int64",
-                )
-            yield out
-
-    return shortlist.select("vec_id", "adc_dist", "arr").mapInPandas(
-        fold_batches, schema="vec_id long, adc_dist long, exact_dist long"
+    q, _, q_null = _scaled_matrix([qrows[0]["qarr"]], "pq exact query")
+    return _arrow_map(
+        shortlist.select("vec_id", "adc_dist", "arr"),
+        (q[0], bool(q_null[0])),
+        _pq_exact_kernel,
+        "vec_id long, adc_dist long, exact_dist long",
+        "pq exact scan",
+        q.shape[1],
     )
 
 
-def pq_topk(
-    emb: DataFrame,
-    scan_ids: DataFrame | None = None,
-    arrow: bool | None = None,
-) -> DataFrame:
+def pq_topk(emb: DataFrame, scan_ids: DataFrame | None = None) -> DataFrame:
     """PQ/ADC approximate nearest neighbours with exact rerank.
 
     Encode: each vector's m-th subvector maps to its nearest of PQ_K
@@ -1362,23 +1268,15 @@ def pq_topk(
     ADC: the query→centroid distance table replaces the full vector in
     the scan, so candidate scoring reads PQ_M codes (8 bytes) instead
     of 64 floats — the 32× memory-bandwidth lever that makes
-    billion-vector ANN feasible.  Both the encode argmin and the ADC
-    sum happen in ONE groupBy over a broadcast 16-row crossJoin: the
-    per-(vector, centroid) row carries ``struct(dv·16+cid, dq)`` per
-    subspace and ``min(struct)`` picks the code AND its query-side
-    distance together (the combined BIGINT key makes the argmin
-    total-order deterministic).  Exact integer rerank touches only
-    PQ_CAND candidates.
+    billion-vector ANN feasible.  :func:`pq_adc_scores` computes the
+    encode argmin and the ADC sum in one numpy kernel over Arrow
+    batches; the exact integer rerank (:func:`_pq_exact_arrow`, the
+    same kernel shape) touches only the PQ_CAND shortlist.
 
-    Scale shape: one broadcast crossJoin (16 rows), one
-    partial-aggregated groupBy on vec_id, TakeOrderedAndProject for
-    both top-k steps — no shuffle ever moves more than |candidates|.
-
-    ``arrow=None`` follows the module default (``PQ_ARROW``): the
-    exact rerank runs as the :func:`_pq_exact_arrow` numpy kernel;
-    ``arrow=False`` keeps the legacy JVM ``zip_with``/``aggregate``
-    fold (the bit-identity test pins both paths equal, including
-    null/empty/ragged edges on scan and query sides)."""
+    Scale shape: two narrow Arrow map passes with ≤PQ_K-row and 1-row
+    broadcast operands, a broadcast join of the shortlist ids, and
+    TakeOrderedAndProject for both top-k steps — no shuffle ever moves
+    more than |candidates|."""
     scaled = _pq_scaled(emb)
     qrow = scaled.filter(F.col("vec_id") == PQ_QUERY_ID).select(F.col("arr").alias("qarr"))
     cand = (
@@ -1387,29 +1285,15 @@ def pq_topk(
         .limit(PQ_CAND)
     )
     shortlist = scaled.join(F.broadcast(cand), "vec_id")
-    use_arrow = PQ_ARROW if arrow is None else arrow
-    if use_arrow:
-        exact = _pq_exact_arrow(shortlist, qrow)
-    else:
-        exact = shortlist.crossJoin(F.broadcast(qrow)).select(
-            "vec_id",
-            "adc_dist",
-            F.aggregate(
-                F.zip_with("arr", "qarr", lambda x, y: (x - y) * (x - y)),
-                F.lit(0).cast("bigint"),
-                lambda acc, v: acc + v,
-            ).alias("exact_dist"),
-        )
+    exact = _pq_exact_arrow(shortlist, qrow)
     return exact.orderBy("exact_dist", "vec_id").limit(PQ_TOPK)
 
 
-def pq_adc_scores(
-    emb: DataFrame, scan_ids: DataFrame | None = None, arrow: bool | None = None
-) -> DataFrame:
+def pq_adc_scores(emb: DataFrame, scan_ids: DataFrame | None = None) -> DataFrame:
     """The PQ encode + ADC sum as a standalone (vec_id, adc_dist)
-    table — the stage ``pq_topk`` ranks.  ``arrow=None`` follows the
-    module default; the bit-identity test pins both paths equal over
-    the full corpus including null/empty/ragged edge vectors."""
+    table — the stage ``pq_topk`` ranks.  ``test_pq_adc_arrow_and_jvm_
+    paths_identical`` pins it to the JVM-fold reference over the full
+    corpus, including null/empty/ragged edge vectors."""
     scaled = _pq_scaled(emb)
     # optional candidate restriction (the IVF→PQ two-stage path):
     # codebook and query always come from the FULL corpus, the ADC scan
@@ -1419,50 +1303,14 @@ def pq_adc_scores(
         F.col("vec_id").alias("cid"), F.col("arr").alias("carr")
     )
     qrow = scaled.filter(F.col("vec_id") == PQ_QUERY_ID).select(F.col("arr").alias("qarr"))
-    # ADC table first: 16 rows × PQ_M query→centroid distances, computed
-    # ONCE — joining it pre-computed means the per-(vector, centroid)
-    # row below never re-derives the query side (measured 2.1 s → sub-s
-    # at sf0.1 together with the shared-sq rewrite)
+    # ADC table first: PQ_K rows × PQ_M query→centroid distances,
+    # computed ONCE, so the scan kernel never re-derives the query side
     cb_adc = codebook.crossJoin(F.broadcast(qrow)).select(
         "cid",
         "carr",
         *[_pq_sub_dist("qarr", "carr", m).alias(f"dq{m}") for m in range(PQ_M)],
     )
-    if PQ_ARROW if arrow is None else arrow:
-        # round-9 hot path: NaN-aware numpy kernel over Arrow batches,
-        # bit-identical to the fold below (pinned by
-        # test_pq_adc_arrow_and_jvm_paths_identical)
-        return _pq_adc_arrow(scan, cb_adc)
-    else:
-        # legacy JVM HOF fold: one element-wise squared-diff zip per
-        # (vector, centroid) row, shared by all PQ_M slice-folds
-        sq = F.zip_with("arr", "carr", lambda x, y: (x - y) * (x - y))
-        joined = scan.crossJoin(F.broadcast(cb_adc)).withColumn("sq", sq)
-
-        def slice_sum(m: int):
-            return F.aggregate(
-                F.slice("sq", m * PQ_DSUB + 1, PQ_DSUB),
-                F.lit(0).cast("bigint"),
-                lambda acc, v: acc + v,
-            )
-
-        per_m = joined.select(
-            "vec_id",
-            *[
-                F.struct(
-                    (slice_sum(m) * PQ_K + F.col("cid")).alias("k"),
-                    F.col(f"dq{m}").alias("dq"),
-                ).alias(f"s{m}")
-                for m in range(PQ_M)
-            ],
-        )
-        enc = per_m.groupBy("vec_id").agg(
-            *[F.min(f"s{m}").getField("dq").alias(f"t{m}") for m in range(PQ_M)]
-        )
-        adc = F.col("t0")
-        for m in range(1, PQ_M):
-            adc = adc + F.col(f"t{m}")
-        return enc.select("vec_id", adc.alias("adc_dist"))
+    return _pq_adc_arrow(scan, cb_adc)
 
 
 def q_simsearch_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2410,9 +2258,9 @@ def q_simsearch_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF-PQ layout as a DataFrame composition.
 
     Scale shape: centroids and the ADC table broadcast (≤16 rows each);
-    the only data-volume shuffles are the cell assignment's 64-group
-    partial agg and the cell-membership equi-join; everything after the
-    cell restriction is bounded by the cell size.  All distances are
+    the cell assignment is a narrow Arrow map pass, the only
+    data-volume shuffle is the cell-membership equi-join, and
+    everything after the cell restriction is bounded by the cell size.  All distances are
     exact fixed-point BIGINTs end to end (the decimal assignment for
     cells, the ×1000 grid for PQ), so the composition stays
     oracle-exact."""

@@ -521,11 +521,10 @@ def test_interpolate_no_cartesian(spark, sf_dir):
 
 def test_pq_plan_shape(spark, sf_dir):
     """PQ/ADC: the only nested-loop joins are the 16-row codebook and
-    1-row query broadcasts; the default encode is the Arrow/numpy
-    kernel (no join, no shuffle — round 9); both top-k steps are
-    TakeOrderedAndProject, never a global sort.  The legacy JVM fold
-    keeps its partial-aggregated groupBy shape."""
-    from pandasqlite_spark.functions.similarity import pq_adc_scores, pq_topk
+    1-row query broadcasts; the encode is the Arrow/numpy kernel (no
+    join, no shuffle); both top-k steps are TakeOrderedAndProject,
+    never a global sort."""
+    from pandasqlite_spark.functions.similarity import pq_topk
     from pandasqlite_spark.operators.common import load
 
     emb = load(spark, sf_dir, "embeddings")
@@ -533,8 +532,6 @@ def test_pq_plan_shape(spark, sf_dir):
     assert "CartesianProduct" not in plan  # broadcast NLJ only
     assert "TakeOrderedAndProject" in plan
     assert "MapInPandas" in plan  # Arrow ADC encode — no 16-row crossJoin scan
-    legacy = _plan(pq_adc_scores(emb, arrow=False))
-    assert "partial_min(s0" in legacy  # JVM-fold argmin partial-aggregates
 
 
 def test_containment_no_cartesian(spark, sf_dir):

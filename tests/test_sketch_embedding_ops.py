@@ -195,58 +195,151 @@ def test_ivf_derived_key_consistent(spark, sf_dir):
     assert recalls == sorted(recalls)
 
 
-def test_ivf_assign_arrow_and_jvm_paths_identical(spark):
-    """The two ivf_assign execution paths — the pure-JVM row-wise fold
-    (cells <= IVF_ARROW_CELLS) and the Arrow float64-GEMM path — must
-    produce IDENTICAL assignments: both run the same scaled-long exact
-    dot (DECIMAL(8,6)*10^6 coordinates, |dot| < 2^53) with the same
-    (dot DESC, cid ASC) tie-break.  Forces both paths over the same
-    corpus/centroids by toggling the threshold."""
-    import pandasqlite_spark.functions.similarity as sim
-    from pandasqlite_spark.operators.common import load
+# ---------------------------------------------------------------------------
+# The BIGINT JVM folds the ANN kernels replaced (IVF assignment, PQ ADC
+# encode, PQ exact rerank) live HERE as bit-identity references for the
+# engine's one Arrow/numpy implementation of each.
+# ---------------------------------------------------------------------------
+
+
+def _ref_ivf_assign(emb, centroids, id_col="vec_id"):
+    """Row-wise scaled-long ``zip_with``/``aggregate`` dot against a
+    1-row broadcast of every centroid, then an explicit (dot DESC,
+    cid ASC) argmax fold.  Null terms (null elements, positions past
+    the shorter vector) are filtered before summing, like SQL SUM."""
     from pyspark.sql import functions as F
 
-    emb = load(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = emb.filter(F.col("vec_id") < 6).select(
-        F.col("vec_id").cast("int").alias("cid"), "embedding"
+    from pandasqlite_spark.functions.similarity import (
+        _SCALED_LONG,
+        _collect_scaled_centroids,
     )
-    jvm = {
-        r.vec_id: r.cell for r in sim.ivf_assign(emb, cents).collect()
-    }
-    old = sim.IVF_ARROW_CELLS
-    try:
-        sim.IVF_ARROW_CELLS = 0  # force the Arrow GEMM path
-        arrow = {
-            r.vec_id: r.cell for r in sim.ivf_assign(emb, cents).collect()
-        }
-    finally:
-        sim.IVF_ARROW_CELLS = old
-    assert jvm == arrow
-    assert len(jvm) == emb.count()
+
+    crows = _collect_scaled_centroids(centroids)
+    if not crows:
+        return emb.select(F.col(id_col)).limit(0).select(
+            F.col(id_col), F.lit(None).cast("int").alias("cell")
+        )
+    cents = emb.sparkSession.createDataFrame(
+        [([(int(r["cid"]), r["cs"]) for r in crows],)],
+        "cents: array<struct<cid:int,cs:array<bigint>>>",
+    )
+    scored = (
+        emb.filter(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
+        .crossJoin(F.broadcast(cents))
+        .select(
+            id_col,
+            F.expr(_SCALED_LONG.format(col="embedding")).alias("xl"),
+            "cents",
+        )
+    )
+    best = F.expr(
+        "aggregate("
+        " transform(cents, c -> struct("
+        "   aggregate(filter(zip_with(xl, c.cs, (a, b) -> a * b),"
+        "                    p -> p IS NOT NULL),"
+        "             CAST(0 AS BIGINT), (s, v) -> s + v) AS dot,"
+        "   c.cid AS cid)),"
+        " struct(CAST(-9223372036854775808 AS BIGINT) AS dot,"
+        "        CAST(2147483647 AS INT) AS cid),"
+        " (acc, s) -> CASE WHEN s.dot > acc.dot"
+        "                    OR (s.dot = acc.dot AND s.cid < acc.cid)"
+        "             THEN s ELSE acc END)"
+    )
+    return scored.select(id_col, best.getField("cid").alias("cell"))
 
 
-def test_pq_adc_arrow_and_jvm_paths_identical(spark):
-    """The two PQ ADC-encode paths — the legacy JVM HOF fold
-    (zip_with/slice/aggregate per (vector, centroid) row) and the
-    round-9 NaN-aware numpy kernel over Arrow batches — must produce
-    IDENTICAL (vec_id, adc_dist) tables, including every null-contract
-    edge: null array (whole zip → null), empty array (null vs a
-    non-empty side, 0 where the slice is empty), null ELEMENT (null
-    term → null subspace sum), ragged lengths (zip_with pads the
-    shorter side with null; positions beyond max(len) do not exist),
-    and Spark's null-struct-field-sorts-FIRST min(struct) rule.
-    Covers edges on the scan side, in the codebook (vec_id < PQ_K),
-    and in the query row (PQ_QUERY_ID)."""
-    import random
+def _ref_pq_adc_scores(emb):
+    """PQ encode + ADC sum as a BIGINT fold: one squared-diff zip per
+    (vector, codebook entry) row, PQ_M slice folds, and a
+    ``min(struct(dv·PQ_K+cid, dq))`` groupBy argmin per subspace."""
+    from pyspark.sql import functions as F
 
+    from pandasqlite_spark.functions.similarity import (
+        PQ_DSUB,
+        PQ_K,
+        PQ_M,
+        PQ_QUERY_ID,
+        _pq_scaled,
+        _pq_sub_dist,
+    )
+
+    scaled = _pq_scaled(emb)
+    codebook = scaled.filter(F.col("vec_id") < PQ_K).select(
+        F.col("vec_id").alias("cid"), F.col("arr").alias("carr")
+    )
+    qrow = scaled.filter(F.col("vec_id") == PQ_QUERY_ID).select(
+        F.col("arr").alias("qarr")
+    )
+    cb_adc = codebook.crossJoin(F.broadcast(qrow)).select(
+        "cid",
+        "carr",
+        *[_pq_sub_dist("qarr", "carr", m).alias(f"dq{m}") for m in range(PQ_M)],
+    )
+    sq = F.zip_with("arr", "carr", lambda x, y: (x - y) * (x - y))
+    joined = scaled.crossJoin(F.broadcast(cb_adc)).withColumn("sq", sq)
+
+    def slice_sum(m):
+        return F.aggregate(
+            F.slice("sq", m * PQ_DSUB + 1, PQ_DSUB),
+            F.lit(0).cast("bigint"),
+            lambda acc, v: acc + v,
+        )
+
+    per_m = joined.select(
+        "vec_id",
+        *[
+            F.struct(
+                (slice_sum(m) * PQ_K + F.col("cid")).alias("k"),
+                F.col(f"dq{m}").alias("dq"),
+            ).alias(f"s{m}")
+            for m in range(PQ_M)
+        ],
+    )
+    enc = per_m.groupBy("vec_id").agg(
+        *[F.min(f"s{m}").getField("dq").alias(f"t{m}") for m in range(PQ_M)]
+    )
+    adc = F.col("t0")
+    for m in range(1, PQ_M):
+        adc = adc + F.col(f"t{m}")
+    return enc.select("vec_id", adc.alias("adc_dist"))
+
+
+def _ref_pq_topk(emb):
+    """pq_topk over the reference ADC table, with the exact rerank as
+    an unfiltered BIGINT ``zip_with``/``aggregate`` fold against the
+    broadcast query row."""
+    from pyspark.sql import functions as F
+
+    from pandasqlite_spark.functions.similarity import (
+        PQ_CAND,
+        PQ_QUERY_ID,
+        PQ_TOPK,
+        _pq_scaled,
+    )
+
+    scaled = _pq_scaled(emb)
+    qrow = scaled.filter(F.col("vec_id") == PQ_QUERY_ID).select(
+        F.col("arr").alias("qarr")
+    )
+    cand = _ref_pq_adc_scores(emb).orderBy("adc_dist", "vec_id").limit(PQ_CAND)
+    exact = (
+        scaled.join(F.broadcast(cand), "vec_id")
+        .crossJoin(F.broadcast(qrow))
+        .select(
+            "vec_id",
+            "adc_dist",
+            F.aggregate(
+                F.zip_with("arr", "qarr", lambda x, y: (x - y) * (x - y)),
+                F.lit(0).cast("bigint"),
+                lambda acc, v: acc + v,
+            ).alias("exact_dist"),
+        )
+    )
+    return exact.orderBy("exact_dist", "vec_id").limit(PQ_TOPK)
+
+
+def _vec_frame(spark, rows):
     from pyspark.sql import types as T
-
-    from pandasqlite_spark.functions.similarity import pq_adc_scores
-
-    rng = random.Random(7)
-
-    def mkvec(n=64):
-        return [round(rng.uniform(-1, 1), 4) for _ in range(n)]
 
     schema = T.StructType(
         [
@@ -254,11 +347,107 @@ def test_pq_adc_arrow_and_jvm_paths_identical(spark):
             T.StructField("embedding", T.ArrayType(T.DoubleType())),
         ]
     )
+    return spark.createDataFrame(rows, schema)
+
+
+def test_ivf_assign_arrow_and_jvm_paths_identical(spark):
+    """ivf_assign's Arrow float64 GEMM must produce IDENTICAL
+    assignments to the JVM-fold reference: both run the same
+    scaled-long exact dot (DECIMAL(8,6)*10^6 coordinates, |dot| < 2^53)
+    with the same (dot DESC, cid ASC) tie-break and ``zip_with`` null
+    semantics — a null element or a position past the shorter vector
+    is a skipped term.  Covers null / empty / all-null / short / long
+    vectors on the scan AND the centroid side, at a small and a large
+    cell count, plus real data."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    import pandasqlite_spark.functions.similarity as sim
+    from pandasqlite_spark.operators.common import load
+
+    def check(emb, cents):
+        eng = {r.vec_id: r.cell for r in sim.ivf_assign(emb, cents).collect()}
+        ref = {r.vec_id: r.cell for r in _ref_ivf_assign(emb, cents).collect()}
+        assert eng == ref
+        return eng
+
+    emb = load(spark, "/root/testdata/sf0.001", "embeddings")
+    cents = emb.filter(F.col("vec_id") < 6).select(
+        F.col("vec_id").cast("int").alias("cid"), "embedding"
+    )
+    assert len(check(emb, cents)) == emb.count()
+
+    rng = random.Random(5)
+
+    def mkvec(n=64):
+        return [round(rng.uniform(-1, 1), 4) for _ in range(n)]
+
+    rows = [(i, mkvec()) for i in range(60)]
+    # centroid-side edges (cids < 40): short, null element, null array,
+    # empty, all-null elements (dot 0 with every row), long
+    v = mkvec()
+    v[0] = None
+    v[63] = None
+    rows[2] = (2, mkvec(5))
+    rows[3] = (3, v)
+    rows[4] = (4, None)
+    rows[5] = (5, [])
+    rows[7] = (7, [None] * 64)
+    rows[30] = (30, mkvec(70))
+    # scan-side edges: null array, null elements, short, long,
+    # all-null elements (every dot 0 → smallest cid)
+    v = mkvec()
+    v[1] = None
+    v[62] = None
+    rows[50] = (50, None)
+    rows[51] = (51, v)
+    rows[52] = (52, mkvec(5))
+    rows[53] = (53, mkvec(66))
+    rows[54] = (54, [None] * 64)
+    edge = _vec_frame(spark, rows)
+    for pred in (
+        F.col("vec_id") < 8,
+        (F.col("vec_id") < 40) & (F.col("vec_id") != 30),
+        F.col("vec_id") < 40,
+    ):
+        cents = edge.filter(pred).select(
+            F.col("vec_id").cast("int").alias("cid"), "embedding"
+        )
+        got = check(edge, cents)
+        assert len(got) == 57  # null / empty arrays (4, 5, 50) drop
+        assert got[54] == 0
+    # only null / empty centroids → zero assignments
+    cents = edge.filter(F.col("vec_id").isin(4, 5)).select(
+        F.col("vec_id").cast("int").alias("cid"), "embedding"
+    )
+    assert check(edge, cents) == {}
+
+
+def test_pq_adc_arrow_and_jvm_paths_identical(spark):
+    """The PQ ADC encode — a NaN-aware numpy kernel over Arrow batches
+    — must produce the IDENTICAL (vec_id, adc_dist) table as the JVM
+    HOF-fold reference (zip_with/slice/aggregate per (vector, centroid)
+    row), including every null-contract edge: null array (whole zip →
+    null), empty array (null vs a non-empty side, 0 where the slice is
+    empty), null ELEMENT (null term → null subspace sum), ragged
+    lengths (zip_with pads the shorter side with null; positions beyond
+    max(len) do not exist), and Spark's null-struct-field-sorts-FIRST
+    min(struct) rule.  Covers edges on the scan side, in the codebook
+    (vec_id < PQ_K), and in the query row (PQ_QUERY_ID)."""
+    import random
+
+    from pandasqlite_spark.functions.similarity import pq_adc_scores, pq_topk
+
+    rng = random.Random(7)
+
+    def mkvec(n=64):
+        return [round(rng.uniform(-1, 1), 4) for _ in range(n)]
 
     def both(rows):
-        emb = spark.createDataFrame(rows, schema)
-        a = {r.vec_id: r.adc_dist for r in pq_adc_scores(emb, arrow=True).collect()}
-        j = {r.vec_id: r.adc_dist for r in pq_adc_scores(emb, arrow=False).collect()}
+        emb = _vec_frame(spark, rows)
+        a = {r.vec_id: r.adc_dist for r in pq_adc_scores(emb).collect()}
+        j = {r.vec_id: r.adc_dist for r in _ref_pq_adc_scores(emb).collect()}
         return a, j
 
     base = [(i, mkvec()) for i in range(60)]
@@ -287,44 +476,33 @@ def test_pq_adc_arrow_and_jvm_paths_identical(spark):
         a, j = both(rows2)
         assert a == j and len(a) == 60
 
-    # no query row / no codebook → both paths yield zero rows
+    # no query row / no codebook → both yield zero rows
     a, j = both([(i, mkvec()) for i in range(40)])
     assert a == j == {}
     a, j = both([(i + 100, mkvec()) for i in range(30)] + [(42, mkvec())])
     assert a == j == {}
 
     # real data: full-corpus score table and the final top-k agree
-    import pandasqlite_spark.functions.similarity as sim
     from pandasqlite_spark.operators.common import load
 
     emb = load(spark, "/root/testdata/sf0.001", "embeddings")
-    a = {r.vec_id: r.adc_dist for r in pq_adc_scores(emb, arrow=True).collect()}
-    j = {r.vec_id: r.adc_dist for r in pq_adc_scores(emb, arrow=False).collect()}
+    a = {r.vec_id: r.adc_dist for r in pq_adc_scores(emb).collect()}
+    j = {r.vec_id: r.adc_dist for r in _ref_pq_adc_scores(emb).collect()}
     assert a == j and len(a) == emb.count()
-    old = sim.PQ_ARROW
-    try:
-        sim.PQ_ARROW = True
-        new_top = [tuple(r) for r in sim.pq_topk(emb).collect()]
-        sim.PQ_ARROW = False
-        old_top = [tuple(r) for r in sim.pq_topk(emb).collect()]
-    finally:
-        sim.PQ_ARROW = old
-    assert new_top == old_top
+    new_top = [tuple(r) for r in pq_topk(emb).collect()]
+    assert new_top == [tuple(r) for r in _ref_pq_topk(emb).collect()]
 
 
 def test_pq_exact_rerank_arrow_and_jvm_paths_identical(spark):
-    """Round-10 closure of the q15 family: the exact rerank's two paths
-    — the legacy JVM ``zip_with``/``aggregate`` fold and the
-    ``_pq_exact_arrow`` numpy kernel — must produce IDENTICAL full
-    ``pq_topk`` outputs, including every fold edge: null candidate
-    array (→ null exact_dist), empty array vs a 64-dim query (pad →
-    null), ragged lengths on either side, null ELEMENT inside the
-    zipped range (→ null), query row null / empty / short / MISSING
-    (missing → zero output rows, the empty-broadcast crossJoin
-    contract), and two-empty-arrays → fold init 0."""
+    """The full ``pq_topk`` output — Arrow ADC encode plus the
+    ``_pq_exact_arrow`` numpy rerank — must equal the all-JVM-fold
+    reference, including every fold edge: null candidate array (→ null
+    exact_dist), empty array vs a 64-dim query (pad → null), ragged
+    lengths on either side, null ELEMENT inside the zipped range
+    (→ null), query row null / empty / short / MISSING (missing → zero
+    output rows, the empty-broadcast crossJoin contract), and
+    two-empty-arrays → fold init 0."""
     import random
-
-    from pyspark.sql import types as T
 
     import pandasqlite_spark.functions.similarity as sim
 
@@ -333,17 +511,10 @@ def test_pq_exact_rerank_arrow_and_jvm_paths_identical(spark):
     def mkvec(n=64):
         return [round(rng.uniform(-1, 1), 4) for _ in range(n)]
 
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
     def both(rows):
-        emb = spark.createDataFrame(rows, schema)
-        a = [tuple(r) for r in sim.pq_topk(emb, arrow=True).collect()]
-        j = [tuple(r) for r in sim.pq_topk(emb, arrow=False).collect()]
+        emb = _vec_frame(spark, rows)
+        a = [tuple(r) for r in sim.pq_topk(emb).collect()]
+        j = [tuple(r) for r in _ref_pq_topk(emb).collect()]
         return a, j
 
     base = [(i, mkvec()) for i in range(60)]
@@ -369,7 +540,7 @@ def test_pq_exact_rerank_arrow_and_jvm_paths_identical(spark):
         a, j = both(rows2)
         assert a == j
 
-    # missing query row → zero output rows on both paths
+    # missing query row → zero output rows on both
     a, j = both([(i, mkvec()) for i in range(40)])
     assert a == j == []
 
@@ -377,9 +548,107 @@ def test_pq_exact_rerank_arrow_and_jvm_paths_identical(spark):
     from pandasqlite_spark.operators.common import load
 
     emb = load(spark, "/root/testdata/sf0.001", "embeddings")
-    a = [tuple(r) for r in sim.pq_topk(emb, arrow=True).collect()]
-    j = [tuple(r) for r in sim.pq_topk(emb, arrow=False).collect()]
+    a = [tuple(r) for r in sim.pq_topk(emb).collect()]
+    j = [tuple(r) for r in _ref_pq_topk(emb).collect()]
     assert a == j and len(a) > 0
+
+
+def test_vector_length_guard_raises(spark):
+    """Below the 2^22 element bound a squared difference is at most
+    2^46, so 128 terms sum to at most 2^53 — the last width at which
+    every float64 partial sum is an exact integer.  A 129-element
+    vector at the bound must fail loudly: in the guard itself, as a
+    PQ query, and as an IVF centroid."""
+    import numpy as np
+    import pytest
+    from pyspark.sql import functions as F
+
+    import pandasqlite_spark.functions.similarity as sim
+
+    top = float(1 << 22)
+    sim._check_scaled_bound(np.full((3, 128), top), "128 ok")
+    with pytest.raises(ValueError, match="exactness"):
+        sim._check_scaled_bound(np.full(129, top), "129 terms")
+    with pytest.raises(ValueError, match="exactness"):
+        sim._check_scaled_bound(np.full((2, 129), top), "129 terms")
+
+    # 4194.304 scales to 2^22 on the PQ grid (×1000)
+    rows = [(i, [0.5] * 64) for i in range(50)]
+    rows[sim.PQ_QUERY_ID] = (sim.PQ_QUERY_ID, [4194.304] * 129)
+    with pytest.raises(ValueError, match="129 terms"):
+        sim.pq_topk(_vec_frame(spark, rows))
+
+    # 4.194304 scales to 2^22 on the IVF grid (DECIMAL(8,6)·10⁶)
+    emb = _vec_frame(spark, [(0, [4.194304] * 129), (1, [0.5] * 64)])
+    cents = emb.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").cast("int").alias("cid"), "embedding"
+    )
+    with pytest.raises(ValueError, match="129 terms"):
+        sim.ivf_assign(emb, cents).collect()
+
+
+def test_ann_kernels_run_outside_repo_cwd(spark, tmp_path):
+    """The Arrow kernels' Python workers must import the package when
+    neither the driver's working directory nor PYTHONPATH holds the
+    checkout: ``pq_topk`` and the IVF knn join run in a fresh process
+    started in ``tmp_path`` and return the in-process rows."""
+    import json
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    import pandasqlite_spark.functions.similarity as sim
+    from pandasqlite_spark.operators.common import load
+
+    repo = str(Path(__file__).resolve().parents[1])
+    script = tmp_path / "drive.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import json, sys
+            sys.path.insert(0, {repo!r})
+            from pandasqlite_spark.functions import similarity as sim
+            from pandasqlite_spark.operators.common import load
+            from pandasqlite_spark.session import get_spark
+
+            spark = get_spark("ann_outside_cwd")
+            emb = load(spark, {SF_DIR!r}, "embeddings")
+            out = {{
+                "pq": [list(r) for r in sim.pq_topk(emb).collect()],
+                "ivf": [list(r) for r in
+                        sim.q_simsearch_ivf_knn_join(spark, {SF_DIR!r}).collect()],
+            }}
+            print(json.dumps(out))
+            """
+        )
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p
+        for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo
+    )
+    env["SPARK_GRAFT_CPUS"] = "2"
+    env["PANDASQLITE_SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    emb = load(spark, SF_DIR, "embeddings")
+    want = {
+        "pq": [list(r) for r in sim.pq_topk(emb).collect()],
+        "ivf": [list(r) for r in sim.q_simsearch_ivf_knn_join(spark, SF_DIR).collect()],
+    }
+    assert got == json.loads(json.dumps(want))
+    assert got["pq"] and got["ivf"]
 
 
 def test_scaled_bound_guard_raises():
