@@ -406,7 +406,16 @@ def text_group_spine(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     documents table's primary key at every SF AND in the nulls twin
     (gen_nulls.py keeps key columns non-null; uniqueness is a
     generator invariant) — each elig row matches exactly one skinny
-    row, reproducing the old text-keyed join bit-for-bit."""
+    row, reproducing the old text-keyed join bit-for-bit.
+
+    Session-lifetime note: the checkpoint materializes on the first
+    action over ``skinny`` and its blocks then live in executor storage
+    until the session ends.  Each call pins a fresh one (so does every
+    ``exact_text_groups`` call), repeated calls in a long-lived session
+    accumulate (bounded: ~24 B/doc per call), and localCheckpoint is not
+    fault-tolerant to executor loss.  Acceptable for the
+    one-query-per-invocation driver contract; a resident service should
+    unpersist the checkpoint after materializing its result."""
     elig = docs.filter(F.size(tokens()) >= 3).select("doc_id", "text")
     reps = elig.groupBy("text").agg(
         F.min("doc_id").alias("rep_doc"), F.count(F.lit(1)).alias("n_members")

@@ -1133,45 +1133,65 @@ def _pq_scaled(emb: DataFrame) -> DataFrame:
     return emb.select("vec_id", s.alias("arr"))
 
 
-def _pq_sub_dist(a: str, b: str, m: int):
-    """Squared L2 over the m-th PQ_DSUB-wide slice — a codegen'd fold
-    over an 8-element zip, no explode."""
-    lo = m * PQ_DSUB + 1
-    sq = F.zip_with(
-        F.slice(a, lo, PQ_DSUB), F.slice(b, lo, PQ_DSUB), lambda x, y: (x - y) * (x - y)
+def _pq_operands(scaled: DataFrame):
+    """The PQ driver-side operands in ONE Spark job: the codebook rows
+    (``vec_id < PQ_K``, cid-sorted) and the query arrays (the rows with
+    ``vec_id = PQ_QUERY_ID``; at most one by vec_id uniqueness, none
+    when the query row is missing)."""
+    rows = scaled.filter(
+        (F.col("vec_id") < PQ_K) | (F.col("vec_id") == PQ_QUERY_ID)
+    ).collect()
+    codebook = sorted(
+        (r for r in rows if r["vec_id"] < PQ_K), key=lambda r: r["vec_id"]
     )
-    return F.aggregate(sq, F.lit(0).cast("bigint"), lambda acc, v: acc + v)
+    query = [r["arr"] for r in rows if r["vec_id"] == PQ_QUERY_ID]
+    return codebook, query
 
 
-def _pq_adc_kernel(pdf, X, lens, nulls, op):
-    """Per scan row: the PQ code of each subspace (argmin of the
-    combined ``dv·PQ_K + cid`` key) and the sum of its query-side
-    distances ``dq``.
+def _pq_sub_dists(X, lens, nulls, C, c_lens, c_null):
+    """``(len(X), len(C), PQ_M)`` squared L2 between every row of ``X``
+    and every codebook row of ``C`` over each PQ_DSUB-wide subspace,
+    NaN for SQL NULL — the one implementation of the BIGINT
+    ``aggregate(zip_with(slice(a), slice(b)))`` fold, used on the driver
+    for the query's ADC table and in :func:`_pq_adc_kernel` for the
+    scan.
 
-    Reproduces the fold's ``zip_with`` pad contract: ``zip_with(arr,
-    carr)`` pads the shorter side with null to max(len), so positions
-    below that length are INCLUDED (a null term nulls the subspace
-    sum), positions at or past it do not exist (an empty slice sums to
-    0), and a null array on either side nulls every sum.  The argmin
-    keeps ``min(struct(dv·PQ_K+cid, dq))``'s null-struct-field-sorts-
-    FIRST rule (``min`` over ``struct(NULL,5),struct(3,9)`` picks the
-    NULL) through a −inf fill; among equal keys the smallest ``dq``
-    wins, and on a full tie the first (smallest) cid."""
-    cids, C, c_lens, c_null, dq = op
-    neg_inf = np.float64("-inf")
-    dq_fill = np.where(np.isnan(dq), neg_inf, dq)  # (PQ_K, PQ_M)
-    maxlen = np.maximum(lens[:, None], c_lens[None, :])  # (n, PQ_K)
-    t = np.zeros((len(pdf), PQ_M))  # chosen dq per subspace
+    ``zip_with`` pads the shorter slice with null up to max(len), so a
+    position below that length is INCLUDED (a null or missing term
+    nulls the subspace sum), a position at or past it does not exist
+    (an empty slice sums to 0), and a null array on either side nulls
+    every sum."""
+    maxlen = np.maximum(lens[:, None], c_lens[None, :])  # (n, k)
+    out = np.empty((len(X), len(C), PQ_M))
     for m in range(PQ_M):
         lo = m * PQ_DSUB
         d2 = (
             X[:, None, lo : lo + PQ_DSUB] - C[None, :, lo : lo + PQ_DSUB]
-        ) ** 2  # (n, PQ_K, PQ_DSUB); NaN where either side is null/missing
+        ) ** 2  # (n, k, PQ_DSUB); NaN where either side is null/missing
         include = (lo + np.arange(PQ_DSUB)[None, None, :]) < maxlen[:, :, None]
-        dv = np.where(include, d2, 0.0).sum(axis=2)  # (n, PQ_K)
-        dv[nulls, :] = np.nan
-        dv[:, c_null] = np.nan
-        k = dv * PQ_K + cids[None, :]
+        out[:, :, m] = np.where(include, d2, 0.0).sum(axis=2)
+    out[nulls] = np.nan
+    out[:, c_null] = np.nan
+    return out
+
+
+def _pq_adc_kernel(pdf, X, lens, nulls, op):
+    """Per scan row: the PQ code of each subspace (argmin of the
+    combined ``dv·PQ_K + cid`` key, ``dv`` from :func:`_pq_sub_dists`)
+    and the sum of its query-side distances ``dq``.
+
+    The argmin keeps ``min(struct(dv·PQ_K+cid, dq))``'s
+    null-struct-field-sorts-FIRST rule (``min`` over
+    ``struct(NULL,5),struct(3,9)`` picks the NULL) through a −inf fill;
+    among equal keys the smallest ``dq`` wins, and on a full tie the
+    first (smallest) cid."""
+    cids, C, c_lens, c_null, dq = op
+    neg_inf = np.float64("-inf")
+    dq_fill = np.where(np.isnan(dq), neg_inf, dq)  # (PQ_K, PQ_M)
+    dv = _pq_sub_dists(X, lens, nulls, C, c_lens, c_null)  # (n, PQ_K, PQ_M)
+    t = np.zeros((len(pdf), PQ_M))  # chosen dq per subspace
+    for m in range(PQ_M):
+        k = dv[:, :, m] * PQ_K + cids[None, :]
         kf = np.where(np.isnan(k), neg_inf, k)  # null sorts first
         tie = kf == kf.min(axis=1, keepdims=True)
         pick = np.where(tie, dq_fill[None, :, m], np.inf).argmin(axis=1)
@@ -1180,12 +1200,16 @@ def _pq_adc_kernel(pdf, X, lens, nulls, op):
     return pdf[["vec_id"]].assign(adc_dist=_nullable_int64(t.sum(axis=1)))
 
 
-def _pq_adc_arrow(scan: DataFrame, cb_adc: DataFrame) -> DataFrame:
+def _pq_adc_arrow(
+    scaled: DataFrame, scan_ids: DataFrame | None, codebook, query
+) -> DataFrame:
     """ADC encode as a NaN-aware numpy kernel over Arrow batches
-    (:func:`_pq_adc_kernel`).  The (≤PQ_K)-row ADC table — codebook
-    vectors plus their query-side subspace distances ``dq0..dq7`` — is
-    collected at build time and broadcast; the scan is one narrow Arrow
-    map pass, no join, no shuffle.
+    (:func:`_pq_adc_kernel`), given the operands of :func:`_pq_operands`.
+    The PQ_K×PQ_M query→centroid table ``dq`` is computed on the driver
+    by :func:`_pq_sub_dists` and broadcast with the codebook; the scan
+    is one narrow Arrow map pass, no join, no shuffle.  No codebook or
+    no query row yields zero rows (the crossJoin contract of the
+    reference).
 
     Bit-identical to the BIGINT ``zip_with``/``slice``/``aggregate``
     fold + ``min(struct)`` groupBy kept as ``_ref_pq_adc_scores`` in
@@ -1193,17 +1217,19 @@ def _pq_adc_arrow(scan: DataFrame, cb_adc: DataFrame) -> DataFrame:
     (``_pq_scaled``), and every per-subspace squared-L2 ≤
     8·(2·_SCALED_ABS_MAX)² < 2^53, so float64 arithmetic is exact in
     any order."""
-    crows = cb_adc.collect()
-    if not crows:
-        # empty codebook → the crossJoin formulation yields zero rows
+    # optional candidate restriction (the IVF→PQ two-stage path):
+    # codebook and query always come from the FULL corpus, the ADC scan
+    # touches only the given ids
+    scan = scaled if scan_ids is None else scaled.join(scan_ids, "vec_id")
+    if not codebook or not query:
         return scan.select("vec_id").limit(0).select(
             F.col("vec_id"), F.lit(None).cast("bigint").alias("adc_dist")
         )
-    crows.sort(key=lambda r: r["cid"])
-    cids = np.asarray([r["cid"] for r in crows], dtype=np.int64)
+    cids = np.asarray([r["vec_id"] for r in codebook], dtype=np.int64)
     dim = PQ_M * PQ_DSUB
-    C, c_lens, c_null = _scaled_matrix([r["carr"] for r in crows], "pq codebook", dim)
-    dq, _, _ = _to_matrix([[r[f"dq{m}"] for m in range(PQ_M)] for r in crows], PQ_M)
+    C, c_lens, c_null = _scaled_matrix([r["arr"] for r in codebook], "pq codebook", dim)
+    Q, q_lens, q_null = _scaled_matrix(query[:1], "pq query", dim)
+    dq = _pq_sub_dists(Q, q_lens, q_null, C, c_lens, c_null)[0]  # (PQ_K, PQ_M)
     return _arrow_map(
         scan.select("vec_id", "arr"),
         (cids, C, c_lens, c_null, dq),
@@ -1227,27 +1253,24 @@ def _pq_exact_kernel(pdf, X, lens, nulls, op):
     return pdf[["vec_id", "adc_dist"]].assign(exact_dist=_nullable_int64(s))
 
 
-def _pq_exact_arrow(shortlist: DataFrame, qrow: DataFrame) -> DataFrame:
+def _pq_exact_arrow(shortlist: DataFrame, query) -> DataFrame:
     """The PQ exact rerank as a NaN-aware numpy kernel over Arrow
     batches (:func:`_pq_exact_kernel`).  Input is the PQ_CAND-bounded
-    shortlist (vec_id, adc_dist, arr); the single query row is
-    collected at build time (≤1 row by vec_id uniqueness) and
-    broadcast, and a MISSING query row yields zero output rows (the
-    empty-broadcast crossJoin contract).  The collect is a
-    driver-synchronous job at plan build, acceptable under the
-    one-query-per-invocation driver contract.
+    shortlist (vec_id, adc_dist, arr) and the query arrays of
+    :func:`_pq_operands`; the query is broadcast, and a MISSING query
+    row yields zero output rows (the empty-broadcast crossJoin
+    contract).
 
     Bit-identical to the BIGINT ``zip_with``/``aggregate`` fold kept as
     ``_ref_pq_topk`` in ``tests/test_sketch_embedding_ops.py``: same
     scaled BIGINT grid, and every squared-diff sum has at most
     ``_MAX_TERMS`` terms below the 2^22 coordinate bound (both asserted
     by ``_check_scaled_bound``), so float64 is exact in any order."""
-    qrows = qrow.collect()
-    if not qrows:
+    if not query:
         return shortlist.limit(0).select(
             "vec_id", "adc_dist", F.lit(None).cast("bigint").alias("exact_dist")
         )
-    q, _, q_null = _scaled_matrix([qrows[0]["qarr"]], "pq exact query")
+    q, _, q_null = _scaled_matrix(query[:1], "pq exact query")
     return _arrow_map(
         shortlist.select("vec_id", "adc_dist", "arr"),
         (q[0], bool(q_null[0])),
@@ -1268,49 +1291,41 @@ def pq_topk(emb: DataFrame, scan_ids: DataFrame | None = None) -> DataFrame:
     ADC: the query→centroid distance table replaces the full vector in
     the scan, so candidate scoring reads PQ_M codes (8 bytes) instead
     of 64 floats — the 32× memory-bandwidth lever that makes
-    billion-vector ANN feasible.  :func:`pq_adc_scores` computes the
-    encode argmin and the ADC sum in one numpy kernel over Arrow
-    batches; the exact integer rerank (:func:`_pq_exact_arrow`, the
-    same kernel shape) touches only the PQ_CAND shortlist.
+    billion-vector ANN feasible.
+
+    Plan build runs ONE Spark job: :func:`_pq_operands` collects the
+    codebook and the query row together.  The driver computes the
+    PQ_K×PQ_M ADC table from them (:func:`_pq_sub_dists`), the encode
+    argmin and ADC sum run in one numpy kernel over Arrow batches, and
+    the exact integer rerank (:func:`_pq_exact_arrow`, the same kernel
+    shape, reusing the collected query) touches only the PQ_CAND
+    shortlist.
 
     Scale shape: two narrow Arrow map passes with ≤PQ_K-row and 1-row
     broadcast operands, a broadcast join of the shortlist ids, and
     TakeOrderedAndProject for both top-k steps — no shuffle ever moves
     more than |candidates|."""
     scaled = _pq_scaled(emb)
-    qrow = scaled.filter(F.col("vec_id") == PQ_QUERY_ID).select(F.col("arr").alias("qarr"))
+    codebook, query = _pq_operands(scaled)
     cand = (
-        pq_adc_scores(emb, scan_ids)
+        _pq_adc_arrow(scaled, scan_ids, codebook, query)
         .orderBy("adc_dist", "vec_id")
         .limit(PQ_CAND)
     )
     shortlist = scaled.join(F.broadcast(cand), "vec_id")
-    exact = _pq_exact_arrow(shortlist, qrow)
+    exact = _pq_exact_arrow(shortlist, query)
     return exact.orderBy("exact_dist", "vec_id").limit(PQ_TOPK)
 
 
 def pq_adc_scores(emb: DataFrame, scan_ids: DataFrame | None = None) -> DataFrame:
     """The PQ encode + ADC sum as a standalone (vec_id, adc_dist)
-    table — the stage ``pq_topk`` ranks.  ``test_pq_adc_arrow_and_jvm_
-    paths_identical`` pins it to the JVM-fold reference over the full
-    corpus, including null/empty/ragged edge vectors."""
+    table — the stage ``pq_topk`` ranks.  Plan build runs one Spark job
+    (:func:`_pq_operands`) and computes the ADC table on the driver.
+    ``test_pq_adc_arrow_and_jvm_paths_identical`` pins it to the
+    JVM-fold reference over the full corpus, including
+    null/empty/ragged edge vectors."""
     scaled = _pq_scaled(emb)
-    # optional candidate restriction (the IVF→PQ two-stage path):
-    # codebook and query always come from the FULL corpus, the ADC scan
-    # touches only the given ids
-    scan = scaled if scan_ids is None else scaled.join(scan_ids, "vec_id")
-    codebook = scaled.filter(F.col("vec_id") < PQ_K).select(
-        F.col("vec_id").alias("cid"), F.col("arr").alias("carr")
-    )
-    qrow = scaled.filter(F.col("vec_id") == PQ_QUERY_ID).select(F.col("arr").alias("qarr"))
-    # ADC table first: PQ_K rows × PQ_M query→centroid distances,
-    # computed ONCE, so the scan kernel never re-derives the query side
-    cb_adc = codebook.crossJoin(F.broadcast(qrow)).select(
-        "cid",
-        "carr",
-        *[_pq_sub_dist("qarr", "carr", m).alias(f"dq{m}") for m in range(PQ_M)],
-    )
-    return _pq_adc_arrow(scan, cb_adc)
+    return _pq_adc_arrow(scaled, scan_ids, *_pq_operands(scaled))
 
 
 def q_simsearch_pq(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,12 +22,15 @@ applies).
 
 from __future__ import annotations
 
+import os
+import stat
 import tempfile
 import zipfile
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -43,11 +46,76 @@ TABLES = (
 )
 
 
+# The one session conf the engine sets (``load_events``) that changes
+# what parquet schema inference returns.
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+# The parquet schema catalog: absolute path → (stamp, inferred schema).
+# Metadata only, never data; one entry per path.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _path_stamp(path: str) -> tuple | None:
+    """(name, size, st_mtime_ns) of the file at ``path``, or of every
+    entry below the directory at ``path``; None when ``path`` cannot be
+    stat'ed locally (a URI, a missing path, an unreadable entry)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns),)
+        return tuple(sorted(_dir_entries(path, "")))
+    except (OSError, ValueError):
+        return None
+
+
+def _dir_entries(path: str, rel: str) -> list[tuple]:
+    out = []
+    with os.scandir(path) as it:
+        for e in it:
+            st = e.stat()
+            name = os.path.join(rel, e.name)
+            out.append((name, st.st_size, st.st_mtime_ns))
+            if e.is_dir(follow_symlinks=False):
+                out += _dir_entries(e.path, name)
+    return out
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job on
+    repeat reads.
+
+    The first read of a path infers the schema (one Spark job, as a
+    plain read does) and remembers it; later reads pass it with
+    ``spark.read.schema(s)``, which starts no job.  The entry is keyed
+    by the absolute path and is valid while the path's stamp — size and
+    ``st_mtime_ns`` of the file or of each entry of the directory, plus
+    the value of ``_NANOS_CONF`` — is unchanged; a changed stamp
+    re-infers and replaces the entry.  A path that cannot be stat'ed
+    locally is read without the catalog.  Each call returns a fresh
+    DataFrame, so self-joins do not alias."""
+    key = os.path.abspath(path)
+    # stamped BEFORE inference: a rewrite racing this read leaves an
+    # entry whose stamp no longer matches, never a stale schema
+    files = _path_stamp(key)
+    if files is None:
+        return spark.read.parquet(path)
+    stamp = (files, spark.conf.get(_NANOS_CONF, None))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan — Catalyst handles column pruning + predicate pushdown."""
+    """Parquet scan — Catalyst handles column pruning + predicate
+    pushdown.  Reads through :func:`read_parquet`, so only the first
+    read of each table (and the first after its files change) runs the
+    schema-inference job."""
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def spread_scan(df: DataFrame, id_col: str) -> DataFrame:
@@ -86,9 +154,12 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     TimestampType the downstream operators (``window``,
     ``unix_millis``, ``date_trunc``) expect.  The NTZ→instant hop goes
     through an epoch diff against TIMESTAMP_NTZ '1970-01-01', NOT a
-    cast, so it is session-timezone-independent."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    cast, so it is session-timezone-independent.
+
+    Reads through :func:`read_parquet`, whose catalog entry carries the
+    nanos conf's value in its stamp."""
+    spark.conf.set(_NANOS_CONF, "true")
+    df = read_parquet(spark, f"{sf_dir}/events.parquet")
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -260,8 +260,17 @@ def _ref_pq_adc_scores(emb):
         PQ_M,
         PQ_QUERY_ID,
         _pq_scaled,
-        _pq_sub_dist,
     )
+
+    def _pq_sub_dist(a, b, m):
+        # squared L2 over the m-th PQ_DSUB-wide slice, a BIGINT fold
+        lo = m * PQ_DSUB + 1
+        sq = F.zip_with(
+            F.slice(a, lo, PQ_DSUB),
+            F.slice(b, lo, PQ_DSUB),
+            lambda x, y: (x - y) * (x - y),
+        )
+        return F.aggregate(sq, F.lit(0).cast("bigint"), lambda acc, v: acc + v)
 
     scaled = _pq_scaled(emb)
     codebook = scaled.filter(F.col("vec_id") < PQ_K).select(
@@ -469,8 +478,11 @@ def test_pq_adc_arrow_and_jvm_paths_identical(spark):
     assert a == j and len(a) == 60
     assert a[30] is None and a[31] is None  # null/empty scan → null adc
 
-    # query-side edges: null, empty, short — adc must stay identical
-    for qcase in (None, [], mkvec(20)):
+    # query-side edges: null, empty, short, a null element, wider than
+    # 64 — the driver-side ADC table must match the fold's
+    qnull = mkvec()
+    qnull[10] = None
+    for qcase in (None, [], mkvec(20), qnull, mkvec(70)):
         rows2 = list(base)
         rows2[42] = (42, qcase)
         a, j = both(rows2)
@@ -532,8 +544,11 @@ def test_pq_exact_rerank_arrow_and_jvm_paths_identical(spark):
     a, j = both(rows)
     assert a == j and len(a) > 0
 
-    # query-side edges: null, empty, short — and empty scan arr vs each
-    for qcase in (None, [], mkvec(20)):
+    # query-side edges: null, empty, short, a null element, wider than
+    # 64 — and empty scan arr vs each
+    qnull = mkvec()
+    qnull[10] = None
+    for qcase in (None, [], mkvec(20), qnull, mkvec(70)):
         rows2 = list(base)
         rows2[42] = (42, qcase)
         rows2[25] = (25, [])
