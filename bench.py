@@ -152,9 +152,10 @@ def _queries(sf_dir: str):
         # decode) inside mapInPandas — the Python/Arrow batch-transfer
         # + per-row compute throughput probe
         "q18_multimodal_decode": _decode,
-        # cell-restricted ANN retrieval: numpy centroid assign over
-        # Arrow batches + same-cell candidate join + decimal rerank
-        # (the IVF scale path)
+        # cell-restricted ANN retrieval: one driver collect of the
+        # centroids and queries, then one numpy pass over Arrow batches
+        # that assigns cells and scores each row against its cell's
+        # queries (the IVF scale path)
         "q19_ivf_knn_join": _ivf_knn,
         # baseline JPEG round trip per row (FDCT+Huffman encode →
         # entropy decode+IDCT) inside mapInPandas — the heavier-codec

@@ -157,7 +157,8 @@ def _fold_rows(
 
 # ---------------------------------------------------------------------------
 # Arrow kernel adapter: the one row→matrix conversion of the numpy ANN
-# kernels (IVF assignment, PQ ADC encode, PQ exact rerank)
+# kernels (IVF assignment, IVF candidate scoring, PQ ADC encode, PQ
+# exact rerank)
 # ---------------------------------------------------------------------------
 
 # Largest |scaled coordinate| the Arrow float64 kernels accept, and the
@@ -235,9 +236,9 @@ def _arrow_map(
     of ``scan``, whose column ``arr`` holds the scaled vectors.  Each
     non-empty batch's ``arr`` becomes ``(X, lens, nulls)`` via
     :func:`_scaled_matrix` at the fixed ``width`` of the driver-side
-    ``operand`` (the centroid matrix, codebook or query), which is
-    broadcast once per call.  Scale shape: one narrow map pass — no
-    join, no shuffle."""
+    ``operand`` (the centroid matrix, the centroids and queries, the
+    codebook or the query), which is broadcast once per call.  Scale
+    shape: one narrow map pass — no join, no shuffle."""
     spark = scan.sparkSession
     ensure_package_on_workers(spark)
     bc = spark.sparkContext.broadcast(operand)
@@ -254,15 +255,10 @@ def _arrow_map(
 
 def _collect_scaled_centroids(centroids: DataFrame):
     """Driver-side materialization of the centroid set as scaled-long
-    rows, sorted by cid.
-
-    The centroid set is broadcast-by-contract (≤ the 2²⁰ sizing cap,
-    ≪ executor memory under √N sizing), so collecting it is the same
-    driver cost the broadcast already paid.  Doing it once at build
-    time replaces the per-branch ObjectHashAggregate/collect rebuilds
-    a multi-use plan (knn-join, recall-eval: 5 broadcast branches)
-    re-executed per run (round-9 profile: 2×count + rebuilds ≈ 0.5 s
-    of the 2.4 s q19 wall)."""
+    rows, sorted by cid — one job at plan build.  The centroid set is
+    broadcast-by-contract (≤ the 2²⁰ sizing cap, ≪ executor memory
+    under √N sizing), so collecting it is the same driver cost the
+    broadcast already paid."""
     crows = (
         centroids.filter(
             F.col("embedding").isNotNull() & (F.size("embedding") > 0)
@@ -281,43 +277,58 @@ def _collect_scaled_centroids(centroids: DataFrame):
 _spread_scan = spread_scan
 
 
+def _ivf_cells(X, C):
+    """Row of the cid-sorted, zero-filled centroid matrix ``C`` with the
+    largest dot against each row of ``X`` — the one cell assignment,
+    run on the workers and, for a query batch, on the driver.
+    ``zip_with`` semantics: a null element or a position past the
+    shorter vector is a null term, and the assignment skips null terms
+    — a zero product is the same thing, so both sides zero-fill.  Rows
+    wider than the centroids meet zero columns (or are cut at the
+    matrix width), where every further term would be null.
+    ``np.argmax`` takes the first maximum and the centroid rows are
+    cid-sorted: the (dot DESC, cid ASC) tie-break."""
+    return np.argmax(np.nan_to_num(X) @ C.T, axis=1)
+
+
 def _ivf_kernel(pdf, X, lens, nulls, op):
-    """Argmax-dot cell of each scan row.  ``zip_with`` semantics: a null
-    element or a position past the shorter vector is a null term, and
-    the assignment skips null terms — a zero product is the same thing,
-    so both sides zero-fill (the centroid matrix on the driver).  Rows
-    wider than the centroids are cut at the centroid width, where every
-    further term would be null.  ``np.argmax`` takes the first maximum
-    and the centroid rows are cid-sorted: the (dot DESC, cid ASC)
-    tie-break."""
+    """Cell of each scan row (:func:`_ivf_cells`)."""
     cids, C = op
-    best = np.argmax(np.nan_to_num(X) @ C.T, axis=1)
-    return pdf.iloc[:, :1].assign(cell=cids[best].astype(np.int32))
+    return pdf.iloc[:, :1].assign(cell=cids[_ivf_cells(X, C)].astype(np.int32))
 
 
-def _ivf_assign_arrow(emb: DataFrame, crows, id_col: str) -> DataFrame:
-    """Cell assignment as an exact scaled-long GEMM over Arrow batches.
-    Coordinates quantize to DECIMAL(8,6)·10⁶ longs, so every product
-    ≤ 2.5×10¹¹ and every 64-term partial sum ≤ 1.6×10¹³ < 2⁵³ — float64
-    BLAS computes each dot with ZERO rounding in any summation order,
-    so the scores and the argmax are bit-identical to the DECIMAL
-    oracle and to the row-wise BIGINT ``zip_with``/``aggregate`` fold
-    kept as ``_ref_ivf_assign`` in ``tests/test_sketch_embedding_ops.py``.
-    2×10¹¹ flops at sf10's derived 2048 cells run in seconds where the
-    same math as a posexplode ⋈ groupBy materialized 2×10¹¹ join rows
-    (38 min, round-8 sweep) and an interpreted HOF fold was still
-    ~20 min.
+def ivf_assign(
+    emb: DataFrame, centroids: DataFrame, id_col: str = "vec_id"
+) -> DataFrame:
+    """Assign each vector to its max-dot-product centroid cell with the
+    (dot DESC, cid ASC) tie-break, as one exact scaled-long float64
+    GEMM over Arrow batches (:func:`_ivf_kernel`).  Coordinates
+    quantize to DECIMAL(8,6)·10⁶ longs, so every product ≤ 2.5×10¹¹ and
+    every 64-term sum ≤ 1.6×10¹³ < 2⁵³ — BLAS computes each dot with
+    ZERO rounding in any summation order, so the argmax is
+    bit-identical to the DECIMAL oracle and to the BIGINT
+    ``zip_with``/``aggregate`` fold kept as ``_ref_ivf_assign`` in
+    ``tests/test_sketch_embedding_ops.py``.  The GEMM runs sf10's
+    derived 2048 cells in seconds, where a posexplode ⋈ groupBy
+    materialized 2×10¹¹ rows (38 min, round-8 sweep).
 
-    At 100 TB: the centroid matrix is a broadcast variable (|cells| ≤
-    the 2²⁰ sizing cap; √N sizing keeps it ≪ executor memory at any
-    real corpus — a 10¹²-vector corpus would shard the assignment
-    hierarchically before this is the bottleneck), the fact side is
-    one narrow Arrow map pass — no shuffle, no join."""
+    At 100 TB: the centroid set is collected once at build
+    (:func:`_collect_scaled_centroids`) and broadcast; the fact side is
+    one narrow Arrow map pass — no shuffle, no join — spread across the
+    cluster when the scan under-partitions (:func:`_spread_scan`).
+    Null / empty embeddings get no cell (posexplode emitted no rows for
+    them in the old explode ⋈ SUM form; the nulls-contract sweep pins
+    this)."""
+    emb = _spread_scan(emb, id_col)
+    crows = _collect_scaled_centroids(centroids)
+    if not crows:
+        # zero usable centroids → zero assignments (the old join
+        # formulation's inner-join semantics), never a sentinel cid
+        return emb.select(F.col(id_col)).limit(0).select(
+            F.col(id_col), F.lit(None).cast("int").alias("cell")
+        )
     cids = np.asarray([r["cid"] for r in crows], dtype=np.int64)
     C, _, _ = _scaled_matrix([r["cs"] for r in crows], "ivf centroids")
-    # null / empty embeddings never reached the old explode ⋈ SUM
-    # assignment (posexplode emits no rows) — the nulls-contract sweep
-    # pins this
     src = emb.filter(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     ).select(
@@ -331,52 +342,6 @@ def _ivf_assign_arrow(emb: DataFrame, crows, id_col: str) -> DataFrame:
         "ivf scan",
         C.shape[1],
     )
-
-
-def ivf_assign(
-    emb: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    centroid_rows=None,
-) -> DataFrame:
-    """Assign each vector to its max-dot-product centroid cell.  At
-    100 TB: centroids are broadcast (k rows), the fact side never
-    shuffles for assignment — one narrow pass.
-
-    Round-8 shape: the previous posexplode ⋈ broadcast ⋈ groupBy
-    materialized |corpus|·|cells| grouped rows (2×10¹¹ at sf10's
-    derived 2048 cells — 38 min of BigDecimal aggregation, found live
-    in the sf10 sweep).  The dot products run in SCALED-LONG
-    arithmetic (DECIMAL(8,6)·10⁶ per coordinate ⇒ |dot| < 2⁵³ — exact,
-    order-free, engine-independent) as one float64 GEMM over Arrow
-    batches (:func:`_ivf_assign_arrow`), for every cell count, with the
-    (dot DESC, cid ASC) tie-break.  The pre-compute repartition keeps
-    the pass spread across the cluster when the scan under-partitions
-    (sf10 parquet = 7 input splits).
-
-    Round-9: the centroid set materializes on the driver ONCE at build
-    time (:func:`_collect_scaled_centroids`) — it is the broadcast side
-    by contract, so this is the same bytes the broadcast already moved,
-    and it replaces the per-branch centroid-aggregate rebuilds that a
-    multi-use plan re-executed every run; the partition probe is the
-    ``inputFiles()`` metadata call instead of an RDD conversion
-    (:func:`_spread_scan`).  Callers that assign several tables against
-    the SAME centroid set (knn-join, recall-eval: corpus + query batch)
-    pass the collected rows via ``centroid_rows`` so the centroid job
-    runs once per query, not per assignment."""
-    emb = _spread_scan(emb, id_col)
-    crows = (
-        _collect_scaled_centroids(centroids)
-        if centroid_rows is None
-        else centroid_rows
-    )
-    if not crows:
-        # zero usable centroids → zero assignments (the old join
-        # formulation's inner-join semantics), never a sentinel cid
-        return emb.select(F.col(id_col)).limit(0).select(
-            F.col(id_col), F.lit(None).cast("int").alias("cell")
-        )
-    return _ivf_assign_arrow(emb, crows, id_col)
 
 
 def q_simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -728,48 +693,110 @@ def knn_join_exact(
     )
 
 
-def ivf_candidate_cosine(
-    corpus: DataFrame, queries: DataFrame, cand: DataFrame
+def _ivf_score_kernel(pdf, X, lens, nulls, op):
+    """Exact cosine of each scan row against every query of its own
+    cell.  Per occupied query cell, the member rows' dots with the
+    cell's queries are ONE GEMM over zero-filled operands, and a second
+    GEMM over the non-null masks counts the common terms: a pair with
+    none has a NULL dot (``_DOT_FOLD``'s SUM semantics).  Every dot is
+    an integer below 2^53, so ``(dot/1e12) / (sqrt(nn)·sqrt(nq))`` is
+    bit-identical to the JVM expression, including Spark's non-ANSI
+    division (NULL for a NULL operand or a zero divisor)."""
+    cids, C, qids, qcells, Q, nq = op
+    known = ~np.isnan(X)
+    Xz = np.where(known, X, 0.0)
+    cell = cids[_ivf_cells(Xz, C)]
+    ids = pdf["vec_id"].to_numpy()
+    nn = pdf["nn"].to_numpy(np.float64)
+    qi, ri, vals = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
+    for c in np.unique(qcells):
+        rows = np.flatnonzero(cell == c)
+        if rows.size:
+            qs = np.flatnonzero(qcells == c)
+            dot = Xz[rows] @ np.nan_to_num(Q[qs]).T / 1e12
+            common = known[rows].astype(np.float64) @ ~np.isnan(Q[qs]).T
+            div = np.sqrt(nn[rows])[:, None] * np.sqrt(nq[qs])[None, :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = np.where((common > 0) & (div != 0), dot / div, np.nan)
+            qi.append(np.tile(qs, rows.size))
+            ri.append(np.repeat(rows, qs.size))
+            vals.append(cos.ravel())
+    cos = np.concatenate(vals)
+    null = np.isnan(cos)
+    return pd.DataFrame(
+        {
+            "query_id": qids[np.concatenate(qi)],
+            "vec_id": ids[np.concatenate(ri)],
+            "cosine": pd.arrays.FloatingArray(np.where(null, 0.0, cos), null),
+        }
+    )
+
+
+def ivf_candidate_scores(
+    corpus: DataFrame, queries: DataFrame, centroids: DataFrame
 ) -> DataFrame:
-    """Exact decimal cosine over an IVF CANDIDATE set: ``corpus``
-    (vec_id, embedding) × ``queries`` (query_id, qv) restricted to the
-    (query_id, vec_id) pairs in ``cand`` → (query_id, vec_id, cosine).
+    """Exact cosine of every IVF candidate pair: each ``corpus``
+    (vec_id, embedding) row against each ``queries`` (query_id, qv) row
+    assigned to the same ``centroids`` (cid, embedding) cell →
+    (query_id, vec_id, cosine).  The FAISS IVF-Flat scan: every corpus
+    vector is scored against its own cell's queries in one pass.
 
-    The corpus is pruned to the distinct candidate ids with a broadcast
-    LEFT SEMI join BEFORE the per-dimension explode, so the 64×-row
-    blowup, the norm aggregation, and the dot-product join all scale
-    with |candidates| BY CONSTRUCTION — not with |corpus|, and not
-    contingent on AQE choosing to broadcast (round-5 verdict #6).  The
-    distinct candidate-id set is tiny (≤ queries × probed-cell
-    population), so the semi-join broadcasts at any corpus scale.
+    Build: ONE Spark job collects the scaled-long centroid and query
+    rows together; the driver builds the cid-sorted centroid matrix
+    and the query matrix (both through the exactness guard), the query
+    cells (:func:`_ivf_cells`, the corpus side's argmax) and the query
+    norms.  Execution: one narrow Arrow pass (:func:`_ivf_score_kernel`)
+    over the spread corpus, carrying each row's JVM ``_SUMSQ_FOLD``
+    norm, which covers the whole row outside the kernel's term guard.
+    Null/empty vectors and null ids drop on both sides; no usable
+    centroid or query → no pairs.  Precondition: ``vec_id`` is unique.
 
-    Round-9 shape (guide §2.4): after the prune, each candidate row
-    carries its scaled-long vector + norm (:func:`_fold_rows`) through
-    ONE equi-join onto the (query_id, vec_id) pair set, the query
-    vectors broadcast, and the dot folds row-locally — the 64×-row
-    posexplode, the position join, and the ``groupBy(query_id,
-    vec_id)`` partial-agg exchange are gone (sf0.1 q19 A/B: 1.71 →
-    1.01 s).  ``cand`` pairs must be unique — true of every caller
-    (one cell per vector) and already an implicit precondition of the
-    old shape, whose SUM would have double-counted duplicated pairs."""
-    cand_vecs = corpus.join(
-        F.broadcast(cand.select("vec_id").distinct()), "vec_id", "left_semi"
+    At 100 TB: the centroids and the query batch are broadcast (both
+    bounded by contract), the corpus is read in one narrow pass, and
+    candidate pairs are never shuffled before scoring — the only data
+    shuffle left is the caller's top-k window over the scored pairs."""
+    schema = "query_id long, vec_id long, cosine double"
+
+    def usable(arr: str) -> Column:
+        return F.col(arr).isNotNull() & (F.size(arr) > 0)
+
+    def scaled(arr: str) -> Column:
+        return F.expr(_SCALED_LONG.format(col=arr)).alias("arr")
+
+    cent_rows = centroids.filter(usable("embedding")).select(
+        F.lit(False).alias("is_q"),
+        F.col("cid").cast("long").alias("id"),
+        scaled("embedding"),
     )
-    c = _fold_rows(cand_vecs)
-    q = (
-        queries.filter(F.col("qv").isNotNull() & (F.size("qv") > 0))
-        .select("query_id", F.expr(_SCALED_LONG.format(col="qv")).alias("qs"))
-        .select("query_id", "qs", F.expr(_SUMSQ_FOLD.format(col="qs")).alias("nq"))
+    query_rows = queries.filter(
+        usable("qv") & F.col("query_id").isNotNull()
+    ).select(F.lit(True).alias("is_q"), F.col("query_id").alias("id"), scaled("qv"))
+    rows = cent_rows.unionByName(query_rows).collect()
+    crows = sorted((r for r in rows if not r["is_q"]), key=lambda r: r["id"])
+    qrows = [r for r in rows if r["is_q"]]
+    if not crows or not qrows:
+        return corpus.sparkSession.createDataFrame([], schema)
+    width = max(len(r["arr"]) for r in rows)
+    C, _, _ = _scaled_matrix([r["arr"] for r in crows], "ivf centroids", width)
+    Q, _, _ = _scaled_matrix([r["arr"] for r in qrows], "ivf queries", width)
+    C = np.nan_to_num(C)
+    cids = np.asarray([r["id"] for r in crows], dtype=np.int64)
+    qids = np.asarray([r["id"] for r in qrows], dtype=np.int64)
+    # SUM semantics: null terms skipped, NULL when every term is null
+    nq = np.where(np.isnan(Q).all(1), np.nan, np.nansum(Q * Q, axis=1) / 1e12)
+    scan = (
+        spread_scan(corpus, "vec_id")
+        .filter(usable("embedding") & F.col("vec_id").isNotNull())
+        .select("vec_id", scaled("embedding"))
+        .select("vec_id", "arr", F.expr(_SUMSQ_FOLD.format(col="arr")).alias("nn"))
     )
-    dot = F.expr(_DOT_FOLD.format(a="xs", b="qs"))
-    return (
-        cand.join(c, "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            (dot / (F.sqrt("nn") * F.sqrt("nq"))).alias("cosine"),
-        )
+    return _arrow_map(
+        scan,
+        (cids, C, qids, cids[_ivf_cells(Q, C)], Q, nq),
+        _ivf_score_kernel,
+        schema,
+        "ivf scan",
+        width,
     )
 
 
@@ -778,13 +805,14 @@ def q_simsearch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force, per query.  Every vector-search deployment runs this
     harness before trusting an index; here it is itself a distributed,
     oracle-checked operator: exact top-5 via the batched k-NN join,
-    approximate top-5 via cell-restricted rerank (stand-in centroids as
-    in ``simsearch-ivf``), recall = |approx ∩ exact| / 5.
+    approximate top-5 via the IVF candidate scores of
+    ``simsearch-ivf-knn-join`` (stand-in centroids as in
+    ``simsearch-ivf``), recall = |approx ∩ exact| / 5.
 
-    Scale shape: reuses the knn-join's one-shuffle dot reduction; the
-    approximate side restricts the dot computation to same-cell
-    candidate pairs FIRST (the IVF point), so its cost is the
-    candidate fraction of brute force; the recall join runs over
+    Scale shape: the approximate side scores each corpus row against
+    its own cell's queries only (:func:`ivf_candidate_scores`: one
+    narrow pass, no candidate-pair join, no checkpoint), so its cost is
+    the candidate fraction of brute force; the recall join runs over
     2·Q·k tiny rows."""
     from pyspark.sql import Window as W
 
@@ -798,22 +826,7 @@ def q_simsearch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = emb.filter(F.col("vec_id") < N_CELLS).select(
         F.col("vec_id").cast("int").alias("cid"), "embedding"
     )
-    # shared-centroid collect + checkpointed candidate pairs: same
-    # build-once/reuse shape as q_simsearch_ivf_knn_join (the corpus
-    # assignment otherwise re-executes for every candidate consumer)
-    crows = _collect_scaled_centroids(cents)
-    a_corpus = ivf_assign(corpus, cents, centroid_rows=crows)
-    a_q = ivf_assign(
-        queries.select(F.col("query_id").alias("vec_id"), F.col("qv").alias("embedding")),
-        cents,
-        centroid_rows=crows,
-    ).select(F.col("vec_id").alias("query_id"), "cell")
-    cand = (
-        a_q.join(a_corpus.select("vec_id", "cell"), "cell")
-        .select("query_id", "vec_id")
-        .localCheckpoint(eager=False)
-    )
-    s = ivf_candidate_cosine(corpus, queries, cand)
+    s = ivf_candidate_scores(corpus, queries, cents)
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
     approx = (
         s.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
@@ -1055,20 +1068,21 @@ def q_simsearch_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_simsearch_ivf_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-accelerated batch ANN retrieval — the SCALE form of
-    ``simsearch-knn-join``: both the query batch and the corpus are
-    assigned to coarse cells (broadcast centroids, one narrow pass
-    each), candidates are the same-cell equi-join (shuffle moves
-    (query, candidate) id pairs — ~1/N_CELLS of brute force), and the
-    exact decimal cosine reranks candidates only.  Emits the
+    ``simsearch-knn-join``: the query batch and the corpus are assigned
+    to coarse cells, and each corpus row's exact cosine is computed
+    against its own cell's queries only (~1/N_CELLS of brute force),
+    all in :func:`ivf_candidate_scores` — one driver collect of the
+    centroids and queries at build, then one narrow Arrow pass over
+    the corpus; no same-cell pair join, no checkpoint.  Emits the
     production retrieval result (query_id, rank, vec_id, cosine);
     `simsearch-recall-eval` prices exactly this operator's recall
     against brute force, and `simsearch-nprobe-curve` its
     candidate-count/recall tradeoff.
 
-    At 100 TB: assignment never shuffles the corpus (centroids
-    broadcast), the candidate join is an equi-join on cell, the
-    rerank is bounded by the cell population — the FAISS IVF-Flat
-    layout as relational algebra."""
+    At 100 TB: the centroids and the query batch are broadcast, the
+    corpus is read once without a shuffle, and the only data shuffle
+    is the top-k window over the scored candidates — the FAISS
+    IVF-Flat scan."""
     from pyspark.sql import Window as W
 
     emb = load(spark, sf_dir, "embeddings")
@@ -1080,26 +1094,7 @@ def q_simsearch_ivf_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = emb.filter(F.col("vec_id") < N_CELLS).select(
         F.col("vec_id").cast("int").alias("cid"), "embedding"
     )
-    # one centroid job for both assignments (corpus + query batch)
-    crows = _collect_scaled_centroids(cents)
-    a_corpus = ivf_assign(corpus, cents, centroid_rows=crows)
-    a_q = ivf_assign(
-        queries.select(F.col("query_id").alias("vec_id"), F.col("qv").alias("embedding")),
-        cents,
-        centroid_rows=crows,
-    ).select(F.col("vec_id").alias("query_id"), "cell")
-    # the candidate pair table feeds BOTH the corpus prune and the dot
-    # equi-join inside ivf_candidate_cosine; without the checkpoint the
-    # whole corpus-assignment pass executes once per consumer.  Lazy
-    # localCheckpoint = compute once, reuse the (id, id) pairs — the
-    # "decide with small rows, attach once" shape; the persisted table
-    # is two longs per candidate, ≪ the vectors it saves re-scoring.
-    cand = (
-        a_q.join(a_corpus.select("vec_id", "cell"), "cell")
-        .select("query_id", "vec_id")
-        .localCheckpoint(eager=False)
-    )
-    s = ivf_candidate_cosine(corpus, queries, cand)
+    s = ivf_candidate_scores(corpus, queries, cents)
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
     return (
         s.withColumn("rank", F.row_number().over(w))

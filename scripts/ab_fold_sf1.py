@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Round-9 fold-rewrite A/B at a given SF: the NEW row-local scaled-long
-fold implementations (cosine_topk_exact / knn_join_exact /
-ivf_candidate_cosine at HEAD) against the pre-round-9 posexplode ⋈ SUM
+fold implementations (cosine_topk_exact / knn_join_exact / the IVF
+knn join at HEAD) against the pre-round-9 posexplode ⋈ SUM
 references (kept verbatim in tests/test_sketch_embedding_ops.py as the
 bit-identity fixtures).  Interleaved noop-sink runs, shared JVM.
 

@@ -55,14 +55,13 @@ NESTED_LOOP_OK = {
     "simsearch-nprobe-curve",  # 1-row recall/candidate-count summary broadcasts
     "simsearch-ivf-derived",  # same summary broadcasts, derived-cells twin
     "simsearch-nprobe-perturbed",  # same summary broadcasts, perturbed-corpus twin
-    "simsearch-ivf-knn-join",  # 1-row broadcast centroid-ARRAY carrier (ivf_assign's
-    "simsearch-recall-eval",   # row-wise fold; round 8 — replaces the explode⋈groupBy)
     "simsearch-knn-join",  # 8-row broadcast query batch × corpus fold (round-9
-    "rank-mrr-eval",       # knn_join_exact rewrite: the query side is the
-    "rank-ndcg-eval",      # broadcast side BY CONTRACT — ANN batches are
-    # thousands of rows, the corpus is the 100 TB side; the nested-loop
-    # product replaces the former posexplode ⋈ pos-join ⋈ groupBy pair
-    # of exchanges and computes the same |corpus|×|queries| dot folds)
+    "simsearch-recall-eval",  # knn_join_exact rewrite: the query side is the
+    "rank-mrr-eval",       # broadcast side BY CONTRACT — ANN batches are
+    "rank-ndcg-eval",      # thousands of rows, the corpus is the 100 TB side;
+    # the nested-loop product replaces the former posexplode ⋈ pos-join ⋈
+    # groupBy pair of exchanges and computes the same |corpus|×|queries|
+    # dot folds; recall-eval's exact side is that knn_join_exact)
     "dedup-threshold-curve",  # 4-row τ fan-out broadcast over the collapsed pair set
     "mixture-epoch-schedule",  # 1-row corpus-total + weight-normalizer broadcasts
     "simsearch-hamming-topk",  # 1-row broadcast query signature (like simsearch-topk)

@@ -1,6 +1,7 @@
 """The parquet schema catalog behind ``operators.common.load``: repeat
 reads start no schema-inference job, a rewritten table is re-inferred,
-and the PQ plan build collects its operands in one job."""
+and the PQ and IVF knn-join plan builds collect their operands in one
+job each."""
 
 from __future__ import annotations
 
@@ -72,3 +73,10 @@ def test_repeat_load_and_pq_build_job_counts(spark, sf_dir, tmp_path):
     emb = load(spark, sf_dir, "embeddings")  # the schema is known from here on
     assert _jobs(spark, lambda: pq_topk(load(spark, sf_dir, "embeddings"))) == 1
     assert _jobs(spark, lambda: pq_topk(emb)) == 1
+
+
+def test_ivf_knn_join_build_job_count(spark, sf_dir):
+    from pandasqlite_spark.functions.similarity import q_simsearch_ivf_knn_join
+
+    load(spark, sf_dir, "embeddings")  # the schema is known from here on
+    assert _jobs(spark, lambda: q_simsearch_ivf_knn_join(spark, sf_dir)) == 1

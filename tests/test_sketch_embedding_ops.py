@@ -858,6 +858,24 @@ def _ref_ivf_candidate_cosine(corpus, queries, cand):
     )
 
 
+def _ref_ivf_candidate_scores(corpus, queries, centroids):
+    """Reference composition of IVF candidate scoring: the JVM-fold
+    assignment of both sides, the same-cell (query_id, vec_id) pair
+    join, then the explode cosine over those pairs."""
+    from pyspark.sql import functions as F
+
+    a_q = _ref_ivf_assign(
+        queries.select(
+            F.col("query_id").alias("vec_id"), F.col("qv").alias("embedding")
+        ),
+        centroids,
+    ).select(F.col("vec_id").alias("query_id"), "cell")
+    cand = a_q.join(_ref_ivf_assign(corpus, centroids), "cell").select(
+        "query_id", "vec_id"
+    )
+    return _ref_ivf_candidate_cosine(corpus, queries, cand)
+
+
 def _edge_embeddings(spark):
     """60 clean 64-dim vectors + every null-contract edge the explode
     formulations defined: null array, empty array, null element at both
@@ -893,12 +911,18 @@ def test_cosine_fold_matches_explode_reference(spark):
     the explode ⋈ SUM formulations they replaced — values AND row sets,
     on real data and on every null edge (null/empty arrays drop the
     row; null elements drop the term; all-null vectors surface a NULL
-    cosine; null/empty QUERY vectors drop the query)."""
+    cosine; null/empty QUERY vectors drop the query).  The fused IVF
+    candidate scoring matches the reference assignment ⋈ same-cell
+    pairs ⋈ explode cosine composition on the same inputs, plus ragged
+    widths and all-zero vectors (zero divisor → NULL cosine)."""
+    import random
+
     from pyspark.sql import functions as F
 
     from pandasqlite_spark.functions.similarity import (
+        N_CELLS,
         cosine_topk_exact,
-        ivf_candidate_cosine,
+        ivf_candidate_scores,
         knn_join_exact,
     )
     from pandasqlite_spark.operators.common import load
@@ -907,6 +931,14 @@ def test_cosine_fold_matches_explode_reference(spark):
         return sorted(
             tuple(r) for r in df.collect()
         )
+
+    def check_ivf(emb, queries, corpus):
+        cents = emb.filter(F.col("vec_id") < N_CELLS).select(
+            F.col("vec_id").cast("int").alias("cid"), "embedding"
+        )
+        got = rows_of(ivf_candidate_scores(corpus, queries, cents))
+        assert got == rows_of(_ref_ivf_candidate_scores(corpus, queries, cents))
+        return got
 
     for emb in (
         load(spark, "/root/testdata/sf0.001", "embeddings"),
@@ -942,14 +974,28 @@ def test_cosine_fold_matches_explode_reference(spark):
             assert rows_of(knn_join_exact(corpus_s, queries, k=5)) == rows_of(
                 _ref_knn_join_exact(corpus_s, queries, k=5)
             )
+            assert check_ivf(emb, queries, corpus_s)
 
-            # candidate-restricted cosine: synthetic unique pair set
-            # keyed off id arithmetic so edge ids appear in pairs
-            cand = (
-                queries.select("query_id")
-                .crossJoin(corpus_s.select("vec_id"))
-                .filter((F.col("vec_id") + F.col("query_id")) % 3 == 0)
-            )
-            assert rows_of(ivf_candidate_cosine(corpus_s, queries, cand)) == rows_of(
-                _ref_ivf_candidate_cosine(corpus_s, queries, cand)
-            )
+    # ragged widths and zero vectors against 64-wide centroids (ids
+    # < 8): the copied centroid slices steer each pair into one cell
+    rng = random.Random(17)
+
+    def mkvec(n=64):
+        return [round(rng.uniform(-1, 1), 4) for _ in range(n)]
+
+    rows = [(i, mkvec()) for i in range(60)]
+    c3, c4 = rows[3][1], rows[4][1]
+    rows[9] = (9, c3[:40])  # query narrower than the centroids
+    rows[10] = (10, [0.0] * 64)  # all-zero query
+    rows[11] = (11, c4)
+    rows[20] = (20, c4 + mkvec(16))  # corpus row wider than the centroids
+    rows[21] = (21, [0.0] * 64)  # all-zero corpus row
+    rows[22] = (22, [None] * 40 + c3[40:])  # no term in common with 9
+    emb = _vec_frame(spark, rows)
+    queries = emb.filter(F.col("vec_id").between(8, 12)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    got = check_ivf(emb, queries, emb.filter(F.col("vec_id") > 12))
+    assert (10, 21, None) in got  # zero divisor → NULL
+    assert (9, 22, None) in got  # no common term → NULL dot
+    assert any(q == 11 and v == 20 and c is not None for q, v, c in got)
