@@ -20,10 +20,21 @@ Everything here derives from public knowledge only: the Apache Spark /
 PySpark API, the Apache-2.0 reference repo, and published papers.
 """
 
-from pandasqlite_spark.session import get_spark
-from pandasqlite_spark.core.ingest import ingest
-from pandasqlite_spark.core.text2sql import text2sql
-from pandasqlite_spark.core.llm import FakeLLM, ReplayLLM, sanity_check
+import sys
+
+from pyspark import cloudpickle
+
+# Spark pickles each function or class it ships to Python workers (UDF
+# bodies, mapInPandas/mapInArrow kernels, UDTFs, stateful processors,
+# data sources).  By value, the pickled command carries the engine code
+# itself, so workers never import this package: any session, any working
+# directory, local or cluster mode.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+from pandasqlite_spark.session import get_spark  # noqa: E402
+from pandasqlite_spark.core.ingest import ingest  # noqa: E402
+from pandasqlite_spark.core.text2sql import text2sql  # noqa: E402
+from pandasqlite_spark.core.llm import FakeLLM, ReplayLLM, sanity_check  # noqa: E402
 
 __all__ = ["get_spark", "ingest", "text2sql", "FakeLLM", "ReplayLLM", "sanity_check"]
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from pandasqlite_spark.core.dialect import (
@@ -104,7 +105,9 @@ def run_with_repair(
     appended, up to ``max_repairs`` times.  (Standard Text-to-SQL
     practice; the analyzer error names missing columns/tables, which
     is exactly the feedback an LLM can act on.)  Raises the last
-    analysis error if every attempt fails."""
+    analysis error if every attempt fails.  Only an
+    ``AnalysisException`` (``ParseException`` included) is repaired;
+    any other failure, such as a JVM or Py4J error, is raised at once."""
     q = question
     last_exc: Exception | None = None
     for _ in range(max_repairs + 1):
@@ -113,7 +116,7 @@ def run_with_repair(
             df = spark.sql(sql)
             df.schema  # force analysis now, not at first action
             return df
-        except Exception as exc:  # AnalysisException and parse errors
+        except AnalysisException as exc:
             last_exc = exc
             # deterministic repair first: SQLite permits bare
             # non-grouped expressions beside aggregates (arbitrary-row
@@ -131,7 +134,7 @@ def run_with_repair(
                         df = spark.sql(fixed)
                         df.schema
                         return df
-                    except Exception as exc2:
+                    except AnalysisException as exc2:
                         last_exc = exc2
             q = (
                 f"{question}\n\n[PREVIOUS ATTEMPT]\n{sql}\n\n"

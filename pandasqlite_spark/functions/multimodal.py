@@ -30,6 +30,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pandasqlite_spark.functions.imaging import (
+    decode_jpeg,
+    decode_png,
+    decode_wav,
+    decode_y4m,
+    encode_jpeg,
+    encode_png,
+    encode_wav,
+    encode_y4m,
+    resize_area,
+)
 from pandasqlite_spark.operators.common import load
 
 FEATURE_SCHEMA = "doc_id bigint, n_bytes int, byte_mean double, byte_min int, byte_max int"
@@ -46,10 +57,6 @@ def extract_features(with_payload: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.  The
     batch shape (one pandas frame per partition chunk) is exactly what a
     real image decoder would receive; only `_fake_decode` would change."""
-
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(with_payload.sparkSession)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -109,13 +116,11 @@ def decode_image(payload: bytes):
     container without it keeps the loud ``NotImplementedError``
     contract.  The numpy codec stays primary (deterministic,
     oracle-backed); PIL is the breadth escape hatch."""
-    from pandasqlite_spark.functions import imaging
-
     try:
         if payload[:8] == b"\x89PNG\r\n\x1a\n":
-            return imaging.decode_png(payload)
+            return decode_png(payload)
         if payload[:2] == b"\xff\xd8":
-            return imaging.decode_jpeg(payload)
+            return decode_jpeg(payload)
     except NotImplementedError:
         img = _pil_decode(payload)
         if img is not None:
@@ -131,10 +136,8 @@ def decode_audio(payload: bytes):
     """REAL audio decoder: RIFF/WAV 16-bit PCM via the stdlib ``wave``
     module — returns (sample_rate, channels, int16 numpy samples).
     Compressed codecs (mp3/flac) still need soundfile/librosa."""
-    from pandasqlite_spark.functions import imaging
-
     if payload[:4] == b"RIFF":
-        return imaging.decode_wav(payload)
+        return decode_wav(payload)
     raise NotImplementedError("only WAV decodable without native audio libs")
 
 
@@ -143,10 +146,8 @@ def sample_video_frames(payload: bytes, every_n: int = 2):
     interchange format): parse the container, return every ``every_n``-th
     luma frame as (frame_idx, (H,W) uint8).  Codec'd containers
     (mp4/webm) still need pyav/ffmpeg."""
-    from pandasqlite_spark.functions import imaging
-
     if payload[:9] == b"YUV4MPEG2":
-        _, _, frames = imaging.decode_y4m(payload)
+        _, _, frames = decode_y4m(payload)
         return [(i, frames[i]) for i in range(0, len(frames), every_n)]
     raise NotImplementedError("only y4m parseable without native video libs")
 
@@ -157,12 +158,10 @@ def resize_image(payload: bytes, factor: int = 2) -> bytes:
     PIL-based thumbnailer has.  Area pooling (floor block means) keeps
     every output pixel SQL-reconstructable, which is what lets the
     resize keys carry full value oracles."""
-    from pandasqlite_spark.functions import imaging
-
     img = decode_image(payload)
     if img.ndim == 2:
         img = img[..., None]
-    return imaging.encode_png(imaging.resize_area(img, factor))
+    return encode_png(resize_area(img, factor))
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,10 +179,6 @@ def sample_frames(with_payload: DataFrame, frame_bytes: int = 4) -> DataFrame:
     ``mapInPandas``, no driver involvement, output partitioning
     inherited from the input — is exactly what a real pyav sampler
     produces; only the chunker would change."""
-
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(with_payload.sparkSession)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -224,10 +219,6 @@ def window_audio(
     tail window is short, never dropped — exactly the contract an
     STFT/MFCC front end needs.  Only the per-window transform (here:
     hex passthrough) would change with a real audio lib."""
-
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(with_payload.sparkSession)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -334,9 +325,6 @@ def webdataset_roundtrip(with_payload: DataFrame, out_dir: str) -> DataFrame:
 def q_multimodal_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     docs = load(spark, sf_dir, "documents")
     out_dir = tempfile.mkdtemp(prefix="pqs_wds_")
     return webdataset_roundtrip(attach_payload(docs), out_dir)
@@ -481,10 +469,6 @@ def resize_images(with_payload: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(with_payload.sparkSession)
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, rs, cs, px = [], [], [], []
@@ -579,14 +563,8 @@ def attach_png_payload(docs: DataFrame) -> DataFrame:
     ``mapInPandas`` — the binary column any downstream decode sees."""
     import numpy as np
 
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(docs.sparkSession)
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-
-        from pandasqlite_spark.functions.imaging import encode_png
 
         for pdf in batches:
             pngs = [
@@ -616,9 +594,6 @@ def decode_images(with_png: DataFrame) -> DataFrame:
     unfilter (:func:`decode_image`), then pixel stats are emitted.
     Same ``mapInPandas`` shape as :func:`extract_features`, but the
     decoder is no longer a stand-in."""
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(with_png.sparkSession)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -671,9 +646,6 @@ def resize_images_real(with_png: DataFrame) -> DataFrame:
     and two real decodes per row; the emitted 2×2 grid satisfies the
     same floor-block-mean oracle as the stand-in ``multimodal-resize``
     key, proving the real path computes what the contract says."""
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(with_png.sparkSession)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -720,14 +692,8 @@ def decode_audio_stats(docs: DataFrame) -> DataFrame:
     (:func:`decode_audio`) → integer sample stats."""
     import numpy as np
 
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(docs.sparkSession)
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-
-        from pandasqlite_spark.functions.imaging import encode_wav
 
         for pdf in batches:
             ids, rates, ns, sums, mins, maxs = [], [], [], [], [], []
@@ -795,14 +761,8 @@ def decode_video_stats(docs: DataFrame, every_n: int = 2) -> DataFrame:
     has, minus only the codec."""
     import numpy as np
 
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(docs.sparkSession)
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-
-        from pandasqlite_spark.functions.imaging import encode_y4m
 
         for pdf in batches:
             ids, idxs, sums = [], [], []
@@ -1044,14 +1004,8 @@ def attach_jpeg_payload(docs: DataFrame) -> DataFrame:
     representable subspace)."""
     import numpy as np
 
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(docs.sparkSession)
-
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-
-        from pandasqlite_spark.functions.imaging import encode_jpeg
 
         for pdf in batches:
             jpgs = [
@@ -1076,9 +1030,6 @@ def decode_jpegs(with_jpg: DataFrame) -> DataFrame:
     parse → Huffman entropy decode with restart resync → dequant →
     IDCT → pixel stats.  Same ``mapInPandas`` shape as
     :func:`decode_images`; only the codec differs."""
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(with_jpg.sparkSession)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

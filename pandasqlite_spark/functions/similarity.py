@@ -22,11 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pandasqlite_spark.operators.common import (
-    ensure_package_on_workers,
-    load,
-    spread_scan,
-)
+from pandasqlite_spark.operators.common import load, spread_scan
 
 _DEC = "decimal(8,6)"
 
@@ -240,7 +236,6 @@ def _arrow_map(
     codebook or the query), which is broadcast once per call.  Scale
     shape: one narrow map pass — no join, no shuffle."""
     spark = scan.sparkSession
-    ensure_package_on_workers(spark)
     bc = spark.sparkContext.broadcast(operand)
 
     def run(batches):

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from pandasqlite_spark.operators.common import ensure_package_on_workers, load
+from pandasqlite_spark.operators.common import load
 
 
 def _weighted_len(text: pd.Series) -> pd.Series:
@@ -40,7 +40,6 @@ def q_pandas_udf_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrapped lazily: ``pandas_udf`` parses its DDL return type against an
     active session, so decorating at import time would break
     session-less imports.)"""
-    ensure_package_on_workers(spark)
     score = pandas_udf(_weighted_len, "long")
     d = load(spark, sf_dir, "documents")
     return d.select("doc_id", score(F.col("text")).alias("score"))
@@ -69,7 +68,6 @@ def q_grouped_pandas_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """applyInPandas grouped map: per-segment percent-rank.  Equivalent
     to the SQL window (the oracle) — the point is exercising the
     grouped-Arrow path with a result SQL can verify."""
-    ensure_package_on_workers(spark)
     c = load(spark, sf_dir, "customer")
     return (
         c.select("c_custkey", "c_mktsegment", "c_acctbal")
@@ -147,7 +145,6 @@ def q_arrow_batch_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffers — for array columns this skips pandas' object-per-list
     boxing entirely).  Partition-local, zero shuffle; the quantization
     arithmetic matches the SQL oracle bit-for-bit."""
-    ensure_package_on_workers(spark)
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return emb.mapInArrow(_arrow_quantize, "vec_id bigint, codes array<int>")
 
@@ -179,7 +176,6 @@ def q_udtf_split_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-audit's BatchEvalPython flag keeps it that way."""
     from pyspark.sql.functions import udtf
 
-    ensure_package_on_workers(spark)
     load(spark, sf_dir, "documents").createOrReplaceTempView("udtf_docs")
     spark.udtf.register(
         "split_sentences", udtf(_SplitSentences, returnType="pos int, sentence string")

@@ -24,9 +24,6 @@ from __future__ import annotations
 
 import os
 import stat
-import tempfile
-import zipfile
-from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -191,32 +188,6 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
     """Register the star-schema tables as temp views for SQL-form operators."""
     for n in names:
         load(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
-_PYFILES_FLAG = "spark.pandasqlite_spark.pyfilesAdded"
-
-
-def ensure_package_on_workers(spark: SparkSession) -> None:
-    """Ship this package to Python workers via ``addPyFile``.
-
-    Operators built on pandas UDFs / mapInPandas pickle their functions
-    *by reference* (they live in an importable module), so executors
-    must be able to ``import pandasqlite_spark`` — true on a cluster
-    with a deployed wheel, not true when the driver runs from a
-    checkout.  Zipping the package once per session and registering it
-    makes the UDF paths location-independent."""
-    try:
-        if spark.conf.get(_PYFILES_FLAG, "false") == "true":
-            return
-    except Exception:
-        pass
-    root = Path(__file__).resolve().parents[1]
-    zpath = Path(tempfile.gettempdir()) / "pandasqlite_spark_pkg.zip"
-    with zipfile.ZipFile(zpath, "w") as z:
-        for p in sorted(root.rglob("*.py")):
-            z.write(p, arcname=str(Path("pandasqlite_spark") / p.relative_to(root)))
-    spark.sparkContext.addPyFile(str(zpath))
-    spark.conf.set(_PYFILES_FLAG, "true")
 
 
 def dec(c: str | Column, scale: int = 2) -> Column:

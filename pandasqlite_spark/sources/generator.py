@@ -15,8 +15,9 @@ regenerate the identical table — the DuckDB oracle for
 and compares value hashes.
 
 API note: ``spark.dataSource.register`` pickles the class to Python
-workers; `ensure_package_on_workers` makes the module importable there
-(same deployment contract as the pandas-UDF operators).
+workers.  The package registers itself for pickle-by-value on import,
+so the pickled class carries its own code and the workers need not
+import this module (the same as every pandas-UDF operator).
 """
 
 from __future__ import annotations
@@ -175,20 +176,10 @@ class JsonlSinkDataSource(DataSource):
 
 
 def register(spark) -> None:
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    # The STREAMING source runner is a separate driver-side Python
-    # process that unpickles the class before any addPyFile path is
-    # visible; by-value pickling makes the source self-contained so
-    # registration works from any working directory.
-    try:
-        from pyspark import cloudpickle
-        import pandasqlite_spark.sources.generator as _me
-
-        cloudpickle.register_pickle_by_value(_me)
-    except Exception:
-        pass
+    # The classes travel by value (the package registers itself with
+    # cloudpickle on import), so the batch readers on the executors and
+    # the streaming source's separate driver-side Python runner unpickle
+    # them without importing this package.
     spark.dataSource.register(DetGenDataSource)
     spark.dataSource.register(JsonlSinkDataSource)
 
@@ -197,23 +188,16 @@ def q_write_python_datasource(spark, sf_dir: str):
     """Writer round trip: nation flows out through the pyjsonl Python
     sink (per-partition task files + commit manifest) and back in via
     spark.read.json with an explicit schema; the oracle is the source
-    table itself, so the value hash proves write fidelity."""
-    import shutil
+    table itself, so the value hash proves write fidelity.  Each call
+    writes to a fresh temp directory, so concurrent runs never share
+    (and double) their output."""
+    import os
     import tempfile
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
 
     from pandasqlite_spark.operators.common import load
 
     register(spark)
-    out = str(
-        Path(tempfile.gettempdir())
-        / "pandasqlite_spark_io"
-        / Path(sf_dir).name
-        / "nation_pyjsonl"
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    out = os.path.join(tempfile.mkdtemp(prefix="pqs_pyjsonl_"), "nation_pyjsonl")
     src = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     src.write.format("pyjsonl").option("path", out).mode("append").save()
     return (

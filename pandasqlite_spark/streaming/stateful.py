@@ -61,9 +61,6 @@ def user_profiles_stream(events: DataFrame, evict: bool = True) -> DataFrame:
     completes in one data batch."""
     from pyspark.sql import functions as F
 
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(events.sparkSession)
     with_ms = events.withColumn("ms", F.unix_millis("ts"))
     return (
         with_ms.groupBy("user_id")
@@ -167,9 +164,6 @@ def sequence_match_stream(events: DataFrame, evict: bool = True) -> DataFrame:
     streaming CEP engine)."""
     from pyspark.sql import functions as F
 
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(events.sparkSession)
     with_us = events.select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -240,9 +234,6 @@ def attribution_stream(events: DataFrame, evict: bool = True) -> DataFrame:
     misses, like the CEP twin)."""
     from pyspark.sql import functions as F
 
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(events.sparkSession)
     sub = events.filter(F.col("event_type").isin("click", "purchase")).select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -281,10 +272,6 @@ def sequence_match_stream_tws(events: DataFrame) -> DataFrame:
     """
     from pyspark.sql import functions as F
     from pyspark.sql.streaming import StatefulProcessor
-
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(events.sparkSession)
 
     class SequenceMatchProcessor(StatefulProcessor):
         def init(self, handle):
@@ -366,10 +353,6 @@ def user_profiles_stream_tws(events: DataFrame, ttl_ms: int | None = None) -> Da
     ``user_profiles_stream``'s evict=False note)."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming import StatefulProcessor
-
-    from pandasqlite_spark.operators.common import ensure_package_on_workers
-
-    ensure_package_on_workers(events.sparkSession)
 
     class ProfileProcessor(StatefulProcessor):
         def init(self, handle):

@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 
 from pandasqlite_spark.core.ingest import ingest
-from pandasqlite_spark.core.llm import FakeLLM
+from pandasqlite_spark.core.llm import FakeLLM, ReplayLLM
 from pandasqlite_spark.core.text2sql import run_with_repair
 
 
@@ -38,6 +38,23 @@ def test_run_with_repair_raises_after_budget(spark):
     always_bad = lambda p: "```sql\nSELECT nope FROM table\n```"
     with pytest.raises(Exception):
         run_with_repair(spark, "q", results, always_bad, max_repairs=1)
+
+
+def test_run_with_repair_raises_non_analysis_errors_at_once(spark):
+    """Only analysis errors are repaired: a failure of the engine itself
+    (here a RuntimeError from the session, standing in for a JVM or
+    Py4J error) propagates after the first completion instead of being
+    fed back to the LLM as a repair prompt."""
+
+    class FailingSession:
+        def sql(self, sql):
+            raise RuntimeError("engine down")
+
+    results, _, _ = ingest(spark, [pd.DataFrame({"a": [1]})], persist=False)
+    llm = ReplayLLM(["```sql\nSELECT COUNT(*) AS n FROM table\n```"] * 3)
+    with pytest.raises(RuntimeError, match="engine down"):
+        run_with_repair(FailingSession(), "q", results, llm, max_repairs=2)
+    assert len(llm.prompts) == 1
 
 
 def test_stateful_user_profiles(spark, sf_dir):

@@ -602,70 +602,6 @@ def test_vector_length_guard_raises(spark):
         sim.ivf_assign(emb, cents).collect()
 
 
-def test_ann_kernels_run_outside_repo_cwd(spark, tmp_path):
-    """The Arrow kernels' Python workers must import the package when
-    neither the driver's working directory nor PYTHONPATH holds the
-    checkout: ``pq_topk`` and the IVF knn join run in a fresh process
-    started in ``tmp_path`` and return the in-process rows."""
-    import json
-    import os
-    import subprocess
-    import sys
-    import textwrap
-    from pathlib import Path
-
-    import pandasqlite_spark.functions.similarity as sim
-    from pandasqlite_spark.operators.common import load
-
-    repo = str(Path(__file__).resolve().parents[1])
-    script = tmp_path / "drive.py"
-    script.write_text(
-        textwrap.dedent(
-            f"""
-            import json, sys
-            sys.path.insert(0, {repo!r})
-            from pandasqlite_spark.functions import similarity as sim
-            from pandasqlite_spark.operators.common import load
-            from pandasqlite_spark.session import get_spark
-
-            spark = get_spark("ann_outside_cwd")
-            emb = load(spark, {SF_DIR!r}, "embeddings")
-            out = {{
-                "pq": [list(r) for r in sim.pq_topk(emb).collect()],
-                "ivf": [list(r) for r in
-                        sim.q_simsearch_ivf_knn_join(spark, {SF_DIR!r}).collect()],
-            }}
-            print(json.dumps(out))
-            """
-        )
-    )
-    env = dict(os.environ)
-    env["PYTHONPATH"] = os.pathsep.join(
-        p
-        for p in env.get("PYTHONPATH", "").split(os.pathsep)
-        if p and os.path.abspath(p) != repo
-    )
-    env["SPARK_GRAFT_CPUS"] = "2"
-    env["PANDASQLITE_SPARK_DRIVER_MEM"] = "1g"
-    proc = subprocess.run(
-        [sys.executable, str(script)],
-        cwd=tmp_path,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    got = json.loads(proc.stdout.strip().splitlines()[-1])
-    emb = load(spark, SF_DIR, "embeddings")
-    want = {
-        "pq": [list(r) for r in sim.pq_topk(emb).collect()],
-        "ivf": [list(r) for r in sim.q_simsearch_ivf_knn_join(spark, SF_DIR).collect()],
-    }
-    assert got == json.loads(json.dumps(want))
-    assert got["pq"] and got["ivf"]
-
-
 def test_scaled_bound_guard_raises():
     """The float64-exactness envelope (|scaled coordinate| ≤ 2^22 ⇒
     every kernel sum < 2^53) fails LOUDLY if the value domain widens —
