@@ -4,9 +4,9 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
 Queries are forced end-to-end with the ``noop`` sink (full compute, no
-write cost, no driver collect).  Production fast paths are used where
-the oracle-checked queries() entries deliberately trade speed for
-cross-engine bit-exactness (xxhash64 MinHash, double-fold cosine).
+write cost, no driver collect).  Every headline query but
+``q9_text_quality`` is a key of the ``queries()`` registry, so the
+bench times exactly the code the oracle sweep checks.
 """
 
 from __future__ import annotations
@@ -20,147 +20,64 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _queries(sf_dir: str):
-    from pyspark.sql import functions as F
+# headline name -> registry key, in bench order.  q1-q11 are the stable
+# r01 regression set; q12/q13 add the two heaviest TPC-H join patterns
+# (multi-fact-join agg, 4-way exists/not-exists self-join).
+HEADLINE_KEYS = {
+    "q1_pricing_summary": "agg-count-sum-avg-min-max",
+    "q2_region_revenue_join": "join-inner-equi",
+    "q3_top_per_segment": "window-row-number",
+    "q4_cte_supplier_revenue": "cte-basic",
+    "q5_dedup_minhash": "dedup-minhash-pairs",
+    "q6_simsearch_topk": "simsearch-topk",
+    "q7_events_tumbling": "events-tumbling-agg",
+    "q8_events_session": "events-session-agg",
+    "q9_text_quality": None,
+    "q10_rollup": "agg-rollup",
+    "q11_tpch_q5": "tpch-q5",
+    "q12_tpch_q9": "tpch-q9",
+    "q13_tpch_q21": "tpch-q21",
+    # full-table scan + row-local md5 fold + 3-group partial agg: the
+    # pure scan/hash-throughput probe (reconciliation primitive)
+    "q14_table_checksum": "table-checksum",
+    # PQ/ADC ANN: numpy ADC encode + exact integer rerank, both over
+    # Arrow batches in Python workers
+    "q15_simsearch_pq": "simsearch-pq-adc",
+    # hybrid retrieval: BM25 + dense-cosine shortlists fused by RRF
+    "q16_simsearch_rrf": "simsearch-rrf-hybrid",
+    # bounded sequential recurrence: gap-filled hourly grid + the
+    # path-carrying Viterbi fold
+    "q17_burst_viterbi": "events-burst-viterbi",
+    # PNG encode -> inflate+unfilter decode per row inside mapInPandas
+    "q18_multimodal_decode": "multimodal-decode-image",
+    # cell-restricted ANN retrieval: one driver collect of centroids and
+    # queries, then one numpy pass over Arrow batches (the IVF scale path)
+    "q19_ivf_knn_join": "simsearch-ivf-knn-join",
+    # baseline JPEG round trip per row inside mapInPandas
+    "q20_multimodal_jpeg": "multimodal-decode-jpeg",
+}
 
-    from pandasqlite_spark.functions.dedup import (
-        candidate_pairs,
-        lsh_bands,
-        minhash_signatures_local,
-    )
-    from pandasqlite_spark.functions.similarity import cosine_topk
+
+def _text_quality(spark, d):
+    """Row-local text expressions over the documents table, no shuffle.
+    No registry key runs this composition; it stays because
+    ``perfbench``'s ``headline`` workload times it."""
     from pandasqlite_spark.functions.text import quality_score, token_count
-    from pandasqlite_spark.operators import relational as R
     from pandasqlite_spark.operators.common import load
-    from pandasqlite_spark.streaming.events import session_agg, tumbling_agg
-    from pandasqlite_spark.operators.common import load_events
 
-    def dedup_fast(spark, d):
-        # row-local signature under its documented win condition
-        # (round-9 q5 profile, PROFILE_Q5_SF1.json): full-parallelism
-        # input + eagerly persisted signature feeding both self-join
-        # sides — −16% sf0.1 / −30% sf1 vs the explode→groupBy form,
-        # and the persisted signature (k×8B/doc) is ≪ the text it
-        # replaces, so the win grows at scale
-        docs = load(spark, d, "documents")
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        sig = minhash_signatures_local(docs.repartition(n_part)).localCheckpoint(
-            eager=True
-        )
-        return candidate_pairs(lsh_bands(sig))
+    docs = load(spark, d, "documents")
+    return docs.select(
+        "doc_id", token_count().alias("n_tokens"), quality_score().alias("q")
+    )
 
-    def simsearch_fast(spark, d):
-        emb = load(spark, d, "embeddings")
-        q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-        return cosine_topk(emb.filter(F.col("vec_id") != 0), q, k=10)
 
-    def _tpch_q5(spark, d):
-        from pandasqlite_spark.operators.tpch import q_tpch_q5
+def _queries(sf_dir: str):
+    from pandasqlite_spark.operators import registry
 
-        return q_tpch_q5(spark, d)
-
-    def _tpch_q9(spark, d):
-        from pandasqlite_spark.operators.tpch import q_tpch_q9
-
-        return q_tpch_q9(spark, d)
-
-    def _tpch_q21(spark, d):
-        from pandasqlite_spark.operators.tpch import q_tpch_q21
-
-        return q_tpch_q21(spark, d)
-
-    def _checksum(spark, d):
-        from pandasqlite_spark.functions.analytics import table_checksum
-
-        li = load(spark, d, "lineitem").withColumn(
-            "l_qty_int", F.col("l_quantity").cast("bigint")
-        )
-        return table_checksum(
-            li,
-            ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-             "l_qty_int", "l_returnflag", "l_linestatus"],
-            "l_returnflag",
-            algo="xxhash64",
-        )
-
-    def _pq(spark, d):
-        from pandasqlite_spark.functions.similarity import pq_topk
-
-        return pq_topk(load(spark, d, "embeddings"))
-
-    def _rrf(spark, d):
-        from pandasqlite_spark.functions.similarity import q_simsearch_rrf_hybrid
-
-        return q_simsearch_rrf_hybrid(spark, d)
-
-    def _burst(spark, d):
-        from pandasqlite_spark.functions.timeseries import q_events_burst_viterbi
-
-        return q_events_burst_viterbi(spark, d)
-
-    def text_pipeline(spark, d):
-        docs = load(spark, d, "documents")
-        return docs.select(
-            "doc_id", token_count().alias("n_tokens"), quality_score().alias("q")
-        )
-
-    def _decode(spark, d):
-        from pandasqlite_spark.functions.multimodal import q_multimodal_decode_image
-
-        return q_multimodal_decode_image(spark, d)
-
-    def _ivf_knn(spark, d):
-        from pandasqlite_spark.functions.similarity import q_simsearch_ivf_knn_join
-
-        return q_simsearch_ivf_knn_join(spark, d)
-
-    def _decode_jpeg(spark, d):
-        from pandasqlite_spark.functions.multimodal import q_multimodal_decode_jpeg
-
-        return q_multimodal_decode_jpeg(spark, d)
-
+    every = registry.queries()
     return {
-        "q1_pricing_summary": R.q_agg_count_sum_avg_min_max,
-        "q2_region_revenue_join": R.q_join_inner_equi,
-        "q3_top_per_segment": R.q_window_row_number,
-        "q4_cte_supplier_revenue": R.q_cte_basic,
-        "q5_dedup_minhash": dedup_fast,
-        "q6_simsearch_topk": simsearch_fast,
-        "q7_events_tumbling": lambda s, d: tumbling_agg(load_events(s, d)),
-        "q8_events_session": lambda s, d: session_agg(load_events(s, d)),
-        "q9_text_quality": text_pipeline,
-        "q10_rollup": R.q_agg_rollup,
-        "q11_tpch_q5": _tpch_q5,
-        # q1-q11 are the stable r01 regression set; q12/q13 add the two
-        # heaviest TPC-H join patterns (multi-fact-join agg, 4-way
-        # exists/not-exists self-join) without disturbing comparability
-        "q12_tpch_q9": _tpch_q9,
-        "q13_tpch_q21": _tpch_q21,
-        # full-table scan + row-local md5 fold + 3-group partial agg:
-        # the pure scan/hash-throughput probe (reconciliation primitive)
-        "q14_table_checksum": _checksum,
-        # PQ/ADC ANN: numpy ADC encode + exact integer rerank, both
-        # over Arrow batches in Python workers, on the embeddings table
-        "q15_simsearch_pq": _pq,
-        # hybrid retrieval: BM25 + dense-cosine shortlists fused by RRF
-        # (two score-and-reduce pipelines + a bounded fusion join)
-        "q16_simsearch_rrf": _rrf,
-        # bounded sequential recurrence: gap-filled hourly grid + the
-        # path-carrying Viterbi fold (collapse-then-fold throughput)
-        "q17_burst_viterbi": _burst,
-        # REAL codec round trip per row (PNG encode -> inflate+unfilter
-        # decode) inside mapInPandas — the Python/Arrow batch-transfer
-        # + per-row compute throughput probe
-        "q18_multimodal_decode": _decode,
-        # cell-restricted ANN retrieval: one driver collect of the
-        # centroids and queries, then one numpy pass over Arrow batches
-        # that assigns cells and scores each row against its cell's
-        # queries (the IVF scale path)
-        "q19_ivf_knn_join": _ivf_knn,
-        # baseline JPEG round trip per row (FDCT+Huffman encode →
-        # entropy decode+IDCT) inside mapInPandas — the heavier-codec
-        # sibling of q18's PNG probe
-        "q20_multimodal_jpeg": _decode_jpeg,
+        name: _text_quality if key is None else every[key]
+        for name, key in HEADLINE_KEYS.items()
     }
 
 

@@ -58,12 +58,26 @@ _STRFTIME_MAP = {
 }
 
 
+def _close_paren(s: str, start: int) -> int | None:
+    """Index just past the ``)`` that closes a ``(`` opened right before
+    ``start``; None when the parentheses never balance."""
+    depth = 1
+    for j in range(start, len(s)):
+        if s[j] == "(":
+            depth += 1
+        elif s[j] == ")":
+            depth -= 1
+            if not depth:
+                return j + 1
+    return None
+
+
 def _rewrite_strftime(sql: str, spans: list[str]) -> str:
     """Paren-balanced rewrite of ``strftime(<fmt>, <expr>)``.
 
     Operates on the MASKED string: the format literal is a mask token
     whose text we look up in ``spans``; the second argument is consumed
-    with a depth-counting scan so nested calls like
+    with a paren-balanced scan so nested calls like
     ``strftime('%Y', date(x))`` rewrite correctly (the old ``[^)]+?``
     regex stopped at the first ``)`` and emitted malformed SQL).
     """
@@ -96,14 +110,7 @@ def _rewrite_strftime(sql: str, spans: list[str]) -> str:
             break
         out.append(sql[i : m.start()])
         fmt = spans[int(m.group(1))].strip("'")
-        depth, j = 1, m.end()
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
+        j = _close_paren(sql, m.end()) or len(sql)
         arg = sql[m.end() : j - 1].strip()
         out.append(render(fmt, arg))
         i = j
@@ -121,19 +128,10 @@ def _rewrite_scalar_minmax(sql: str) -> str:
             out.append(sql[i:])
             break
         out.append(sql[i : m.start()])
-        depth, j, top_commas = 1, m.end(), 0
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 1:
-                top_commas += 1
-            j += 1
+        j = _close_paren(sql, m.end()) or len(sql)
         fn = m.group(1).lower()
         inner = _rewrite_scalar_minmax(sql[m.end() : j - 1])  # recurse into args
-        if top_commas >= 1:
+        if len(_split_top_level(sql[m.end() : j])) > 1:
             out.append(("least(" if fn == "min" else "greatest(") + inner + ")")
         else:
             out.append(m.group(0) + inner + ")")
@@ -181,14 +179,7 @@ def _rewrite_julianday(sql: str) -> str:
             out.append(sql[i:])
             break
         out.append(sql[i : m.start()])
-        depth, j = 1, m.end()
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
+        j = _close_paren(sql, m.end()) or len(sql)
         arg = _rewrite_julianday(sql[m.end() : j - 1]).strip()
         out.append(f"(datediff(to_date({arg}), DATE'1970-01-01') + 2440587.5)")
         i = j
@@ -616,20 +607,14 @@ def rewrite_bare_aggregate(sql: str) -> str:
     picker = lambda expr: f"any_value({expr})"  # noqa: E731
     aggs = list(_AGG_HEAD_RE.finditer(masked))
     if len(aggs) == 1 and aggs[0].group(1).lower() in ("min", "max"):
-        depth, j = 1, aggs[0].end()
-        while j < len(masked) and depth:
-            if masked[j] == "(":
-                depth += 1
-            elif masked[j] == ")":
-                depth -= 1
-            j += 1
-        arg = masked[aggs[0].end() : j - 1].strip()
+        j = _close_paren(masked, aggs[0].end())
+        arg = masked[aggs[0].end() : (j or len(masked)) - 1].strip()
         arg = re.sub(r"^distinct\s+", "", arg, flags=re.IGNORECASE)
         # one plain argument only (a 2-arg min/max is SQLite's SCALAR
         # form — rewritten to least/greatest before this repair runs,
         # but stay defensive); ties pick an arbitrary extremum row on
         # both engines
-        if depth == 0 and arg and len(_split_top_level(arg)) == 1:
+        if j and arg and len(_split_top_level(arg)) == 1:
             by = "max_by" if aggs[0].group(1).lower() == "max" else "min_by"
             picker = lambda expr, by=by, arg=arg: f"{by}({expr}, {arg})"  # noqa: E731
     out_items = []

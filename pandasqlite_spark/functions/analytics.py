@@ -426,25 +426,19 @@ def q_history_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- table fingerprinting
 
-def table_checksum(
-    df: DataFrame, cols: list[str], group_col: str, algo: str = "md5"
-) -> DataFrame:
+def table_checksum(df: DataFrame, cols: list[str], group_col: str) -> DataFrame:
     """Order-independent content fingerprint: a per-row hash folded with
     an exact DECIMAL(38,0) sum — commutative, so partition order and
     parallelism never change the result.  The 100 TB reconciliation
     primitive: run on source and target, compare one tiny row set
     instead of 100 TB of rows.
 
-    ``algo="md5"`` hashes a canonical ``|``-joined string — portable
-    (DuckDB computes the identical value; the driver's oracle).
-    ``algo="xxhash64"`` hashes the columns directly JVM-side, no string
-    build — ~3× faster, the production/bench path when both sides are
-    Spark."""
-    if algo == "xxhash64":
-        rowhash = F.xxhash64(*[F.col(c) for c in cols])
-    else:
-        canon = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-        rowhash = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("bigint")
+    The row hash is the first 15 hex digits of the md5 of a canonical
+    ``|``-joined string, which DuckDB computes identically (the
+    ``table-checksum`` oracle), so a Spark table can be reconciled
+    against a non-Spark copy."""
+    canon = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
+    rowhash = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("bigint")
     return (
         df.groupBy(group_col)
         .agg(

@@ -13,12 +13,10 @@ Four tiers, all shuffle-architected for 100 TB:
 - **SimHash** — per-token hash bit-votes aggregated per doc; identical
   16-bit signatures form near-dup groups.
 
-Hash portability: the oracle-checked paths hash with **md5 hex strings**
+Hash portability: MinHash signatures hash with **md5 hex strings**
 (identical in Spark and DuckDB; lexicographic min on the hex = numeric
-min on the 128-bit value).  The production fast path
-(``minhash_signatures(..., portable=False)``) uses ``xxhash64`` — one
-JVM instruction per hash instead of a cryptographic digest — and is
-what ``bench.py`` exercises.  Same algorithm, cheaper hash.
+min on the 128-bit value), so ``bench.py``'s q5 times the
+oracle-checked ``dedup-minhash-pairs`` key itself.
 """
 
 from __future__ import annotations
@@ -140,63 +138,14 @@ def shingles(df: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures_local(df: DataFrame, k: int = N_HASHES, n: int = 3) -> DataFrame:
-    """Shuffle-free minhash: keep the shingle set as an ARRAY per row
-    and take ``array_min(transform(...))`` per hash — the whole
-    signature is computed row-locally inside codegen, versus
-    :func:`minhash_signatures`'s explode → groupBy which shuffles
-    |docs| × k partial-agg rows.  At 100 TB this removes the only
-    exchange from signature generation; identical output (docs shorter
-    than n tokens drop out).
-
-    Measured tradeoff (round-9 q5 profile, PROFILE_Q5_SF1.json,
-    local[32], 2-partition parquet scan): signature-only this form is
-    4–7× cheaper (sf1 medians 1.1s vs 5.2–8.0s).  End-to-end into the
-    LSH self-join it LOSES as-is (21s vs 7.3s) because (a) the narrow
-    scan caps it at 2-way parallelism and (b) the signature recomputes
-    on both join sides — but under its documented win condition
-    (repartition to full parallelism + eagerly persisted signature) it
-    wins end-to-end: 5.1s vs 7.3s at sf1, 1.08s vs 1.28s at sf0.1.
-    The bench q5 path uses that form; prefer the explode→groupBy form
-    only when the signature cannot be persisted and the input is
-    narrow."""
-    sh_arr = F.expr(
-        f"array_distinct(transform(sequence(0, size(toks)-{n}),"
-        f" i -> concat_ws(' ', {', '.join(f'toks[i+{j}]' for j in range(n))})))"
-    )
-    base = (
-        df.select("doc_id", tokens().alias("toks"))
-        .filter(F.size("toks") >= n)
-        .select("doc_id", sh_arr.alias("shs"))
-    )
-    mins = [
-        F.array_min(F.expr(f"transform(shs, s -> xxhash64('s{i}|' || s))")).alias(f"m{i}")
+def minhash_signatures(df: DataFrame, k: int = N_HASHES) -> DataFrame:
+    """k-minhash signature per doc: min over salted md5 hex hashes of
+    shingles (cross-engine reproducible, oracle-checkable)."""
+    aggs = [
+        F.min(F.md5(F.concat(F.lit(f"s{i}|"), F.col("sh")))).alias(f"m{i}")
         for i in range(k)
     ]
-    return base.select("doc_id", *mins)
-
-
-def minhash_signatures(
-    df: DataFrame, k: int = N_HASHES, portable: bool = True
-) -> DataFrame:
-    """k-minhash signature per doc: min over salted hashes of shingles.
-
-    ``portable=True`` → md5 hex strings (cross-engine reproducible,
-    oracle-checkable).  ``portable=False`` → xxhash64 bigints (the
-    production fast path; ~10× cheaper per hash at 100 TB).
-    """
-    sh = shingles(df)
-    if portable:
-        aggs = [
-            F.min(F.md5(F.concat(F.lit(f"s{i}|"), F.col("sh")))).alias(f"m{i}")
-            for i in range(k)
-        ]
-    else:
-        aggs = [
-            F.min(F.xxhash64(F.concat(F.lit(f"s{i}|"), F.col("sh")))).alias(f"m{i}")
-            for i in range(k)
-        ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    return shingles(df).groupBy("doc_id").agg(*aggs)
 
 
 def lsh_bands(sig: DataFrame, bands: int = N_BANDS, k: int = N_HASHES) -> DataFrame:
@@ -1410,7 +1359,7 @@ def band_tuning(docs: DataFrame, configs=(8, 4, 2), k: int = N_HASHES, tau: floa
     # sizes: feeds the cost row AND the small-bucket filter) and
     # `sampled` (the self-join candidate pairs: feeds the intersection
     # join AND the left-join spine inside jaccard_verify).
-    sig = minhash_signatures(docs, k=k, portable=True).localCheckpoint(eager=False)
+    sig = minhash_signatures(docs, k=k).localCheckpoint(eager=False)
     rows = None
     for b in configs:
         r = k // b

@@ -35,10 +35,6 @@ RADIUS_KM = 500.0
 EARTH_R_KM = 6371.0
 
 
-def _h16(col) -> F.Column:
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 4), 16, 10).cast("bigint")
-
-
 def _derived_point(col, lat_alias: str, lon_alias: str) -> list:
     """Deterministic (lat ∈ ±60, lon ∈ ±180) from two md5 slices —
     reproducible in any engine."""

@@ -41,7 +41,7 @@ from pandasqlite_spark.functions.imaging import (
     encode_y4m,
     resize_area,
 )
-from pandasqlite_spark.operators.common import load
+from pandasqlite_spark.operators.common import load, scratch_dir
 
 FEATURE_SCHEMA = "doc_id bigint, n_bytes int, byte_mean double, byte_min int, byte_max int"
 
@@ -323,10 +323,8 @@ def webdataset_roundtrip(with_payload: DataFrame, out_dir: str) -> DataFrame:
 
 
 def q_multimodal_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     docs = load(spark, sf_dir, "documents")
-    out_dir = tempfile.mkdtemp(prefix="pqs_wds_")
+    out_dir = scratch_dir("wds")
     return webdataset_roundtrip(attach_payload(docs), out_dir)
 
 

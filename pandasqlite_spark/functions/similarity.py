@@ -1,18 +1,23 @@
 """Similarity search over embedding columns (SURVEY.md §2.D).
 
-Two tiers:
+One implementation per operation; every key here carries a full DuckDB
+oracle:
 
-- **Brute-force cosine top-k** — the correctness baseline, pure
-  built-in array functions (``zip_with`` + ``aggregate``): JVM-side,
-  codegen'd, embarrassingly parallel; the only cross-partition step is
-  the final top-k merge (``TakeOrderedAndProject``).  Oracle-checked
-  bit-exactly via decimal dot products.
-- **Random-hyperplane LSH buckets** — the 100 TB path: a seeded
-  hyperplane matrix (driver-side numpy, broadcast with the task
-  closure) signs each embedding into a bucket via one Arrow-batched
-  pandas UDF; near-neighbor search then touches only same-bucket rows
-  (bucket join ≪ all-pairs).  Deterministic (fixed seed) but
-  numpy-float-dependent, so it gets the rows-only check.
+- **Brute-force cosine top-k** (:func:`cosine_topk_exact`) — the
+  coordinates quantize to DECIMAL(8,6)·10⁶ BIGINTs and the dot product
+  and norms fold row-locally (``zip_with`` + ``aggregate``) in
+  whole-stage codegen; the only cross-partition step is the final
+  top-k merge (``TakeOrderedAndProject``).  Every integer sum stays
+  below 2⁵³, so the result is bit-identical to the DuckDB DECIMAL
+  oracle.
+- **IVF and PQ ANN** — numpy kernels over Arrow batches in the Python
+  workers, behind one adapter (:func:`_arrow_map`); the same
+  scaled-long domain keeps every float64 intermediate an exact
+  integer (:func:`_check_scaled_bound` asserts it).
+- **LSH buckets** — sign projections written as codegen'd ``±x[d]``
+  chains (:func:`sign_bucket`, :func:`lsh_bucket_ids`), emitted
+  identically in the DuckDB oracle; bucket joins replace the
+  all-pairs product.
 """
 
 from __future__ import annotations
@@ -25,30 +30,6 @@ from pyspark.sql import functions as F
 from pandasqlite_spark.operators.common import load, spread_scan
 
 _DEC = "decimal(8,6)"
-
-
-def _dot_fast(a: str, b: str) -> Column:
-    """Double-precision dot product via ``zip_with`` + ``aggregate`` —
-    the production form (sequential fold, no explode blow-up)."""
-    prod = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def cosine_topk(
-    emb: DataFrame, query: DataFrame, k: int = 10, id_col: str = "vec_id"
-) -> DataFrame:
-    """Brute-force cosine top-k of ``emb`` rows against a 1-row ``query``
-    DataFrame with column ``qv`` (same dimension).  Production form:
-    double arithmetic, array fold, broadcast query."""
-    joined = emb.crossJoin(F.broadcast(query))
-    cos = _dot_fast("embedding", "qv") / (
-        F.sqrt(_dot_fast("embedding", "embedding")) * F.sqrt(_dot_fast("qv", "qv"))
-    )
-    return (
-        joined.select(id_col, cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), id_col)
-        .limit(k)
-    )
 
 
 def cosine_topk_exact(
@@ -265,13 +246,6 @@ def _collect_scaled_centroids(centroids: DataFrame):
     return crows
 
 
-# shared home since round 9 (operators.common): the same under-split
-# scan bound shows up outside the ANN family (bootstrap fan-out,
-# k-means explode) — kept importable under the old private name so the
-# existing call sites and tests stay valid
-_spread_scan = spread_scan
-
-
 def _ivf_cells(X, C):
     """Row of the cid-sorted, zero-filled centroid matrix ``C`` with the
     largest dot against each row of ``X`` — the one cell assignment,
@@ -310,11 +284,11 @@ def ivf_assign(
     At 100 TB: the centroid set is collected once at build
     (:func:`_collect_scaled_centroids`) and broadcast; the fact side is
     one narrow Arrow map pass — no shuffle, no join — spread across the
-    cluster when the scan under-partitions (:func:`_spread_scan`).
+    cluster when the scan under-partitions (:func:`spread_scan`).
     Null / empty embeddings get no cell (posexplode emitted no rows for
     them in the old explode ⋈ SUM form; the nulls-contract sweep pins
     this)."""
-    emb = _spread_scan(emb, id_col)
+    emb = spread_scan(emb, id_col)
     crows = _collect_scaled_centroids(centroids)
     if not crows:
         # zero usable centroids → zero assignments (the old join

@@ -11,18 +11,13 @@ the naive O(n²) nested loop.
 
 from __future__ import annotations
 
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from pandasqlite_spark.operators.common import load, load_events
-
-
-def _tmp(sf_dir: str, name: str) -> str:
-    return str(Path(tempfile.gettempdir()) / "pandasqlite_spark_io" / Path(sf_dir).name / name)
+from pandasqlite_spark.operators.common import load, load_events, scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -33,13 +28,13 @@ def _tmp(sf_dir: str, name: str) -> str:
 def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON source round-trip with an explicit schema (schema inference
     over 100 TB of JSON is a full extra pass — never in production)."""
-    out = _tmp(sf_dir, "nation_json")
+    out = scratch_dir("nation_json", sf_dir)
     load(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").json(out)
     return spark.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT").json(out)
 
 
 def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp(sf_dir, "nation_orc")
+    out = scratch_dir("nation_orc", sf_dir)
     load(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").orc(out)
     return spark.read.orc(out)
 
@@ -55,7 +50,7 @@ def q_scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver-side, idempotent); the query reads them back and proves
     content fidelity via md5 against the table the bytes came from.
     """
-    out = Path(_tmp(sf_dir, "docs_bin"))
+    out = Path(scratch_dir("docs_bin", sf_dir))
     marker = out / "_SUCCESS"
     if not marker.exists():
         rows = (
@@ -87,7 +82,7 @@ def q_scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-partitioned write + partition-pruned read: the year filter
     never touches non-1997 files (PartitionFilters in the scan, the
     mechanism that makes 100 TB time-range queries cheap)."""
-    out = _tmp(sf_dir, "orders_by_year")
+    out = scratch_dir("orders_by_year", sf_dir)
     src = load(spark, sf_dir, "orders").withColumn("yr", F.year("o_orderdate"))
     if not (Path(out) / "_SUCCESS").exists():
         src.write.mode("overwrite").partitionBy("yr").parquet(out)
@@ -125,7 +120,7 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     line-splittable (like multiLine CSV/JSON, one task per file), so at
     scale many medium files beat one giant document — the writer's
     natural per-partition output already has that shape."""
-    out = _tmp(sf_dir, "nation_xml")
+    out = scratch_dir("nation_xml", sf_dir)
     src = load(spark, sf_dir, "nation")
     if not (Path(out) / "_SUCCESS").exists():
         src.coalesce(1).write.mode("overwrite").format("xml").option(
@@ -154,7 +149,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-written predicate.  `tests/test_scale.py` asserts the pruning
     subquery is present in the plan (and that disabling the feature
     removes it, proving the assert bites)."""
-    out = _tmp(sf_dir, "orders_by_year")
+    out = scratch_dir("orders_by_year", sf_dir)
     src = load(spark, sf_dir, "orders").withColumn("yr", F.year("o_orderdate"))
     if not (Path(out) / "_SUCCESS").exists():
         src.write.mode("overwrite").partitionBy("yr").parquet(out)
@@ -364,7 +359,7 @@ def q_multimodal_dedup_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographic min path per content group — a total order, so the
     winner is deterministic even when distinct doc_ids share text
     (which the dedup corpus deliberately contains)."""
-    out = Path(_tmp(sf_dir, "docs_dup_bin"))
+    out = Path(scratch_dir("docs_dup_bin", sf_dir))
     marker = out / "_SUCCESS"
     if not marker.exists():
         rows = (

@@ -22,8 +22,13 @@ applies).
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
 import stat
+import sys
+import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -182,6 +187,39 @@ def load_events_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys built on this loader carry the matching
     ``WHERE ts IS NOT NULL`` (null-contract program, round 6)."""
     return load_events(spark, sf_dir).filter(F.col("ts").isNotNull())
+
+
+# This process's scratch root, made on first use.
+_SCRATCH: str | None = None
+
+
+def _report_unremoved(_fn, path, exc_info) -> None:
+    print(
+        f"pandasqlite_spark: could not remove scratch {path}: {exc_info[1]}",
+        file=sys.stderr,
+    )
+
+
+def scratch_dir(name: str, sf_dir: str | None = None) -> str:
+    """A directory for a query key's scratch output (a round-trip
+    write, a generated fixture file).  Everything lives under one
+    ``pqs_`` root per process in the temp dir, removed at interpreter
+    exit, so concurrent processes never share output and none is left
+    behind.
+
+    With ``sf_dir``: the stable path for (``sf_dir``, ``name``) —
+    the same on every call in this process, not created — so a key
+    may reuse what an earlier call wrote.  Without: a fresh, empty
+    directory."""
+    global _SCRATCH
+    if _SCRATCH is None:
+        _SCRATCH = tempfile.mkdtemp(prefix="pqs_")
+        atexit.register(shutil.rmtree, _SCRATCH, onerror=_report_unremoved)
+    if sf_dir is None:
+        return tempfile.mkdtemp(prefix=f"{name}_", dir=_SCRATCH)
+    sf_abs = os.path.abspath(sf_dir)
+    sf_key = f"{os.path.basename(sf_abs)}_{hashlib.md5(sf_abs.encode()).hexdigest()[:12]}"
+    return os.path.join(_SCRATCH, sf_key, name)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

@@ -20,12 +20,11 @@ hash-compare still applies.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pandasqlite_spark.operators.common import dsum, load, register_views
+from pandasqlite_spark.operators.common import dsum, load, register_views, scratch_dir
 
 
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -155,7 +154,7 @@ def q_write_roundtrip_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory layout IS the coarse index — the standard layout for a
     100 TB lakehouse table."""
     o = load(spark, sf_dir, "orders")
-    out = os.path.join(tempfile.mkdtemp(prefix="pqs_roundtrip_"), "orders")
+    out = os.path.join(scratch_dir("roundtrip"), "orders")
     (
         o.select("o_orderkey", "o_totalprice", "o_orderpriority")
         .write.mode("overwrite")
@@ -182,7 +181,7 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     steady-state readers would pin the merged schema in the catalog
     instead of re-merging per query."""
     c = load(spark, sf_dir, "customer")
-    base = tempfile.mkdtemp(prefix="pqs_evolve_")
+    base = scratch_dir("evolve")
     old_b, new_b = os.path.join(base, "b1"), os.path.join(base, "b2")
     c.filter(F.col("c_nationkey") <= 11).select("c_custkey", "c_name").write.mode(
         "overwrite"
@@ -267,7 +266,7 @@ def q_scan_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     escaped-newline form).  The fixture pins both newline-bearing
     fields and the ``""`` quote escape; the oracle restates the parsed
     records as constants."""
-    base = tempfile.mkdtemp(prefix="pqs_csv_ml_")
+    base = scratch_dir("csv_ml")
     path = os.path.join(base, "rows.csv")
     with open(path, "w") as f:
         f.write(_CSV_ML_ROWS)
@@ -302,7 +301,7 @@ def q_scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     - **count() pushdown skips parsing entirely** — a bare
       ``COUNT(*)`` over DROPMALFORMED counts raw lines (8, not 4);
       counting a parsed column forces real parsing."""
-    base = tempfile.mkdtemp(prefix="pqs_csv_bad_")
+    base = scratch_dir("csv_bad")
     path = os.path.join(base, "rows.csv")
     with open(path, "w") as f:
         f.write("\n".join(_CSV_ROWS) + "\n")
@@ -358,7 +357,7 @@ def q_scan_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     everywhere.  Same two engine pitfalls defeated: the aggregate
     references every data column (corrupt-record contents depend on
     the parsed projection) and counts parsed VALUES, never raw lines."""
-    base = tempfile.mkdtemp(prefix="pqs_json_bad_")
+    base = scratch_dir("json_bad")
     path = os.path.join(base, "rows.jsonl")
     with open(path, "w") as f:
         f.write("\n".join(_JSONL_ROWS) + "\n")
@@ -1219,7 +1218,7 @@ def q_scan_csv_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("n_nationkey")
         .collect()
     )
-    base = tempfile.mkdtemp(prefix="pqs_csv_gz_")
+    base = scratch_dir("csv_gz")
     path = os.path.join(base, "nation.csv.gz")
     buf = _io.StringIO()
     w = _csv.writer(buf)

@@ -66,18 +66,29 @@ def _modules():
     )
 
 
-def queries() -> dict[str, QueryFn]:
-    out: dict[str, QueryFn] = {}
+def _merged(attr: str) -> dict:
+    """Union of every module's ``attr`` dict.  A key defined by two
+    modules raises: a silent ``dict.update`` would let the later module
+    shadow the earlier one's query or oracle."""
+    out: dict = {}
+    owner: dict[str, str] = {}
     for m in _modules():
-        out.update(getattr(m, "QUERIES", {}))
+        for key, value in getattr(m, attr, {}).items():
+            if key in owner:
+                raise ValueError(
+                    f"{attr} key {key!r} is defined by both {owner[key]} and {m.__name__}"
+                )
+            owner[key] = m.__name__
+            out[key] = value
     return out
+
+
+def queries() -> dict[str, QueryFn]:
+    return _merged("QUERIES")
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for m in _modules():
-        out.update(getattr(m, "ORACLES", {}))
-    return out
+    return _merged("ORACLES")
 
 
 def oracle_sql_big() -> dict[str, str]:
@@ -88,7 +99,4 @@ def oracle_sql_big() -> dict[str, str]:
     Semantically identical to the registry oracle — the sweep harness
     prefers these when present; the driver's sf0.01 gate keeps using
     ``oracle_sql()``."""
-    out: dict[str, str] = {}
-    for m in _modules():
-        out.update(getattr(m, "ORACLES_BIG", {}))
-    return out
+    return _merged("ORACLES_BIG")

@@ -14,13 +14,10 @@ conventions are documented in :mod:`pandasqlite_spark.operators.common`.
 
 from __future__ import annotations
 
-import tempfile
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from pandasqlite_spark.operators.common import davg, dec, dsum, load, register_views
+from pandasqlite_spark.operators.common import davg, dec, dsum, load, register_views, scratch_dir
 
 # ---------------------------------------------------------------------------
 # Scans & sinks (§2.B rows 1-3)
@@ -36,11 +33,9 @@ def q_scan_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source (§2.B-1): round-trip region through CSV with an explicit
     schema (inferSchema is a full extra pass — avoid in production)."""
-    tmp = Path(tempfile.gettempdir()) / "pandasqlite_spark_csv" / Path(sf_dir).name
-    load(spark, sf_dir, "region").coalesce(1).write.mode("overwrite").csv(
-        str(tmp), header=True
-    )
-    return spark.read.schema("r_regionkey INT, r_name STRING").csv(str(tmp), header=True)
+    tmp = scratch_dir("region_csv", sf_dir)
+    load(spark, sf_dir, "region").coalesce(1).write.mode("overwrite").csv(tmp, header=True)
+    return spark.read.schema("r_regionkey INT, r_name STRING").csv(tmp, header=True)
 
 
 # ---------------------------------------------------------------------------

@@ -8,10 +8,10 @@ not just result correctness.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pandasqlite_spark.operators.common import load
+from pandasqlite_spark.operators.common import load, scratch_dir
 
 
 def write_bucketed(
@@ -227,12 +227,11 @@ def q_layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly fewer files.  The checksum aggregates in DECIMAL so the
     compare is order-independent — file layout changes row order."""
     import os
-    import tempfile
 
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    base = tempfile.mkdtemp(prefix="pqs_compact_")
+    base = scratch_dir("compact")
     frag, compacted = os.path.join(base, "frag"), os.path.join(base, "opt")
     li.repartition(64).write.mode("overwrite").parquet(frag)
     n_before, n_after = compact_files(spark, frag, compacted, target_files=4)
@@ -255,95 +254,11 @@ def q_layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ZORDER_BITS = 8  # per-dimension quantization width
-ZORDER_CELL_SHIFT = 12  # keep top 4 z-bits -> 16 quadtree cells
-
-
-def _interleave_sql(a: str, b: str, shift_fn) -> str:
-    """Morton interleave of two ``ZORDER_BITS``-bit ints as a flat sum:
-    bit i of ``a`` lands at 2i+1, bit i of ``b`` at 2i."""
-    terms = []
-    for i in range(ZORDER_BITS):
-        terms.append(f"(({shift_fn(a, i)} & 1) * {1 << (2 * i + 1)})")
-        terms.append(f"(({shift_fn(b, i)} & 1) * {1 << (2 * i)})")
-    return " + ".join(terms)
-
-
-def q_layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) layout clustering — the multi-dimensional
-    data-skipping device: quantize (l_partkey, l_suppkey) to 8 bits
-    each against their table maxima, interleave the bits into a
-    16-bit Morton key, cluster rows by its top 4 bits (16 quadtree
-    cells), physically rewrite the table partitioned by cell, and
-    emit per-cell (count, min/max of both quantized dims) from the
-    REWRITTEN table plus the locality contract the layout exists to
-    provide: every cell's span in each dimension is ≤ 64 quant units
-    (one quadrant), which is precisely what parquet min/max file
-    stats exploit to skip files under predicates on EITHER column.
-
-    At 100 TB this is the OPTIMIZE ZORDER BY pattern: one
-    range-cluster shuffle at write time buys multi-column file
-    pruning forever after; a linear sort on one column would give
-    locality in that column only.  All arithmetic is integer (exact
-    in both engines); the maxima come from a 1-row broadcast."""
-    import os
-    import tempfile
-
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    bounds = li.agg(
-        F.max("l_partkey").alias("pmax"), F.max("l_suppkey").alias("smax")
-    )
-    # FLOOR explicitly: Spark's double->int CAST truncates but DuckDB's
-    # ROUNDS — floor of a nonnegative double is identical in both
-    q = li.crossJoin(F.broadcast(bounds)).select(
-        F.expr(
-            f"CAST(FLOOR(l_partkey * {1 << ZORDER_BITS} / (pmax + 1)) AS INT)"
-        ).alias("a8"),
-        F.expr(
-            f"CAST(FLOOR(l_suppkey * {1 << ZORDER_BITS} / (smax + 1)) AS INT)"
-        ).alias("b8"),
-    )
-    z = _interleave_sql("a8", "b8", lambda c, i: f"shiftright({c}, {i})")
-    cells = q.select(
-        "a8", "b8", F.expr(f"CAST(({z}) AS INT)").alias("zkey")
-    ).withColumn("cell", F.shiftright("zkey", ZORDER_CELL_SHIFT))
-    out_dir = os.path.join(tempfile.mkdtemp(prefix="pqs_zorder_"), "z")
-    cells.repartition(16, "cell").write.mode("overwrite").partitionBy("cell").parquet(
-        out_dir
-    )
-    back = spark.read.parquet(out_dir)
-    span = 1 << (ZORDER_BITS - 2)  # one quadrant per dimension
-    return (
-        back.groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("a8").alias("amin"),
-            F.max("a8").alias("amax"),
-            F.min("b8").alias("bmin"),
-            F.max("b8").alias("bmax"),
-        )
-        .select(
-            F.col("cell").cast("int").alias("cell"),
-            "n_rows",
-            "amin",
-            "amax",
-            "bmin",
-            "bmax",
-            (
-                ((F.col("amax") - F.col("amin")) < span)
-                & ((F.col("bmax") - F.col("bmin")) < span)
-            ).alias("within_quadrant"),
-        )
-        .orderBy("cell")
-    )
-
-
 QUERIES = {
     "join-skew-salted": q_join_skew_salted,
     "join-bloom-prune": q_join_bloom_prune,
     "join-sort-merge-hint": q_join_sort_merge_hint,
     "layout-compaction": q_layout_compaction,
-    "layout-zorder": q_layout_zorder,
 }
 
 ORACLES = {
@@ -382,23 +297,3 @@ ORACLES = {
         GROUP BY l_returnflag
     """,
 }
-
-ORACLES["layout-zorder"] = f"""
-    WITH b AS (
-      SELECT MAX(l_partkey) AS pmax, MAX(l_suppkey) AS smax FROM lineitem),
-    q AS (
-      SELECT CAST(FLOOR(l_partkey * {1 << ZORDER_BITS} / (pmax + 1)) AS INT) AS a8,
-             CAST(FLOOR(l_suppkey * {1 << ZORDER_BITS} / (smax + 1)) AS INT) AS b8
-      FROM lineitem, b),
-    z AS (
-      SELECT a8, b8,
-             ({_interleave_sql("a8", "b8", lambda c, i: f"({c} >> {i})")}) AS zkey
-      FROM q)
-    SELECT CAST(zkey >> {ZORDER_CELL_SHIFT} AS INT) AS cell,
-           COUNT(*) AS n_rows,
-           MIN(a8) AS amin, MAX(a8) AS amax,
-           MIN(b8) AS bmin, MAX(b8) AS bmax,
-           (MAX(a8) - MIN(a8) < {1 << (ZORDER_BITS - 2)}
-            AND MAX(b8) - MIN(b8) < {1 << (ZORDER_BITS - 2)}) AS within_quadrant
-    FROM z GROUP BY 1 ORDER BY 1
-"""

@@ -192,12 +192,11 @@ def q_write_python_datasource(spark, sf_dir: str):
     writes to a fresh temp directory, so concurrent runs never share
     (and double) their output."""
     import os
-    import tempfile
 
-    from pandasqlite_spark.operators.common import load
+    from pandasqlite_spark.operators.common import load, scratch_dir
 
     register(spark)
-    out = os.path.join(tempfile.mkdtemp(prefix="pqs_pyjsonl_"), "nation_pyjsonl")
+    out = os.path.join(scratch_dir("pyjsonl"), "nation_pyjsonl")
     src = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     src.write.format("pyjsonl").option("path", out).mode("append").save()
     return (

@@ -723,15 +723,14 @@ def q_events_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp-unit or timezone dependence); Spark's watermark math is
     millisecond-precision, which the oracle mirrors."""
     import os
-    import tempfile
 
-    from pandasqlite_spark.operators.common import load_events
+    from pandasqlite_spark.operators.common import load_events, scratch_dir
 
     ev = load_events(spark, sf_dir).select(
         "event_id", F.unix_micros("ts").alias("us")
     )
     cut = F.lit("2024-01-21").cast("date")
-    base = tempfile.mkdtemp(prefix="pqs_latedrop_")
+    base = scratch_dir("latedrop")
     in_dir = os.path.join(base, "in")
     day = F.timestamp_micros(F.col("us")).cast("date")
     cut2 = F.lit("2024-01-26").cast("date")

@@ -111,7 +111,6 @@ NESTED_LOOP_OK = {
     "range-join",  # declared range/theta join
     "asof-join",
     "tpch-q7",  # 2-row × 2-row nation-pair product (constant dimension cross)
-    "layout-zorder",  # 1-row (pmax, smax) quantization-bounds broadcast
     "simsearch-pq-adc",  # 16-row broadcast codebook + 1-row broadcast query
     "events-theil-sen-trend",  # |days|² pair join over the DAILY AGGREGATE
     # (calendar-bounded) + 1-row slope/median broadcasts

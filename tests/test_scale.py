@@ -121,26 +121,6 @@ def test_pandas_udf_is_arrow_batched(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
-def test_minhash_local_equals_groupby_and_no_exchange(spark, sf_dir):
-    """The shuffle-free array-min minhash must produce the identical
-    signature matrix as the explode→groupBy form — and its plan must
-    contain no Exchange at all."""
-    from pandasqlite_spark.functions.dedup import (
-        minhash_signatures,
-        minhash_signatures_local,
-    )
-    from pandasqlite_spark.operators.scale import plan_has_exchange
-
-    docs = load(spark, sf_dir, "documents")
-    local = minhash_signatures_local(docs)
-    grouped = minhash_signatures(docs, portable=False)
-    assert not plan_has_exchange(local), "row-local minhash must not shuffle"
-    assert plan_has_exchange(grouped)  # the contrast that makes this meaningful
-    a = sorted(map(tuple, local.collect()))
-    b = sorted(map(tuple, grouped.collect()))
-    assert a == b
-
-
 def test_session_agg_single_exchange(spark, sf_dir):
     """Sessionize (window over user_id) + session aggregation must share
     ONE user_id exchange: the groupBy on (user_id, session_id) is
