@@ -76,9 +76,10 @@ def _parse_json(reply: str, default):
         opener = reply[start]
         end = reply.rindex("}" if opener == "{" else "]") + 1
         return json.loads(reply[start:end].replace("NaN", '"NaN"'))
-    except Exception:
-        # curriculum JSON errors are swallowed in the reference too
-        # (pandasqlite.py:164-171), leaving the field None
+    except ValueError:
+        # no JSON in the reply (min of no openers, no closer) or bad JSON
+        # (JSONDecodeError); curriculum JSON errors are swallowed in the
+        # reference too (pandasqlite.py:164-171), leaving the field None
         return default
 
 

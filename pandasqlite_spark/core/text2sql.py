@@ -19,9 +19,13 @@ Two reference bugs fixed (SURVEY.md §3.2):
 
 from __future__ import annotations
 
+import logging
 import re
+import threading
+from contextlib import contextmanager
 
 from pyspark.errors import AnalysisException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 
 from pandasqlite_spark.core.dialect import (
@@ -90,6 +94,34 @@ def run(
     return spark.sql(text2sql(question, ingestions, llm_callback, **kwargs))
 
 
+class _RepairAttempts(logging.Filter):
+    """PySpark logs every analysis error it converts at ERROR, with the
+    full plan, on ``SQLQueryContextLogger``.  Inside a
+    :func:`run_with_repair` attempt the error is either repaired or
+    raised, so this filter drops those records, but only on the thread
+    that is inside the attempt: other threads and the logger's own
+    settings are untouched."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self._local = threading.local()
+
+    def filter(self, record: logging.LogRecord) -> bool:
+        return not getattr(self._local, "inside", False)
+
+    @contextmanager
+    def active(self):
+        self._local.inside = True
+        try:
+            yield
+        finally:
+            self._local.inside = False
+
+
+_REPAIR_ATTEMPTS = _RepairAttempts()
+PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(_REPAIR_ATTEMPTS)
+
+
 def run_with_repair(
     spark: SparkSession,
     question: str,
@@ -107,14 +139,17 @@ def run_with_repair(
     is exactly the feedback an LLM can act on.)  Raises the last
     analysis error if every attempt fails.  Only an
     ``AnalysisException`` (``ParseException`` included) is repaired;
-    any other failure, such as a JVM or Py4J error, is raised at once."""
+    any other failure, such as a JVM or Py4J error, is raised at once.
+    Analysis errors inside an attempt are not also logged by PySpark
+    (see :class:`_RepairAttempts`)."""
     q = question
     last_exc: Exception | None = None
     for _ in range(max_repairs + 1):
         sql = text2sql(q, ingestions, llm_callback, **kwargs)
         try:
-            df = spark.sql(sql)
-            df.schema  # force analysis now, not at first action
+            with _REPAIR_ATTEMPTS.active():
+                df = spark.sql(sql)
+                df.schema  # force analysis now, not at first action
             return df
         except AnalysisException as exc:
             last_exc = exc
@@ -131,8 +166,9 @@ def run_with_repair(
                 fixed = rewrite_bare_aggregate(sql)
                 if fixed != sql:
                     try:
-                        df = spark.sql(fixed)
-                        df.schema
+                        with _REPAIR_ATTEMPTS.active():
+                            df = spark.sql(fixed)
+                            df.schema
                         return df
                     except AnalysisException as exc2:
                         last_exc = exc2

@@ -14,6 +14,17 @@ Scale configs: AQE on (runtime re-plan, skew-join handling, partition
 coalescing), Arrow on (fast toPandas / pandas_udf), shuffle partitions
 sized to the local core count (overridable; on a real cluster this would
 be ~2-3× total cores or left to AQE's coalescing).
+
+Python worker daemon: on a ``local[...]`` master, ``get_spark`` has the
+JVM start ``_daemon/pqs_daemon.py`` in place of the stock
+``pyspark.daemon`` (``spark.python.daemon.module``, with the ``_daemon``
+directory merged into ``spark.executorEnv.PYTHONPATH``).  It is the stock
+daemon except that a task's import-cache flush no longer re-reads zip
+archives whose stamp is unchanged, which was most of a short Python
+task's CPU.  Only local masters get it, because only there is this
+package's directory known to exist on the executors.  A session that is
+already active when ``get_spark`` is called (``getOrCreate``), such as
+the external driver's own, keeps the daemon it was started with.
 """
 
 from __future__ import annotations
@@ -26,6 +37,9 @@ from pyspark.sql import SparkSession
 # A known location of a PURE-PYTHON google.protobuf (Apache-2.0, vendored
 # by the Google Cloud SDK) in containers that lack a pip-installed one.
 _PROTOBUF_FALLBACK_DIR = "/usr/lib/google-cloud-sdk/platform/google_appengine"
+
+# holds pqs_daemon.py and nothing else (see the module docstring)
+_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_daemon")
 
 
 def enable_spark4_stateful_runner() -> bool:
@@ -73,6 +87,18 @@ def enable_spark4_stateful_runner() -> bool:
 SPARK4_STATEFUL_AVAILABLE = enable_spark4_stateful_runner()
 
 
+def _with_worker_daemon(master: str, conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` plus the two settings that start ``pqs_daemon`` as the
+    Python worker daemon, for a ``local[...]`` master only; the daemon
+    directory is merged in front of any ``PYTHONPATH`` the caller gave."""
+    conf = dict(conf)
+    if master == "local" or master.startswith("local["):
+        conf.setdefault("spark.python.daemon.module", "pqs_daemon")
+        paths = [p for p in conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep) if p]
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join([_DAEMON_DIR] + paths)
+    return conf
+
+
 def get_spark(
     app_name: str = "pandasqlite_spark",
     shuffle_partitions: int | None = None,
@@ -107,7 +133,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("PANDASQLITE_SPARK_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in _with_worker_daemon(master, extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

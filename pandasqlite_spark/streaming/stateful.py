@@ -17,6 +17,7 @@ from __future__ import annotations
 from typing import Any, Iterator
 
 import pandas as pd
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -39,7 +40,7 @@ def _update_profile(
     state.update((n, total, last_ms))
     try:
         state.setTimeoutDuration(60 * 60 * 1000)  # evict after 1h idle
-    except Exception:
+    except PySparkRuntimeError:
         # NoTimeout runs (finite drains) reject timer registration —
         # eviction is a production-stream concern only
         pass
@@ -141,7 +142,7 @@ def _detect_sequence(
         state.update((None, 0, 0, tt[0], tu[0], ti[0]))
     try:
         state.setTimeoutDuration(24 * 60 * 60 * 1000)
-    except Exception:
+    except PySparkRuntimeError:
         pass  # NoTimeout finite drains reject timer registration
     yield pd.DataFrame(
         {
@@ -208,7 +209,7 @@ def _attribute(key, pdfs, state: GroupState):
         state.update((click_us, click_id))
     try:
         state.setTimeoutDuration(ATTR_LOOKBACK_US // 1000)  # evict after lookback
-    except Exception:
+    except PySparkRuntimeError:
         pass  # NoTimeout finite drains reject timer registration
     if out_p:
         yield pd.DataFrame(

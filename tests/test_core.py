@@ -492,3 +492,14 @@ def test_watsonx_http_backend_end_to_end(spark):
     # the base_url override on the SDK factory delegates here (no SDK
     # import, no ImportError)
     assert callable(watsonx_backend(base_url=base, api_key="k"))
+
+
+def test_parse_json_swallows_only_missing_or_bad_json():
+    from pandasqlite_spark.core.ingest import _parse_json
+
+    assert _parse_json('Sure: {"a": 1} done', {}) == {"a": 1}
+    assert _parse_json("no JSON here", {}) == {}  # no opener: min([])
+    assert _parse_json('{"a": 1', None) is None  # no closer: rindex
+    assert _parse_json("{a: 1}", {}) == {}  # JSONDecodeError
+    with pytest.raises(AttributeError):  # not a reply at all: raised
+        _parse_json(None, {})

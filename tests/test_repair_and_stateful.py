@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import logging
+import threading
+
 import pandas as pd
 import pytest
 
@@ -32,12 +35,20 @@ def test_run_with_repair_fixes_analysis_error(spark):
     assert out[0]["n"] == 3
 
 
+def _always_bad(prompt: str) -> str:
+    """Passes the sanity check, then always answers with a missing column."""
+    if "sanity check" in prompt.lower():
+        return "YES"
+    return "```sql\nSELECT nope FROM table\n```"
+
+
 def test_run_with_repair_raises_after_budget(spark):
+    from pyspark.errors import AnalysisException
+
     pdf = pd.DataFrame({"a": [1]})
     results, _, _ = ingest(spark, [pdf], persist=False)
-    always_bad = lambda p: "```sql\nSELECT nope FROM table\n```"
-    with pytest.raises(Exception):
-        run_with_repair(spark, "q", results, always_bad, max_repairs=1)
+    with pytest.raises(AnalysisException, match="nope"):
+        run_with_repair(spark, "q", results, _always_bad, max_repairs=1)
 
 
 def test_run_with_repair_raises_non_analysis_errors_at_once(spark):
@@ -55,6 +66,104 @@ def test_run_with_repair_raises_non_analysis_errors_at_once(spark):
     with pytest.raises(RuntimeError, match="engine down"):
         run_with_repair(FailingSession(), "q", results, llm, max_repairs=2)
     assert len(llm.prompts) == 1
+
+
+def test_repaired_analysis_errors_are_not_logged(spark):
+    """PySpark logs each analysis error it converts, with the full plan;
+    inside run_with_repair those records are dropped, while the
+    unrepairable error is still raised with its message and an error
+    outside the loop is still logged."""
+    from pyspark.errors import AnalysisException
+    from pyspark.logger import PySparkLogger
+
+    records = []
+
+    class Collect(logging.Handler):
+        def emit(self, record):
+            records.append(record)
+
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    handler = Collect()
+    logger.addHandler(handler)
+    try:
+        results, _, _ = ingest(spark, [pd.DataFrame({"a": [1, 2, 3]})], persist=False)
+        out = run_with_repair(spark, "count rows", results, RepairingLLM()).collect()
+        assert out[0]["n"] == 3
+        with pytest.raises(AnalysisException, match="nope"):
+            run_with_repair(spark, "q", results, _always_bad, max_repairs=1)
+        assert records == []
+        with pytest.raises(AnalysisException):
+            spark.sql("SELECT nope FROM range(1)")
+        assert len(records) == 1
+    finally:
+        logger.removeHandler(handler)
+
+
+def test_repair_log_filter_is_per_thread():
+    from pandasqlite_spark.core.text2sql import _REPAIR_ATTEMPTS
+
+    record = logging.LogRecord("SQLQueryContextLogger", logging.ERROR, "", 0, "m", None, None)
+    seen = {}
+    with _REPAIR_ATTEMPTS.active():
+        seen["inside"] = _REPAIR_ATTEMPTS.filter(record)
+        other = threading.Thread(target=lambda: seen.update(other=_REPAIR_ATTEMPTS.filter(record)))
+        other.start()
+        other.join(timeout=10)
+        assert not other.is_alive()
+    seen["after"] = _REPAIR_ATTEMPTS.filter(record)
+    assert seen == {"inside": False, "other": True, "after": True}
+
+
+def _no_timeout_state():
+    """A real group state of a NoTimeout query (a finite drain)."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.types import StructType
+
+    return GroupState(
+        None, 0, -1, GroupStateTimeout.NoTimeout, False, False, False, False,
+        False, -1, b"", StructType(),
+    )
+
+
+class _TimerState:
+    """A fresh group state whose timer registration fails as a NoTimeout
+    drain does, or with ``error``."""
+
+    hasTimedOut = False
+    exists = False
+
+    def __init__(self, error: Exception | None = None):
+        self.error = error
+
+    def update(self, value):
+        pass
+
+    def setTimeoutDuration(self, ms):
+        if self.error is not None:
+            raise self.error
+        _no_timeout_state().setTimeoutDuration(ms)
+
+
+_CLICK = pd.DataFrame(
+    {"event_type": ["click"], "us": [1_000_000], "event_id": [11], "user_id": [7]}
+)
+_TIMER_BATCHES = {
+    "_update_profile": pd.DataFrame({"value": [1.5], "ms": [7]}),
+    "_detect_sequence": _CLICK,
+    "_attribute": _CLICK,
+}
+
+
+@pytest.mark.parametrize("fn", sorted(_TIMER_BATCHES))
+def test_stateful_timer_guard_catches_only_no_timeout(fn):
+    """A NoTimeout drain's rejected timer is ignored; any other error
+    from the state propagates."""
+    from pandasqlite_spark.streaming import stateful
+
+    func, batch = getattr(stateful, fn), _TIMER_BATCHES[fn]
+    list(func((7,), iter([batch]), _TimerState()))
+    with pytest.raises(ZeroDivisionError):
+        list(func((7,), iter([batch]), _TimerState(ZeroDivisionError("unrelated"))))
 
 
 def test_stateful_user_profiles(spark, sf_dir):
@@ -112,7 +221,7 @@ def test_streaming_cep_matches_across_batch_boundary():
             self.exists = False
 
         def setTimeoutDuration(self, ms):
-            raise Exception("NoTimeout")
+            _no_timeout_state().setTimeoutDuration(ms)
 
     st = FakeState()
     b1 = pd.DataFrame(

@@ -62,7 +62,9 @@ def test_python_surfaces_run_outside_repo_on_plain_sessions(spark, sf_dir, tmp_p
     directory outside the checkout with the repo off ``PYTHONPATH``,
     each on a session built with the plain ``SparkSession.builder`` (as
     the external driver builds it, not ``get_spark``): every Python
-    surface returns the in-process rows."""
+    surface returns the in-process rows.  In the second process
+    ``get_spark`` is called on the already-active session: it reuses
+    it, and its workers keep the stock daemon."""
     import __spark_entry__ as entrymod
 
     from pandasqlite_spark.streaming import stateful
@@ -87,6 +89,19 @@ def test_python_surfaces_run_outside_repo_on_plain_sessions(spark, sf_dir, tmp_p
                 .config("spark.driver.memory", "1g")
                 .getOrCreate()
             )
+            if sys.argv[1] == "b":
+                assert pandasqlite_spark.get_spark() is spark
+
+            def daemon(batches):
+                import zipimport
+                import pandas as pd
+
+                for _ in batches:
+                    pass
+                f = zipimport.zipimporter.invalidate_caches
+                yield pd.DataFrame({{"flush": [f.__qualname__]}})
+
+            print(spark.range(1).mapInPandas(daemon, "flush string").first()[0])
             queries = entrymod.queries()
             for key in {SURFACE_KEYS!r}:
                 queries[key](spark, {sf_dir!r}).toPandas().to_pickle(key + ".pkl")
@@ -102,7 +117,7 @@ def test_python_surfaces_run_outside_repo_on_plain_sessions(spark, sf_dir, tmp_p
             (
                 cwd,
                 subprocess.Popen(
-                    [sys.executable, str(script)],
+                    [sys.executable, str(script), name],
                     cwd=cwd,
                     env=_env_without_repo(),
                     stdout=subprocess.PIPE,
@@ -114,6 +129,8 @@ def test_python_surfaces_run_outside_repo_on_plain_sessions(spark, sf_dir, tmp_p
     outs = [(cwd, *p.communicate(timeout=900), p.returncode) for cwd, p in procs]
     for cwd, out, err, code in outs:
         assert code == 0, f"{cwd.name}: {err[-4000:]}"
+        # a plain session, reused or not, runs the stock worker daemon
+        assert out.strip().splitlines()[0] == "zipimporter.invalidate_caches", out
         # the Spark 4 API served the pattern key, not its fallback twin
         assert out.strip().splitlines()[-1] == "tws"
 
