@@ -42,14 +42,15 @@ _PROTOBUF_FALLBACK_DIR = "/usr/lib/google-cloud-sdk/platform/google_appengine"
 _DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_daemon")
 
 
-def enable_spark4_stateful_runner() -> bool:
-    """Best-effort enablement of Spark 4's ``transformWithStateInPandas``
-    driver worker, which hard-requires ``google.protobuf`` in the Python
-    that the JVM spawns.  If protobuf isn't importable but a vendored
+def enable_spark4_stateful_runner() -> None:
+    """Make ``google.protobuf`` importable in the Python that the JVM
+    spawns for Spark 4's ``transformWithStateInPandas`` driver worker,
+    which hard-requires it.  If protobuf isn't importable but a vendored
     pure-Python copy exists on disk, prepend it to ``PYTHONPATH`` (the
     spawned runner inherits the env) and append it to ``sys.path`` (so
-    this process never shadows site-packages).  Returns True when
-    ``google.protobuf.descriptor`` is importable after the attempt.
+    this process never shadows site-packages).  Where neither exists it
+    changes nothing, and a ``transformWithStateInPandas`` query then
+    fails when it starts its runner.
 
     MUST run before the first SparkSession is created in the process:
     the JVM captures its environment at launch and passes it to every
@@ -62,7 +63,7 @@ def enable_spark4_stateful_runner() -> bool:
         from google.protobuf import descriptor  # noqa: F401
     except ImportError:
         if not os.path.isdir(os.path.join(_PROTOBUF_FALLBACK_DIR, "google", "protobuf")):
-            return False
+            return
         existing = os.environ.get("PYTHONPATH", "")
         if _PROTOBUF_FALLBACK_DIR not in existing.split(os.pathsep):
             os.environ["PYTHONPATH"] = (
@@ -70,21 +71,16 @@ def enable_spark4_stateful_runner() -> bool:
             )
         if _PROTOBUF_FALLBACK_DIR not in sys.path:
             sys.path.append(_PROTOBUF_FALLBACK_DIR)
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-        except ImportError:
-            return False
         # the version-check escape hatch is for the VENDORED pure-Python
         # runtime's minor-version gap only — when a healthy site-packages
         # protobuf imported on the first try, leave the check on so a
         # genuine gencode/runtime incompatibility on a properly
         # provisioned cluster still fails loudly
         os.environ.setdefault("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true")
-    return True
 
 
 # import-time: the shim is only effective if it precedes JVM launch
-SPARK4_STATEFUL_AVAILABLE = enable_spark4_stateful_runner()
+enable_spark4_stateful_runner()
 
 
 def _with_worker_daemon(master: str, conf: dict[str, str]) -> dict[str, str]:
@@ -112,7 +108,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = os.environ.get("PANDASQLITE_SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        ncpu = os.cpu_count() or 8 if cpus == "*" else int(cpus)
+        ncpu = (os.cpu_count() or 8) if cpus == "*" else int(cpus)
         shuffle_partitions = max(8, ncpu)
 
     builder = (

@@ -17,6 +17,9 @@ helpers expose it.
 
 from __future__ import annotations
 
+import time
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -425,10 +428,33 @@ def q_events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFram
 
 _MEMSINK_SEQ = [0]
 
+# how long a finite query may take to drain to its memory sink before
+# it is stopped and the drain raises TimeoutError
+STREAM_DRAIN_TIMEOUT_S = 300
+
+
+def _await_drained(q, name: str, drained) -> None:
+    """Poll ``q`` until it ends or its last progress is ``drained``;
+    past ``STREAM_DRAIN_TIMEOUT_S``, stop it and raise TimeoutError."""
+    deadline = time.time() + STREAM_DRAIN_TIMEOUT_S
+    while q.isActive:
+        p = q.lastProgress
+        if p is not None and drained(p):
+            return
+        if time.time() >= deadline:
+            q.stop()
+            raise TimeoutError(
+                f"stream to memory sink {name!r} did not drain within "
+                f"{STREAM_DRAIN_TIMEOUT_S} s"
+            )
+        time.sleep(0.2)
+
 
 def run_stream_to_memory(agg: DataFrame, mode: str = "complete") -> tuple:
     """Drive a finite streaming query to completion against a memory
-    sink; returns (result_table_name, query)."""
+    sink; returns (result_table_name, query).  A failed query raises its
+    ``StreamingQueryException``; one that has not drained within
+    ``STREAM_DRAIN_TIMEOUT_S`` is stopped and raises ``TimeoutError``."""
     _MEMSINK_SEQ[0] += 1
     name = f"stream_result_{_MEMSINK_SEQ[0]}"
     q = (
@@ -448,17 +474,32 @@ def run_stream_to_memory(agg: DataFrame, mode: str = "complete") -> tuple:
     # completed batch consumed 0 input rows (the source is drained and
     # committed — only timer no-ops remain), then stop explicitly.
     # Timer-free queries simply self-terminate and exit the loop.
-    import time as _time
-
-    deadline = _time.time() + 300
-    while _time.time() < deadline and q.isActive:
-        p = q.lastProgress
-        if p is not None and p["numInputRows"] == 0:
-            break
-        _time.sleep(0.2)
+    _await_drained(q, name, lambda p: p["numInputRows"] == 0)
     q.stop()
     q.awaitTermination(60)
     return name, q
+
+
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+_STATE_STORE_CONF = "spark.sql.streaming.stateStore.providerClass"
+
+
+@contextmanager
+def _rocksdb_state_store(spark: SparkSession):
+    """Queries started inside use the RocksDB state store, whose column
+    families ``transformWithStateInPandas`` needs; the provider set
+    before is restored on exit."""
+    prev = spark.conf.get(_STATE_STORE_CONF, None)
+    spark.conf.set(_STATE_STORE_CONF, _ROCKSDB_PROVIDER)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_STATE_STORE_CONF)
+        else:
+            spark.conf.set(_STATE_STORE_CONF, prev)
 
 
 def run_stream_foreach_batch_parquet(df: DataFrame, out_dir: str) -> None:
@@ -638,53 +679,26 @@ def q_events_stateful_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # availableNow query alive forever (see user_profiles_stream)
     stream = user_profiles_stream(read_events_stream(spark, sf_dir), evict=False)
     name, _ = run_stream_to_memory(stream, mode="update")
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("last_ms").alias("last_ms"),
-        )
+    return _final_profiles(spark.table(name))
+
+
+def _final_profiles(updates: DataFrame) -> DataFrame:
+    return updates.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"), F.max("last_ms").alias("last_ms")
     )
 
 
 def q_events_stateful_profiles_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``events-stateful-profiles`` on Spark 4's
-    ``transformWithStateInPandas``, with the same final-state
-    reduction and the same oracle.  Falls back to the
-    applyInPandasWithState form when the streaming Python runner is
-    unavailable (same degradation contract as
-    ``events-streaming-pattern-tws``)."""
-    from pandasqlite_spark.session import SPARK4_STATEFUL_AVAILABLE
-    from pandasqlite_spark.streaming import stateful
+    ``transformWithStateInPandas`` over the RocksDB state store, with
+    the same final-state reduction and the same oracle.  Raises where
+    the streaming Python runner cannot start."""
+    from pandasqlite_spark.streaming.stateful import user_profiles_stream_tws
 
-    final = lambda name: (  # noqa: E731
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"), F.max("last_ms").alias("last_ms"))
-    )
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    if SPARK4_STATEFUL_AVAILABLE:
-        try:
-            prev = spark.conf.get(conf_key, None)
-            spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-            try:
-                stream = stateful.user_profiles_stream_tws(
-                    read_events_stream(spark, sf_dir)
-                )
-                name, q = run_stream_to_memory(stream, mode="update")
-                if q.exception() is None:
-                    return final(name)
-            finally:
-                if prev is None:
-                    spark.conf.unset(conf_key)
-                else:
-                    spark.conf.set(conf_key, prev)
-        except Exception:
-            pass
-    stream = stateful.user_profiles_stream(read_events_stream(spark, sf_dir), evict=False)
-    name, _ = run_stream_to_memory(stream, mode="update")
-    return final(name)
+    with _rocksdb_state_store(spark):
+        stream = user_profiles_stream_tws(read_events_stream(spark, sf_dir))
+        name, _ = run_stream_to_memory(stream, mode="update")
+    return _final_profiles(spark.table(name))
 
 
 def q_events_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -746,7 +760,6 @@ def q_events_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (kept within maxFileAge of the newest, else the source silently
     # ignores the older file).
     import shutil
-    import time as _t
 
     os.makedirs(in_dir, exist_ok=True)
     for frame, fname, age_s in (
@@ -762,7 +775,7 @@ def q_events_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         dest = os.path.join(in_dir, fname)
         shutil.move(os.path.join(side, part), dest)
-        t = _t.time() - age_s
+        t = time.time() - age_s
         os.utime(dest, (t, t))
     stream = (
         spark.readStream.schema("event_id bigint, us bigint")
@@ -780,8 +793,6 @@ def q_events_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emission of watermark-finalized windows happens in the FOLLOWING
     # (empty) batch — drive with a tight processing-time trigger and
     # stop only after a completed zero-input batch has flushed them.
-    import time as _time
-
     _MEMSINK_SEQ[0] += 1
     name = f"stream_result_{_MEMSINK_SEQ[0]}"
     q = (
@@ -791,15 +802,8 @@ def q_events_streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="0 seconds")
         .start()
     )
-    deadline = _time.time() + 300
-    while _time.time() < deadline and q.isActive:
-        p = q.lastProgress
-        if p is not None and p["numInputRows"] == 0 and p["batchId"] > 1:
-            q.stop()
-            break
-        _time.sleep(0.2)
-    if q.isActive:
-        q.stop()
+    _await_drained(q, name, lambda p: p["numInputRows"] == 0 and p["batchId"] > 1)
+    q.stop()
     q.awaitTermination(30)
     return spark.table(name).orderBy("win_start_us")
 
@@ -820,55 +824,21 @@ def q_events_streaming_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name).orderBy("user_id", "start_id")
 
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
 def q_events_streaming_pattern_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CEP pattern detector on Spark 4's
     ``transformWithStateInPandas`` (typed named state, RocksDB column
-    families) — the third implementation of the SAME click→purchase→
-    error contract, sharing the batch key's oracle like the
-    ``applyInPandasWithState`` twin.
+    families), sharing the batch key's oracle like the
+    ``applyInPandasWithState`` twin.  The new API needs the streaming
+    Python runner (google.protobuf — enabled process-wide by
+    ``session.enable_spark4_stateful_runner``); where it cannot start,
+    the drain raises the query's ``StreamingQueryException``."""
+    from pandasqlite_spark.streaming.stateful import sequence_match_stream_tws
 
-    The new API needs the streaming Python runner (google.protobuf —
-    enabled process-wide by ``session.enable_spark4_stateful_runner``)
-    and a column-family-capable state store, so the provider conf is
-    flipped to RocksDB for this query and restored after the drain.  If
-    the runner cannot start in the current environment the key degrades
-    to the applyInPandasWithState twin — the RESULT contract is
-    identical either way, and ``stateful.LAST_PATTERN_API`` records
-    which path served the run (tests assert "tws" so a silent
-    environment regression is caught)."""
-    from pandasqlite_spark.session import SPARK4_STATEFUL_AVAILABLE
-    from pandasqlite_spark.streaming import stateful
-
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    if SPARK4_STATEFUL_AVAILABLE:
-        try:
-            prev = spark.conf.get(conf_key, None)
-            spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-            try:
-                stream = stateful.sequence_match_stream_tws(
-                    drop_null_event_time(read_events_stream(spark, sf_dir))
-                )
-                name, q = run_stream_to_memory(stream, mode="append")
-                if q.exception() is None:
-                    stateful.LAST_PATTERN_API["api"] = "tws"
-                    return spark.table(name).orderBy("user_id", "start_id")
-            finally:
-                if prev is None:
-                    spark.conf.unset(conf_key)
-                else:
-                    spark.conf.set(conf_key, prev)
-        except Exception:
-            pass
-    stateful.LAST_PATTERN_API["api"] = "fallback"
-    stream = stateful.sequence_match_stream(
-        drop_null_event_time(read_events_stream(spark, sf_dir)), evict=False
-    )
-    name, _ = run_stream_to_memory(stream, mode="append")
+    with _rocksdb_state_store(spark):
+        stream = sequence_match_stream_tws(
+            drop_null_event_time(read_events_stream(spark, sf_dir))
+        )
+        name, _ = run_stream_to_memory(stream, mode="append")
     return spark.table(name).orderBy("user_id", "start_id")
 
 

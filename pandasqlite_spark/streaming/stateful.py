@@ -1,11 +1,20 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``.
+"""Custom stateful streaming operators, each one state machine run on
+two Spark APIs.
 
 The escape hatch for stateful semantics Spark's built-in windowed
 aggregations can't express (SURVEY.md §2.D): user-defined per-key state
-machines with timeout-based eviction.  Example operator: a per-user
-running profile (event count, value sum, last-seen) that emits an
-updated row per micro-batch and evicts idle users via processing-time
-timeout — the shape of sessionized feature-stores over event streams.
+machines.  Two operators run on both ``applyInPandasWithState`` (one
+positional state tuple per key, processing-time timeout eviction) and
+Spark 4's ``transformWithStateInPandas`` (typed, named ``ValueState``):
+
+- the per-user running profile (event count, value sum, last-seen):
+  one fold, :func:`_fold_profile`;
+- the click → purchase → error CEP detector carrying the last two
+  events per user: one step, :func:`_cep_step`.
+
+Both steps are pure pandas; each API wrapper only reads and writes its
+own state (and, on ``applyInPandasWithState``, handles the timeout).
+Last-touch attribution runs on ``applyInPandasWithState`` only.
 
 State is partitioned by key (one shuffle), bounded by eviction, and
 Arrow-batched per group — the scalable form of "custom operator" when
@@ -14,7 +23,7 @@ Arrow-batched per group — the scalable form of "custom operator" when
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.errors import PySparkRuntimeError
@@ -25,6 +34,22 @@ OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total double, last_ms bigint"
 STATE_SCHEMA = "n bigint, total double, last_ms bigint"
 
 
+def _fold_profile(
+    user_id: int, profile: tuple | None, pdfs: Iterable[pd.DataFrame]
+) -> tuple[tuple, pd.DataFrame]:
+    """Fold a batch into one user's (n, total, last_ms) profile;
+    returns the new profile and its output row."""
+    n, total, last_ms = (0, 0.0, 0) if profile is None else profile
+    for pdf in pdfs:
+        n += len(pdf)
+        total += float(pdf["value"].sum())
+        last_ms = max(last_ms, int(pdf["ms"].max()))
+    row = pd.DataFrame(
+        {"user_id": [user_id], "n_events": [n], "total": [total], "last_ms": [last_ms]}
+    )
+    return (n, total, last_ms), row
+
+
 def _update_profile(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
@@ -32,21 +57,15 @@ def _update_profile(
     if state.hasTimedOut:
         state.remove()
         return
-    n, total, last_ms = state.get if state.exists else (0, 0.0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-        last_ms = max(last_ms, int(pdf["ms"].max()))
-    state.update((n, total, last_ms))
+    profile, row = _fold_profile(user_id, state.get if state.exists else None, pdfs)
+    state.update(profile)
     try:
         state.setTimeoutDuration(60 * 60 * 1000)  # evict after 1h idle
     except PySparkRuntimeError:
         # NoTimeout runs (finite drains) reject timer registration —
         # eviction is a production-stream concern only
         pass
-    yield pd.DataFrame(
-        {"user_id": [user_id], "n_events": [n], "total": [total], "last_ms": [last_ms]}
-    )
+    yield row
 
 
 def user_profiles_stream(events: DataFrame, evict: bool = True) -> DataFrame:
@@ -87,70 +106,78 @@ CEP_STATE_SCHEMA = (
 _CEP_BOUND_US = 86_400 * 1_000_000  # pattern must complete within a day
 
 
+def _cep_step(
+    user_id: int, ctx: tuple | None, pdfs: Iterable[pd.DataFrame]
+) -> tuple[pd.DataFrame, tuple] | None:
+    """click → purchase → error (consecutive, ≤24h) over one batch of
+    one user's events; returns the matches and the new context, or
+    None for an empty batch (the context is then unchanged).
+
+    Vectorized inside the group: the carried last-2-events context
+    ``ctx`` is prepended to the (ts, event_id)-sorted batch, the three
+    pattern slots come from ``shift(2)/shift(1)/current``, and only rows
+    belonging to the new batch may END a match (carry rows are context
+    from prior batches — their matches were already emitted)."""
+    # materialize before concat: pd.concat([]) raises ValueError
+    dfs = list(pdfs)
+    if not dfs:
+        return None
+    batch = pd.concat(dfs, ignore_index=True)
+    if len(batch) == 0:
+        return None
+    batch = batch.sort_values(["us", "event_id"], ignore_index=True)
+    t1, us1, id1, t2, us2, id2 = (None, 0, 0, None, 0, 0) if ctx is None else ctx
+    carry = pd.DataFrame(
+        {"event_type": [t1, t2], "us": [us1, us2], "event_id": [id1, id2]}
+    ).dropna(subset=["event_type"])
+    rows = pd.concat([carry, batch], ignore_index=True)
+    p1us = rows["us"].shift(2)
+    mask = (
+        (rows["event_type"].shift(2) == "click")
+        & (rows["event_type"].shift(1) == "purchase")
+        & (rows["event_type"] == "error")
+        & (rows["us"] - p1us <= _CEP_BOUND_US)
+        & (rows.index >= len(carry))
+    )
+    tail = rows.tail(2)
+    tt = list(tail["event_type"])
+    tu = list(tail["us"].astype("int64"))
+    ti = list(tail["event_id"].astype("int64"))
+    if len(tail) == 2:
+        new_ctx = (tt[0], tu[0], ti[0], tt[1], tu[1], ti[1])
+    else:
+        new_ctx = (None, 0, 0, tt[0], tu[0], ti[0])
+    n_hits = int(mask.sum())
+    matches = pd.DataFrame(
+        {
+            # .to_numpy(): the masked series keep their original
+            # positional index — mixing them with a fresh 0..n-1
+            # index would misalign and NaN-pad the frame
+            "user_id": pd.Series([user_id] * n_hits, dtype="int64"),
+            "start_id": rows["event_id"].shift(2)[mask].astype("int64").to_numpy(),
+            "span_s": ((rows["us"][mask] - p1us[mask]) / 1_000_000.0).to_numpy(),
+        }
+    )
+    return matches, new_ctx
+
+
 def _detect_sequence(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """click → purchase → error (consecutive, ≤24h) per user.
-
-    Vectorized inside the group: the carried last-2-events context is
-    prepended to the (ts, event_id)-sorted batch, the three pattern
-    slots come from ``shift(2)/shift(1)/current``, and only rows
-    belonging to the new batch may END a match (carry rows are context
-    from prior batches — their matches were already emitted)."""
     (user_id,) = key
     if state.hasTimedOut:
         state.remove()
         return
-    dfs = list(pdfs)
-    if not dfs:  # pd.concat([]) raises before the empty-batch guard
+    step = _cep_step(user_id, state.get if state.exists else None, pdfs)
+    if step is None:
         return
-    batch = pd.concat(dfs, ignore_index=True)
-    if len(batch) == 0:
-        return
-    batch = batch.sort_values(["us", "event_id"], ignore_index=True)
-    t1, us1, id1, t2, us2, id2 = (
-        state.get if state.exists else (None, 0, 0, None, 0, 0)
-    )
-    carry = pd.DataFrame(
-        {
-            "event_type": [t1, t2],
-            "us": [us1, us2],
-            "event_id": [id1, id2],
-        }
-    ).dropna(subset=["event_type"])
-    rows = pd.concat([carry, batch], ignore_index=True)
-    p1t = rows["event_type"].shift(2)
-    p1us = rows["us"].shift(2)
-    p1id = rows["event_id"].shift(2)
-    p2t = rows["event_type"].shift(1)
-    is_new = rows.index >= len(carry)
-    mask = (
-        (p1t == "click")
-        & (p2t == "purchase")
-        & (rows["event_type"] == "error")
-        & (rows["us"] - p1us <= _CEP_BOUND_US)
-        & is_new
-    )
-    hits = rows[mask]
-    tail = rows.tail(2)
-    tt = list(tail["event_type"]) + [None, None]
-    tu = list(tail["us"].astype("int64")) + [0, 0]
-    ti = list(tail["event_id"].astype("int64")) + [0, 0]
-    if len(tail) == 2:
-        state.update((tt[0], tu[0], ti[0], tt[1], tu[1], ti[1]))
-    else:
-        state.update((None, 0, 0, tt[0], tu[0], ti[0]))
+    matches, ctx = step
+    state.update(ctx)
     try:
         state.setTimeoutDuration(24 * 60 * 60 * 1000)
     except PySparkRuntimeError:
         pass  # NoTimeout finite drains reject timer registration
-    yield pd.DataFrame(
-        {
-            "user_id": user_id,
-            "start_id": p1id[mask].astype("int64"),
-            "span_s": (rows["us"][mask] - p1us[mask]) / 1_000_000.0,
-        }
-    )
+    yield matches
 
 
 def sequence_match_stream(events: DataFrame, evict: bool = True) -> DataFrame:
@@ -250,22 +277,17 @@ def attribution_stream(events: DataFrame, evict: bool = True) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas: the CEP state machine on the new API
+# Spark 4 transformWithStateInPandas: the same steps on the new API
 # ---------------------------------------------------------------------------
-
-# which API actually served the last events-streaming-pattern-tws run —
-# "tws" (transformWithStateInPandas) or "fallback" (applyInPandasWithState).
-# Tests assert "tws" so a silent environment regression is visible.
-LAST_PATTERN_API: dict = {"api": None}
 
 
 def sequence_match_stream_tws(events: DataFrame) -> DataFrame:
     """The click→purchase→error detector of :func:`sequence_match_stream`
-    rebuilt on Spark 4's ``transformWithStateInPandas`` — the successor
-    API where state is TYPED and NAMED (a ``ValueState`` holding the
-    last-two-events context) instead of a single positional tuple, and
-    timers/TTL are first-class.  Same pattern semantics, same output
-    schema, same oracle as the applyInPandasWithState twin.
+    on Spark 4's ``transformWithStateInPandas`` — the successor API
+    where state is TYPED and NAMED (a ``ValueState`` holding the
+    last-two-events context) instead of a single positional tuple.
+    Same step (:func:`_cep_step`), output schema and oracle as the
+    applyInPandasWithState twin.
 
     Requires the streaming Python runner (google.protobuf — see
     ``session.enable_spark4_stateful_runner``) and a state store with
@@ -279,54 +301,12 @@ def sequence_match_stream_tws(events: DataFrame) -> DataFrame:
             self._ctx = handle.getValueState("ctx", CEP_STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            # materialize before concat: pd.concat([]) raises ValueError,
-            # and a timer-driven invocation (future timeMode) sends no rows
-            dfs = list(rows)
-            if not dfs:
+            step = _cep_step(key[0], self._ctx.get(), rows)
+            if step is None:
                 return
-            batch = pd.concat(dfs, ignore_index=True)
-            if len(batch) == 0:
-                return
-            batch = batch.sort_values(["us", "event_id"], ignore_index=True)
-            t1, us1, id1, t2, us2, id2 = (
-                self._ctx.get() if self._ctx.exists() else (None, 0, 0, None, 0, 0)
-            )
-            carry = pd.DataFrame(
-                {"event_type": [t1, t2], "us": [us1, us2], "event_id": [id1, id2]}
-            ).dropna(subset=["event_type"])
-            all_rows = pd.concat([carry, batch], ignore_index=True)
-            p1t = all_rows["event_type"].shift(2)
-            p1us = all_rows["us"].shift(2)
-            p1id = all_rows["event_id"].shift(2)
-            p2t = all_rows["event_type"].shift(1)
-            is_new = all_rows.index >= len(carry)
-            mask = (
-                (p1t == "click")
-                & (p2t == "purchase")
-                & (all_rows["event_type"] == "error")
-                & (all_rows["us"] - p1us <= _CEP_BOUND_US)
-                & is_new
-            )
-            tail = all_rows.tail(2)
-            tt = list(tail["event_type"])
-            tu = list(tail["us"].astype("int64"))
-            ti = list(tail["event_id"].astype("int64"))
-            if len(tail) == 2:
-                self._ctx.update((tt[0], tu[0], ti[0], tt[1], tu[1], ti[1]))
-            else:
-                self._ctx.update((None, 0, 0, tt[0], tu[0], ti[0]))
-            n_hits = int(mask.sum())
-            yield pd.DataFrame(
-                {
-                    # .to_numpy(): the masked series keep their original
-                    # positional index — mixing them with a fresh 0..n-1
-                    # index would misalign and NaN-pad the frame
-                    "user_id": pd.Series([user_id] * n_hits, dtype="int64"),
-                    "start_id": p1id[mask].astype("int64").to_numpy(),
-                    "span_s": ((all_rows["us"][mask] - p1us[mask]) / 1_000_000.0).to_numpy(),
-                }
-            )
+            matches, ctx = step
+            self._ctx.update(ctx)
+            yield matches
 
         def close(self):
             pass
@@ -342,44 +322,22 @@ def sequence_match_stream_tws(events: DataFrame) -> DataFrame:
     )
 
 
-def user_profiles_stream_tws(events: DataFrame, ttl_ms: int | None = None) -> DataFrame:
+def user_profiles_stream_tws(events: DataFrame) -> DataFrame:
     """:func:`user_profiles_stream` on Spark 4's
     ``transformWithStateInPandas``: the per-user (count, total,
-    last-seen) profile in a typed ValueState.  Unlike the
-    applyInPandasWithState form, eviction here is STATE-LEVEL TTL
-    (``getValueState(..., ttlDurationMs=...)``) rather than a
-    processing-time timer — so a finite availableNow drain terminates
-    normally even with eviction configured (the timer-based form had
-    to disable eviction for finite drains; see
-    ``user_profiles_stream``'s evict=False note)."""
+    last-seen) profile (:func:`_fold_profile`) in a typed ValueState.
+    No timer is registered, so a finite availableNow drain terminates."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming import StatefulProcessor
 
     class ProfileProcessor(StatefulProcessor):
         def init(self, handle):
-            if ttl_ms is None:
-                self._p = handle.getValueState("profile", STATE_SCHEMA)
-            else:
-                self._p = handle.getValueState("profile", STATE_SCHEMA, ttl_ms)
+            self._p = handle.getValueState("profile", STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            n, total, last_ms = (
-                self._p.get() if self._p.exists() else (0, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                last_ms = max(last_ms, int(pdf["ms"].max()))
-            self._p.update((n, total, last_ms))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total": [total],
-                    "last_ms": [last_ms],
-                }
-            )
+            profile, row = _fold_profile(key[0], self._p.get(), rows)
+            self._p.update(profile)
+            yield row
 
         def close(self):
             pass

@@ -22,6 +22,7 @@ Usage: python scripts/bench_stream.py [sf_dir] > BENCH_STREAM.json
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -31,87 +32,72 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from pandasqlite_spark.session import SPARK4_STATEFUL_AVAILABLE, get_spark  # noqa: E402
+from pandasqlite_spark.session import get_spark  # noqa: E402
 from pandasqlite_spark.streaming import stateful  # noqa: E402
 from pandasqlite_spark.streaming.events import (  # noqa: E402
-    _ROCKSDB_PROVIDER,
+    _rocksdb_state_store,
     read_events_stream,
     run_stream_to_memory,
     streaming_rate_limit,
     streaming_tumbling,
 )
 
-CONF_KEY = "spark.sql.streaming.stateStore.providerClass"
-
 
 def drain_and_measure(
     spark, build, mode: str, rocksdb: bool = False, meta: dict | None = None
 ) -> dict:
-    prev = spark.conf.get(CONF_KEY, None)
-    if rocksdb:
-        spark.conf.set(CONF_KEY, _ROCKSDB_PROVIDER)
-    try:
+    with _rocksdb_state_store(spark) if rocksdb else contextlib.nullcontext():
         t0 = time.perf_counter()
         name, q = run_stream_to_memory(build(), mode=mode)
         wall = time.perf_counter() - t0
-        if q.exception() is not None:
-            return {"err": str(q.exception())[:200]}
-        rows_in = 0
-        batch_ms = 0
-        state_rows = 0
-        state_bytes = 0
-        sst_bytes = 0
-        n_batches = 0
-        rows_by_batch: list[int] = []
-        for p in q.recentProgress:
-            rows_in += p.get("numInputRows", 0)
-            n_batches += 1
-            batch_ms += p.get("durationMs", {}).get("triggerExecution", 0)
-            batch_state = 0
-            for so in p.get("stateOperators", []):
-                batch_state = max(batch_state, so.get("numRowsTotal", 0))
-                state_rows = max(state_rows, so.get("numRowsTotal", 0))
-                state_bytes = max(state_bytes, so.get("memoryUsedBytes", 0))
-                cm = so.get("customMetrics", {})
-                sst_bytes = max(sst_bytes, cm.get("rocksdbSstFileSize", 0))
-            if p.get("numInputRows", 0) or batch_state:
-                rows_by_batch.append(batch_state)
-        out_rows = spark.table(name).count()
-        rec = {
-            "rows_in": rows_in,
-            "rows_out": out_rows,
-            "n_batches": n_batches,
-            "wall_s": round(wall, 2),
-            "batch_ms": batch_ms,
-            "events_per_s": round(rows_in / (batch_ms / 1000.0), 0)
-            if batch_ms
-            else None,
-            "state_rows_peak": state_rows,
-            "state_bytes_peak": state_bytes,
-            # per-batch state-row series: the plateau/eviction datum a
-            # single-batch drain cannot show (round-5 verdict #2)
-            "state_rows_by_batch": rows_by_batch,
-        }
-        if rocksdb:
-            rec["rocksdb_sst_bytes"] = sst_bytes
-        # self-describing config (round-6 verdict #3: the JSON rows
-        # omitted evict/mode, so the artifact couldn't say which
-        # configuration ran) + the micro-batch sizing datum
-        rec["mode"] = mode
-        rec["rocksdb"] = rocksdb
-        if n_batches:
-            rec["rows_per_batch"] = round(rows_in / n_batches)
-        if meta:
-            rec.update(meta)
-        return rec
-    finally:
-        if prev is None:
-            try:
-                spark.conf.unset(CONF_KEY)
-            except Exception:
-                pass
-        else:
-            spark.conf.set(CONF_KEY, prev)
+    rows_in = 0
+    batch_ms = 0
+    state_rows = 0
+    state_bytes = 0
+    sst_bytes = 0
+    n_batches = 0
+    rows_by_batch: list[int] = []
+    for p in q.recentProgress:
+        rows_in += p.get("numInputRows", 0)
+        n_batches += 1
+        batch_ms += p.get("durationMs", {}).get("triggerExecution", 0)
+        batch_state = 0
+        for so in p.get("stateOperators", []):
+            batch_state = max(batch_state, so.get("numRowsTotal", 0))
+            state_rows = max(state_rows, so.get("numRowsTotal", 0))
+            state_bytes = max(state_bytes, so.get("memoryUsedBytes", 0))
+            cm = so.get("customMetrics", {})
+            sst_bytes = max(sst_bytes, cm.get("rocksdbSstFileSize", 0))
+        if p.get("numInputRows", 0) or batch_state:
+            rows_by_batch.append(batch_state)
+    out_rows = spark.table(name).count()
+    rec = {
+        "rows_in": rows_in,
+        "rows_out": out_rows,
+        "n_batches": n_batches,
+        "wall_s": round(wall, 2),
+        "batch_ms": batch_ms,
+        "events_per_s": round(rows_in / (batch_ms / 1000.0), 0)
+        if batch_ms
+        else None,
+        "state_rows_peak": state_rows,
+        "state_bytes_peak": state_bytes,
+        # per-batch state-row series: the plateau/eviction datum a
+        # single-batch drain cannot show (round-5 verdict #2)
+        "state_rows_by_batch": rows_by_batch,
+    }
+    if rocksdb:
+        rec["rocksdb_sst_bytes"] = sst_bytes
+    # self-describing config (round-6 verdict #3: the JSON rows
+    # omitted evict/mode, so the artifact couldn't say which
+    # configuration ran) + the micro-batch sizing datum
+    rec["mode"] = mode
+    rec["rocksdb"] = rocksdb
+    if n_batches:
+        rec["rows_per_batch"] = round(rows_in / n_batches)
+    if meta:
+        rec.update(meta)
+    return rec
 
 
 def stage_time_ordered_files(spark, sf_dir: str, n_files: int, staging: str) -> None:
@@ -203,27 +189,24 @@ def main() -> int:
                 mode="append",
             ),
         ),
+        # transformWithStateInPandas + RocksDB twins
+        (
+            "stateful-profiles-tws",
+            dict(
+                build=lambda: stateful.user_profiles_stream_tws(src()),
+                mode="update",
+                rocksdb=True,
+            ),
+        ),
+        (
+            "streaming-pattern-tws",
+            dict(
+                build=lambda: stateful.sequence_match_stream_tws(src()),
+                mode="append",
+                rocksdb=True,
+            ),
+        ),
     ]
-    if SPARK4_STATEFUL_AVAILABLE:
-        benches += [
-            # transformWithStateInPandas + RocksDB twins
-            (
-                "stateful-profiles-tws",
-                dict(
-                    build=lambda: stateful.user_profiles_stream_tws(src()),
-                    mode="update",
-                    rocksdb=True,
-                ),
-            ),
-            (
-                "streaming-pattern-tws",
-                dict(
-                    build=lambda: stateful.sequence_match_stream_tws(src()),
-                    mode="append",
-                    rocksdb=True,
-                ),
-            ),
-        ]
 
     results = {}
     for key, kw in benches:
@@ -270,26 +253,23 @@ def main() -> int:
                 rocksdb=True,
             ),
         ),
+        (
+            "mb-stateful-profiles-tws",
+            dict(
+                build=lambda: stateful.user_profiles_stream_tws(msrc()),
+                mode="update",
+                rocksdb=True,
+            ),
+        ),
+        (
+            "mb-streaming-pattern-tws",
+            dict(
+                build=lambda: stateful.sequence_match_stream_tws(msrc()),
+                mode="append",
+                rocksdb=True,
+            ),
+        ),
     ]
-    if SPARK4_STATEFUL_AVAILABLE:
-        mb += [
-            (
-                "mb-stateful-profiles-tws",
-                dict(
-                    build=lambda: stateful.user_profiles_stream_tws(msrc()),
-                    mode="update",
-                    rocksdb=True,
-                ),
-            ),
-            (
-                "mb-streaming-pattern-tws",
-                dict(
-                    build=lambda: stateful.sequence_match_stream_tws(msrc()),
-                    mode="append",
-                    rocksdb=True,
-                ),
-            ),
-        ]
     for key, kw in mb:
         print(f"BENCH {key}", file=sys.stderr, flush=True)
         results[key] = drain_and_measure(

@@ -503,3 +503,20 @@ def test_parse_json_swallows_only_missing_or_bad_json():
     assert _parse_json("{a: 1}", {}) == {}  # JSONDecodeError
     with pytest.raises(AttributeError):  # not a reply at all: raised
         _parse_json(None, {})
+
+
+def test_get_spark_sizes_shuffle_partitions_from_spark_graft_cpus(spark, monkeypatch):
+    """``SPARK_GRAFT_CPUS`` (not the host's core count) sizes the
+    shuffle partitions: max(8, cpus)."""
+    import os
+
+    from pandasqlite_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    monkeypatch.setattr(os, "cpu_count", lambda: 64)
+    try:
+        assert get_spark().conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, before)

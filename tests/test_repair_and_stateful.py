@@ -246,21 +246,66 @@ def test_streaming_cep_matches_across_batch_boundary():
 
 
 def test_streaming_pattern_tws_uses_spark4_api(spark, sf_dir):
-    """events-streaming-pattern-tws must be served by
-    transformWithStateInPandas in this environment (the vendored-
-    protobuf shim + RocksDB provider make it runnable); a silent
-    degradation to the applyInPandasWithState fallback fails here even
-    though the RESULT contract is identical."""
-    from pandasqlite_spark.streaming import stateful
+    """events-streaming-pattern-tws (transformWithStateInPandas) returns
+    the rows of its applyInPandasWithState twin."""
     from pandasqlite_spark.streaming.events import (
         q_events_streaming_pattern,
         q_events_streaming_pattern_tws,
     )
 
     tws = q_events_streaming_pattern_tws(spark, sf_dir).collect()
-    assert stateful.LAST_PATTERN_API["api"] == "tws"
     legacy = q_events_streaming_pattern(spark, sf_dir).collect()
     assert [tuple(r) for r in tws] == [tuple(r) for r in legacy]
+
+
+@pytest.mark.parametrize(
+    "key", ["q_events_stateful_profiles_tws", "q_events_streaming_pattern_tws"]
+)
+def test_tws_keys_raise_instead_of_falling_back(spark, sf_dir, monkeypatch, key):
+    """A state store without column families fails the
+    transformWithStateInPandas query, and the key raises that failure
+    rather than answering from another API; the provider conf set
+    before the key ran is restored."""
+    from pyspark.errors import StreamingQueryException
+
+    from pandasqlite_spark.streaming import events
+
+    monkeypatch.setattr(
+        events,
+        "_ROCKSDB_PROVIDER",
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    )
+    conf_key = "spark.sql.streaming.stateStore.providerClass"
+    before = spark.conf.get(conf_key, None)
+    with pytest.raises(StreamingQueryException):
+        getattr(events, key)(spark, sf_dir).collect()
+    assert spark.conf.get(conf_key, None) == before
+
+
+def test_package_catches_no_broad_exception():
+    """No handler in the package is a bare ``except:`` or catches
+    ``Exception``/``BaseException``: every failure it does not expect
+    reaches the caller."""
+    import ast
+    from pathlib import Path
+
+    import pandasqlite_spark
+
+    broad = {"Exception", "BaseException"}
+    found = []
+    root = Path(pandasqlite_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.ExceptHandler):
+                continue
+            types = node.type.elts if isinstance(node.type, ast.Tuple) else [node.type]
+            names = {
+                t.id if isinstance(t, ast.Name) else getattr(t, "attr", None)
+                for t in types
+            }
+            if node.type is None or names & broad:
+                found.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert found == []
 
 
 def test_repair_loop_on_realistic_transcript(spark):

@@ -206,7 +206,7 @@ def _canon_rows(df):
 def test_cep_twins_arrival_order_proof(spark, sf_dir, tmp_path, seed):
     from pandasqlite_spark.streaming import stateful
     from pandasqlite_spark.streaming.events import (
-        _ROCKSDB_PROVIDER,
+        _rocksdb_state_store,
         q_events_streaming_pattern,
         run_stream_to_memory,
     )
@@ -220,22 +220,10 @@ def test_cep_twins_arrival_order_proof(spark, sf_dir, tmp_path, seed):
     assert _canon_rows(spark.table(name)) == want
 
     # transformWithStateInPandas twin (RocksDB column families)
-    from pandasqlite_spark.session import SPARK4_STATEFUL_AVAILABLE
-
-    if SPARK4_STATEFUL_AVAILABLE:
-        conf_key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-        try:
-            stream = stateful.sequence_match_stream_tws(_stream_from(spark, src))
-            name, q = run_stream_to_memory(stream, mode="append")
-            assert q.exception() is None
-            assert _canon_rows(spark.table(name)) == want
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
+    with _rocksdb_state_store(spark):
+        stream = stateful.sequence_match_stream_tws(_stream_from(spark, src))
+        name, _ = run_stream_to_memory(stream, mode="append")
+    assert _canon_rows(spark.table(name)) == want
 
 
 @pytest.mark.parametrize("seed", [101, 202])
@@ -259,3 +247,23 @@ def test_attribution_rate_limit_arrival_order_proof(spark, sf_dir, tmp_path, see
     agg = streaming_rate_limit(_stream_from(spark, src))
     name, _ = run_stream_to_memory(agg, mode="complete")
     assert _canon_rows(spark.table(name)) == want_rl
+
+
+def test_drain_past_its_deadline_raises(spark, sf_dir, monkeypatch):
+    """A query still running at the drain deadline is stopped and the
+    drain raises TimeoutError naming its memory sink, instead of
+    returning a partial table."""
+    import time
+
+    from pandasqlite_spark.streaming import events
+
+    def slow(batches):
+        for pdf in batches:
+            time.sleep(3)
+            yield pdf
+
+    monkeypatch.setattr(events, "STREAM_DRAIN_TIMEOUT_S", 0.5)
+    stream = read_events_stream(spark, sf_dir).select("event_id")
+    with pytest.raises(TimeoutError, match="stream_result_"):
+        run_stream_to_memory(stream.mapInPandas(slow, "event_id bigint"), mode="append")
+    assert spark.streams.active == []

@@ -67,8 +67,6 @@ def test_python_surfaces_run_outside_repo_on_plain_sessions(spark, sf_dir, tmp_p
     it, and its workers keep the stock daemon."""
     import __spark_entry__ as entrymod
 
-    from pandasqlite_spark.streaming import stateful
-
     script = tmp_path / "drive.py"
     script.write_text(
         textwrap.dedent(
@@ -80,7 +78,6 @@ def test_python_surfaces_run_outside_repo_on_plain_sessions(spark, sf_dir, tmp_p
             import pandasqlite_spark
             import __spark_entry__ as entrymod
             from pyspark.sql import SparkSession
-            from pandasqlite_spark.streaming import stateful
 
             spark = (
                 SparkSession.builder.master("local[2]")
@@ -105,7 +102,6 @@ def test_python_surfaces_run_outside_repo_on_plain_sessions(spark, sf_dir, tmp_p
             queries = entrymod.queries()
             for key in {SURFACE_KEYS!r}:
                 queries[key](spark, {sf_dir!r}).toPandas().to_pickle(key + ".pkl")
-            print(stateful.LAST_PATTERN_API["api"])
             """
         )
     )
@@ -131,8 +127,6 @@ def test_python_surfaces_run_outside_repo_on_plain_sessions(spark, sf_dir, tmp_p
         assert code == 0, f"{cwd.name}: {err[-4000:]}"
         # a plain session, reused or not, runs the stock worker daemon
         assert out.strip().splitlines()[0] == "zipimporter.invalidate_caches", out
-        # the Spark 4 API served the pattern key, not its fallback twin
-        assert out.strip().splitlines()[-1] == "tws"
 
     queries = entrymod.queries()
     for key in SURFACE_KEYS:
@@ -141,7 +135,6 @@ def test_python_surfaces_run_outside_repo_on_plain_sessions(spark, sf_dir, tmp_p
         for cwd, *_ in outs:
             got = pd.read_pickle(cwd / f"{key}.pkl")
             assert compare_frames(got, want) == [], (cwd.name, key)
-    assert stateful.LAST_PATTERN_API["api"] == "tws"
 
 
 def _shipped_calls() -> dict:
