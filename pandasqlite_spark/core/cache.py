@@ -12,6 +12,15 @@ data as hash-named parquet directories — so a cache hit re-registers
 parquet (a metadata operation) instead of re-writing data.  Parquet
 keeps the 100 TB path open: partitioned, column-pruned, predicate-
 pushdown-friendly storage instead of a single SQLite file.
+
+Every ingested view is registered by :func:`register_view`.  A table
+whose scan already plans one partition is registered as
+``coalesce(1)`` of that scan, which Catalyst knows to be a single
+partition: an aggregate, GROUP BY or ORDER BY over it needs no
+Exchange, so a question over a small table runs as one Spark job
+instead of one per AQE stage plus a range sample.  Filters and
+column pruning still reach the scan.  A table that scans as two or
+more partitions is registered as it is.
 """
 
 from __future__ import annotations
@@ -58,8 +67,17 @@ def save_table(df: DataFrame, frame_hash: str) -> str:
     return str(path)
 
 
-def register_table(spark: SparkSession, frame_hash: str) -> DataFrame:
-    """Re-register a cached table as a temp view named by its hash."""
-    df = spark.read.parquet(str(table_path(frame_hash)))
+def register_view(df: DataFrame, frame_hash: str) -> DataFrame:
+    """Register ``df`` as the temp view named by its hash and return the
+    registered frame: ``df.coalesce(1)`` when ``df`` already plans one
+    partition (the scan is unchanged; Catalyst then sees a single
+    partition), ``df`` itself otherwise."""
+    if df.rdd.getNumPartitions() == 1:
+        df = df.coalesce(1)
     df.createOrReplaceTempView(f"`{frame_hash}`")
     return df
+
+
+def register_table(spark: SparkSession, frame_hash: str) -> DataFrame:
+    """Re-register a cached table as a temp view named by its hash."""
+    return register_view(spark.read.parquet(str(table_path(frame_hash))), frame_hash)

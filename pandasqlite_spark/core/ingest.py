@@ -7,8 +7,8 @@ Spark-native re-expression of the reference's ``ingest`` (reference
 2. batch content hash (``:74-76``) — distributed here (SURVEY.md §1.3)
 3. cache probe; hit ⇒ re-register cached tables and return (``:81-86``)
 4. per frame: sanitize column names (``:94``), frame hash = table name
-   (``:97-99``), materialize (``:114-115``; here: parquet +
-   ``createOrReplaceTempView``), DDL (``:116-121``; rendered from
+   (``:97-99``), materialize (``:114-115``; here: parquet + a temp
+   view, ``cache.register_view``), DDL (``:116-121``; rendered from
    ``df.schema``), 5-value snapshot (``:126``), LLM column types /
    column descriptions / enum values + descriptions / SQL curriculum
    (``:129-171``)
@@ -20,6 +20,12 @@ moves through the driver); storage is parquet, not SQLite; no implicit
 pandas ``index`` column is added (the reference inherits it from
 ``to_sql``; it carries no information and would poison dedup/hashing at
 scale — ``with_index=True`` restores it for strict fidelity).
+
+A pandas input already lives in the driver, so it is made one
+partition and stored as one parquet file, as the reference stores it
+in one SQLite file.  Every view (persisted, re-opened or not) is
+registered by ``cache.register_view``, which coalesces it to one
+partition only when its scan already plans one.
 """
 
 from __future__ import annotations
@@ -55,7 +61,7 @@ def _to_spark(spark: SparkSession, obj: FrameLike, with_index: bool) -> tuple[Da
         pdf = obj.reset_index() if with_index else obj
         if with_index:
             pdf = pdf.rename(columns={pdf.columns[0]: "index"})
-        return spark.createDataFrame(pdf), h
+        return spark.createDataFrame(pdf).coalesce(1), h
     if isinstance(obj, DataFrame):
         return obj, None
     if isinstance(obj, str):
@@ -130,7 +136,7 @@ def ingest(
             _cache.save_table(sdf, frame_hash)
             sdf = _cache.register_table(spark, frame_hash)
         else:
-            sdf.createOrReplaceTempView(f"`{frame_hash}`")
+            sdf = _cache.register_view(sdf, frame_hash)
 
         ddl = render_create_table(frame_hash, sdf.schema)
         samples = snapshot_data(sdf)

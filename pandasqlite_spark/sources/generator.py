@@ -234,10 +234,12 @@ def q_scan_python_stream_source(spark, sf_dir: str):
     batches), and the appended union must equal the batch-regenerable
     row set — proving offset bookkeeping and replay determinism, not
     just row generation.  The aggregation collapses the arrival order
-    so the check is batching-invariant."""
-    import time
-
+    so the check is batching-invariant.  A stream that has not drained
+    within ``STREAM_DRAIN_TIMEOUT_S`` is stopped and raises
+    ``TimeoutError``."""
     from pyspark.sql import functions as F
+
+    from pandasqlite_spark.streaming.events import _await_drained
 
     register(spark)
     df = (
@@ -257,15 +259,8 @@ def q_scan_python_stream_source(spark, sf_dir: str):
         .trigger(processingTime="0 seconds")
         .start()
     )
-    deadline = time.time() + 120
-    while time.time() < deadline and q.isActive:
-        p = q.lastProgress
-        if p is not None and p["numInputRows"] == 0 and p["batchId"] > 0:
-            q.stop()
-            break
-        time.sleep(0.2)
-    if q.isActive:
-        q.stop()
+    _await_drained(q, name, lambda p: p["numInputRows"] == 0 and p["batchId"] > 0)
+    q.stop()
     q.awaitTermination(30)
     return (
         spark.table(name)

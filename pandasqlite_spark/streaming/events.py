@@ -508,7 +508,9 @@ def run_stream_foreach_batch_parquet(df: DataFrame, out_dir: str) -> None:
     parquet partitioned by batch id) becomes a streaming sink.
     Exactly-once comes from the checkpoint (batch ids replay
     deterministically) + an idempotent write (mode=overwrite into the
-    batch's own directory)."""
+    batch's own directory).  A query still running after
+    ``STREAM_DRAIN_TIMEOUT_S`` is stopped and raises ``TimeoutError``,
+    so no caller reads a directory that is still being written."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
@@ -519,7 +521,12 @@ def run_stream_foreach_batch_parquet(df: DataFrame, out_dir: str) -> None:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    if not q.awaitTermination(STREAM_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"foreachBatch stream to {out_dir!r} did not finish within "
+            f"{STREAM_DRAIN_TIMEOUT_S} s"
+        )
 
 
 def q_events_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -331,6 +331,83 @@ def test_ingest_cache_roundtrip(spark, tmp_path, monkeypatch):
     assert spark.table(f"`{res3[0]['hash']}`").count() == 2
 
 
+# --- a question over a one-partition ingested table is one Spark job:
+# the view is registered as a single partition, so its aggregate and
+# ORDER BY plan no Exchange, and the filter still reaches the scan ------
+
+_ASK_SQL = "SELECT k, COUNT(*) AS n, SUM(v) AS s FROM {t} WHERE v > 10 GROUP BY k ORDER BY k"
+
+
+def _ask_frame() -> pd.DataFrame:
+    return pd.DataFrame({"k": [f"k{i % 7}" for i in range(300)], "v": list(range(300))})
+
+
+def _plain_answer(spark, path: str) -> list:
+    spark.read.parquet(path).createOrReplaceTempView("plain_ask_t")
+    return spark.sql(_ASK_SQL.format(t="plain_ask_t")).collect()
+
+
+def _ask_counted(spark, results: list[dict]) -> tuple[list, int, str]:
+    """(rows, Spark jobs, executed plan) of one GROUP BY ... ORDER BY
+    question through ``run_with_repair``, its jobs counted by job group."""
+    import uuid
+
+    from pandasqlite_spark.core.text2sql import run_with_repair
+
+    question = "How many rows above 10 has each k, and what is their sum?"
+    sql = _ASK_SQL.format(t=f"`{results[0]['hash']}`")
+    sc = spark.sparkContext
+    group = f"ask-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df = run_with_repair(spark, question, results, FakeLLM({question: sql}))
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return rows, jobs, df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "source, persist, reopen",
+    [("parquet", True, False), ("pandas", True, False), ("parquet", False, False), ("parquet", True, True)],
+    ids=["parquet-persist", "pandas-persist", "parquet-no-persist", "reopen-by-hash"],
+)
+def test_ask_over_one_partition_table_runs_as_one_job(spark, tmp_path, monkeypatch, source, persist, reopen):
+    from pandasqlite_spark.core import cache
+    from pandasqlite_spark.core.ingest import ingest
+
+    monkeypatch.setenv(cache.ENV_VAR, str(tmp_path / "cache"))
+    pdf = _ask_frame()
+    path = str(tmp_path / "t.parquet")
+    pdf.to_parquet(path, index=False)
+    results, _, batch_hash = ingest(spark, [pdf if source == "pandas" else path], FakeLLM(), persist=persist)
+    if reopen:
+        spark.catalog.dropTempView(results[0]["hash"])
+        results, _, _ = ingest(spark, batch_hash)
+
+    rows, jobs, plan = _ask_counted(spark, results)
+    assert jobs == 1, plan
+    assert "Exchange" not in plan
+    assert "PushedFilters: [IsNotNull(v), GreaterThan(v,10)]" in plan, plan
+    assert rows == _plain_answer(spark, path)
+
+
+def test_ask_over_four_file_table_keeps_its_exchange(spark, tmp_path, monkeypatch):
+    """A table that scans as several partitions is registered as it is."""
+    from pandasqlite_spark.core import cache
+    from pandasqlite_spark.core.ingest import ingest
+
+    monkeypatch.setenv(cache.ENV_VAR, str(tmp_path / "cache"))
+    path = str(tmp_path / "four")
+    spark.createDataFrame(_ask_frame()).repartition(4).write.parquet(path)
+    results, _, _ = ingest(spark, [path], FakeLLM(), persist=True)
+
+    rows, _, plan = _ask_counted(spark, results)
+    assert "Exchange" in plan
+    assert rows == _plain_answer(spark, path)
+
+
 # --- property tests: the dialect rewriter must be safe to re-apply and
 # must not disturb SQL that is already Spark-clean ---------------------------
 

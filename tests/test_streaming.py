@@ -267,3 +267,37 @@ def test_drain_past_its_deadline_raises(spark, sf_dir, monkeypatch):
     with pytest.raises(TimeoutError, match="stream_result_"):
         run_stream_to_memory(stream.mapInPandas(slow, "event_id bigint"), mode="append")
     assert spark.streams.active == []
+
+
+def test_python_stream_source_past_its_deadline_raises(spark, sf_dir, monkeypatch):
+    """``scan-python-stream-source`` drains through ``_await_drained``:
+    past the deadline its query is stopped and TimeoutError names its
+    memory sink, instead of a partial ``stream_pyds_result`` table."""
+    from pandasqlite_spark.sources.generator import q_scan_python_stream_source
+    from pandasqlite_spark.streaming import events
+
+    monkeypatch.setattr(events, "STREAM_DRAIN_TIMEOUT_S", 0)
+    with pytest.raises(TimeoutError, match="stream_pyds_result"):
+        q_scan_python_stream_source(spark, sf_dir)
+    assert spark.streams.active == []
+
+
+def test_foreach_batch_parquet_past_its_deadline_raises(spark, sf_dir, monkeypatch, tmp_path):
+    """A foreachBatch query still writing at the deadline is stopped and
+    raises TimeoutError naming its output directory, instead of being
+    left running while the caller reads a partial directory."""
+    import time
+
+    from pandasqlite_spark.streaming import events
+
+    def slow(batches):
+        for pdf in batches:
+            time.sleep(3)
+            yield pdf
+
+    monkeypatch.setattr(events, "STREAM_DRAIN_TIMEOUT_S", 0.5)
+    out = str(tmp_path / "sink")
+    stream = read_events_stream(spark, sf_dir).select("event_id")
+    with pytest.raises(TimeoutError, match="sink"):
+        events.run_stream_foreach_batch_parquet(stream.mapInPandas(slow, "event_id bigint"), out)
+    assert spark.streams.active == []
