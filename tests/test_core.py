@@ -408,6 +408,34 @@ def test_ask_over_four_file_table_keeps_its_exchange(spark, tmp_path, monkeypatc
     assert rows == _plain_answer(spark, path)
 
 
+@pytest.mark.parametrize("cached", [False, True], ids=["shuffled", "cached-shuffled"])
+def test_register_view_of_a_shuffled_frame_runs_no_job(spark, cached):
+    """A frame whose plan has an exchange, or reads a cached relation that
+    has one, is registered as it is, without running that exchange to
+    count its partitions."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from pandasqlite_spark.core import cache
+
+    df = spark.range(100_000).groupBy((F.col("id") % 5).alias("k")).count()
+    if cached:
+        df = df.cache()
+    sc = spark.sparkContext
+    group = f"register-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        registered = cache.register_view(df, "shuffled_view_t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert registered is df
+    assert spark.table("shuffled_view_t").count() == 5
+    if cached:
+        df.unpersist()
+
+
 # --- property tests: the dialect rewriter must be safe to re-apply and
 # must not disturb SQL that is already Spark-clean ---------------------------
 
