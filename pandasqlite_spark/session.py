@@ -25,6 +25,23 @@ task's CPU.  Only local masters get it, because only there is this
 package's directory known to exist on the executors.  A session that is
 already active when ``get_spark`` is called (``getOrCreate``), such as
 the external driver's own, keeps the daemon it was started with.
+
+Py4J transport: after ``getOrCreate`` every ``get_spark`` call sets
+``TCP_NODELAY`` on the JVM end of the calling thread's Py4J connection.
+Py4J's JVM side writes an answer longer than its 8 KB buffer in two
+writes; with Nagle's algorithm on, the second write waits for the ACK of
+the first, and the Python side delays that ACK by the kernel's 40 ms
+minimum.  On a 4-vCPU Linux host a JVM string of 8,150 chars came back
+in under 1 ms and one of 8,200 chars in 44 ms.  The answer that hits
+this most is the JVM stack trace PySpark fetches for every failed call
+(11 KB for an analysis error), so a ``spark.sql`` that fails analysis,
+the repair loop's signal, took 60 ms instead of 14 ms.  Only the
+bytes' timing changes, never the bytes.  The option is per connection
+and set only under PySpark's default pinned-thread mode (py4j's
+``ClientServer``), where each Python thread has its own connection: the
+thread that calls ``get_spark`` gets it, and any other Python thread
+that drives the session keeps Nagle on until it calls ``get_spark``
+itself.  Under the older ``JavaGateway`` transport nothing is set.
 """
 
 from __future__ import annotations
@@ -32,6 +49,8 @@ from __future__ import annotations
 import os
 import sys
 
+from py4j.clientserver import ClientServer
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # A known location of a PURE-PYTHON google.protobuf (Apache-2.0, vendored
@@ -95,6 +114,17 @@ def _with_worker_daemon(master: str, conf: dict[str, str]) -> dict[str, str]:
     return conf
 
 
+def _set_tcp_nodelay(sc: SparkContext) -> None:
+    """Turn off Nagle on the JVM end of the calling thread's Py4J
+    connection (see the module docstring); a no-op unless the gateway is
+    py4j's pinned-thread ``ClientServer`` and the thread has a connection."""
+    if not isinstance(sc._gateway, ClientServer):
+        return
+    conn = sc._gateway.java_gateway_server.getCallbackClient().getPerThreadConnection()
+    if conn is not None:
+        conn.getSocket().setTcpNoDelay(True)
+
+
 def get_spark(
     app_name: str = "pandasqlite_spark",
     shuffle_partitions: int | None = None,
@@ -104,6 +134,12 @@ def get_spark(
 
     ``SPARK_GRAFT_CPUS`` (driver contract) sets local parallelism;
     defaults to all cores.
+
+    Every call also sets ``TCP_NODELAY`` on the JVM end of the calling
+    thread's Py4J connection, so a JVM answer over 8 KB (such as the
+    stack trace of a failed analysis) does not wait 40 ms for a delayed
+    ACK.  Only that thread's connection is covered: a Python thread that
+    drives the session without calling ``get_spark`` keeps Nagle on.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = os.environ.get("PANDASQLITE_SPARK_MASTER", f"local[{cpus}]")
@@ -133,4 +169,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _set_tcp_nodelay(spark.sparkContext)
     return spark

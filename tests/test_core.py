@@ -625,3 +625,55 @@ def test_get_spark_sizes_shuffle_partitions_from_spark_graft_cpus(spark, monkeyp
         assert get_spark().conf.get(key) == "8"
     finally:
         spark.conf.set(key, before)
+
+
+def _py4j_connection(spark):
+    """The JVM end of the calling thread's Py4J connection."""
+    gateway = spark.sparkContext._gateway
+    return gateway.java_gateway_server.getCallbackClient().getPerThreadConnection()
+
+
+def test_get_spark_turns_off_nagle_on_the_callers_py4j_connection(spark):
+    from pandasqlite_spark.session import get_spark
+
+    assert _py4j_connection(get_spark()).getSocket().getTcpNoDelay() is True
+
+
+def test_py4j_answer_over_8kb_does_not_wait_for_a_delayed_ack(spark):
+    """Py4J's JVM side sends an answer over its 8 KB buffer in two
+    writes; with Nagle on, the second waits out the 40 ms delayed ACK."""
+    import statistics
+    import time
+
+    from pandasqlite_spark.session import get_spark
+
+    string_utils = get_spark().sparkContext._jvm.org.apache.commons.lang3.StringUtils
+    times_ms = []
+    for _ in range(5):
+        t0 = time.perf_counter()
+        assert len(string_utils.repeat("x", 9000)) == 9000
+        times_ms.append((time.perf_counter() - t0) * 1e3)
+    assert statistics.median(times_ms) < 20, times_ms
+
+
+def test_get_spark_in_another_thread_sets_nagle_off_on_that_threads_connection(spark):
+    """Each Python thread has its own Py4J connection; a thread keeps
+    Nagle on until it calls ``get_spark`` itself."""
+    import threading
+
+    from pandasqlite_spark.session import get_spark
+
+    main_conn = _py4j_connection(get_spark())
+    seen = {}
+
+    def worker():
+        conn = _py4j_connection(spark)
+        seen["own_connection"] = not conn.equals(main_conn)
+        seen["before"] = conn.getSocket().getTcpNoDelay()
+        seen["after"] = _py4j_connection(get_spark()).getSocket().getTcpNoDelay()
+
+    t = threading.Thread(target=worker)
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive()
+    assert seen == {"own_connection": True, "before": False, "after": True}
