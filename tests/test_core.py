@@ -641,8 +641,9 @@ def test_get_spark_turns_off_nagle_on_the_callers_py4j_connection(spark):
 
 def test_py4j_answer_over_8kb_does_not_wait_for_a_delayed_ack(spark):
     """Py4J's JVM side sends an answer over its 8 KB buffer in two
-    writes; with Nagle on, the second waits out the 40 ms delayed ACK."""
-    import statistics
+    writes; with Nagle on, the second waits out the 40 ms delayed ACK.
+    With Nagle on no call beats that floor, so the fastest of five is
+    checked: scheduler noise on a loaded host can slow some calls."""
     import time
 
     from pandasqlite_spark.session import get_spark
@@ -653,7 +654,7 @@ def test_py4j_answer_over_8kb_does_not_wait_for_a_delayed_ack(spark):
         t0 = time.perf_counter()
         assert len(string_utils.repeat("x", 9000)) == 9000
         times_ms.append((time.perf_counter() - t0) * 1e3)
-    assert statistics.median(times_ms) < 20, times_ms
+    assert min(times_ms) < 20, times_ms
 
 
 def test_get_spark_in_another_thread_sets_nagle_off_on_that_threads_connection(spark):
