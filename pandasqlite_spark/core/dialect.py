@@ -6,23 +6,27 @@ rewriter only absorbs *residual* SQLite-isms an LLM habitually emits
 (SURVEY.md §4.2-1).  It is a string/token transform — deliberately not a
 Catalyst extension; everything downstream is stock Spark SQL.
 
-Handled (SQLite semantics per SURVEY.md §2.B dialect-Δ rows):
+Every rule runs on the SQL with its string literals and backtick
+identifiers masked, so none fires inside them.  Two kinds of rule
+(SQLite semantics per SURVEY.md §2.B dialect-Δ rows):
 
-- ``strftime('%Y', d)`` and friends → ``date_format`` / ``year()`` etc.
-- scalar two-arg ``min/max`` → ``least/greatest`` (§2.B-30)
-- ``ifnull`` → kept (Spark has it); ``random()`` → ``rand()``
-- ``GROUP_CONCAT(x [, sep])`` → ``array_join(collect_list(x), sep)``
-  (§2.B-16)
-- double-quoted string *literals* → single-quoted (SQLite allows
-  ``"1"`` as a literal; Spark would read an identifier) — only rewritten
-  when the quoted text is not a known column/table identifier.
-- ``LIKE`` case-insensitivity (§2.B-8): SQLite LIKE is ASCII-case-
-  insensitive; Spark's is case-sensitive → rewrite to ``ILIKE``.
+- call rules: ``_CALLS`` maps each SQLite function name to a renderer
+  of one call — strftime, scalar min/max (§2.B-30), group_concat
+  (§2.B-16), total, julianday, the 'now' forms of date/datetime,
+  iif, unicode, unixepoch, printf, random().  :func:`_rewrite_calls`
+  applies the table in one pass, innermost call first.
+- token rules: CAST to TEXT/REAL/NUMERIC, the JSON arrows ``->`` and
+  ``->>``, ``LIMIT off, cnt``, GLOB, ``LIKE`` → ``ILIKE`` (§2.B-8:
+  SQLite LIKE is ASCII-case-insensitive, Spark's is case-sensitive),
+  and double-quoted string *literals* → single-quoted (SQLite allows
+  ``"1"`` as a literal; Spark would read an identifier) — a
+  double-quoted known column/table identifier becomes a backtick one.
 """
 
 from __future__ import annotations
 
 import re
+from typing import Iterator, NamedTuple
 
 # ---------------------------------------------------------------------------
 # Quote masking.  Every regex rewrite below must NOT fire inside a string
@@ -47,6 +51,76 @@ def _unmask(sql: str, spans: list[str]) -> str:
     return _MASK_TOKEN_RE.sub(lambda m: spans[int(m.group(1))], sql)
 
 
+# ---------------------------------------------------------------------------
+# Parenthesis depth.  One walk serves the call pass, the argument split and
+# rewrite_bare_aggregate's clause scans.  A double-quoted span is skipped
+# whole: it is never masked (it may be an identifier), and a paren or comma
+# inside it is text.
+# ---------------------------------------------------------------------------
+
+
+def _depth0(s: str, token: str, pos: int = 0) -> Iterator[re.Match]:
+    """Yield each match of the regex ``token`` in ``s[pos:]`` that lies
+    outside every parenthesis opened after ``pos``.  A ``)`` that closes
+    one opened before ``pos`` is yielded last (its ``close`` group set)."""
+    rx = re.compile(rf'(?P<dq>"[^"]*")|(?P<open>\()|(?P<close>\))|{token}', re.IGNORECASE)
+    depth = 0
+    for m in rx.finditer(s, pos):
+        if m["open"]:
+            depth += 1
+        elif m["close"]:
+            if not depth:
+                yield m
+                return
+            depth -= 1
+        elif not depth and not m["dq"]:
+            yield m
+
+
+def _close(s: str, pos: int) -> int | None:
+    """Index just past the ``)`` that closes a ``(`` opened right before
+    ``pos``; None when the parentheses never balance."""
+    return next((m.end() for m in _depth0(s, "(?!)", pos)), None)
+
+
+def _split(s: str) -> list[str]:
+    """``s`` cut at its depth-0 commas, each part stripped."""
+    cuts = [m.start() for m in _depth0(s, ",") if not m["close"]]
+    return [s[a + 1 : b].strip() for a, b in zip([-1, *cuts], [*cuts, len(s)])]
+
+
+_DOUBLE_QUOTED_RE = re.compile(r'"([^"]*)"')
+
+
+def _resolve_double_quoted(text: str, identifiers: set[str]) -> str:
+    """SQLite reads ``"text"`` as an identifier when one exists, else as a
+    string literal."""
+    if text in identifiers or text.lower() in identifiers:
+        return f"`{text}`"
+    return "'" + text.replace("'", "''") + "'"
+
+
+# ---------------------------------------------------------------------------
+# Call rules.  A renderer gets one call, its arguments already rewritten,
+# and returns the Spark SQL for it, or None to leave it as written.
+# ---------------------------------------------------------------------------
+
+
+class _Call(NamedTuple):
+    inner: str  # the text between the parentheses
+    args: list[str]  # ``inner`` cut at depth-0 commas
+    spans: list[str]
+
+    def lit(self, i: int) -> str | None:
+        """The text of argument ``i`` when it is one single-quoted literal."""
+        m = _MASK_TOKEN_RE.fullmatch(self.args[i]) if i < len(self.args) else None
+        span = self.spans[int(m[1])] if m else ""
+        return span[1:-1] if span.startswith("'") else None
+
+    def is_now(self, i: int) -> bool:
+        return (self.lit(i) or "").lower() == "now"
+
+
 _STRFTIME_MAP = {
     "%Y": "yyyy",
     "%m": "MM",
@@ -58,192 +132,151 @@ _STRFTIME_MAP = {
 }
 
 
-def _close_paren(s: str, start: int) -> int | None:
-    """Index just past the ``)`` that closes a ``(`` opened right before
-    ``start``; None when the parentheses never balance."""
-    depth = 1
-    for j in range(start, len(s)):
-        if s[j] == "(":
-            depth += 1
-        elif s[j] == ")":
-            depth -= 1
-            if not depth:
-                return j + 1
+def _strftime(c: _Call) -> str | None:
+    fmt = c.lit(0)
+    if fmt is None or len(c.args) != 2:
+        return None
+    d = c.args[1]
+    if fmt == "%s":
+        # SQLite: seconds since epoch (an INTEGER, not a string)
+        return f"unix_timestamp({d})"
+    if fmt == "%Y":
+        return f"CAST(year({d}) AS STRING)"
+    if fmt == "%w":
+        # SQLite: day of week 0-6, Sunday = 0; Spark dayofweek() is
+        # 1-7 Sunday = 1 (no ICU pattern matches SQLite's numbering)
+        return f"CAST(dayofweek({d}) - 1 AS STRING)"
+    for k, v in _STRFTIME_MAP.items():
+        fmt = fmt.replace(k, v)
+    return f"date_format({d}, '{fmt}')"
+
+
+def _group_concat(c: _Call) -> str | None:
+    if len(c.args) == 1:
+        return f"array_join(collect_list({c.inner}), ',')"
+    if len(c.args) == 2:
+        return f"array_join(collect_list({c.args[0]}), {c.args[1]})"
     return None
 
 
-def _rewrite_strftime(sql: str, spans: list[str]) -> str:
-    """Paren-balanced rewrite of ``strftime(<fmt>, <expr>)``.
-
-    Operates on the MASKED string: the format literal is a mask token
-    whose text we look up in ``spans``; the second argument is consumed
-    with a paren-balanced scan so nested calls like
-    ``strftime('%Y', date(x))`` rewrite correctly (the old ``[^)]+?``
-    regex stopped at the first ``)`` and emitted malformed SQL).
-    """
-
-    def render(fmt: str, arg: str) -> str:
-        if fmt == "%s":
-            # SQLite: seconds since epoch (an INTEGER, not a string)
-            return f"unix_timestamp({arg})"
-        if fmt == "%Y":
-            return f"CAST(year({arg}) AS STRING)"
-        if fmt == "%m":
-            return f"date_format({arg}, 'MM')"
-        if fmt == "%d":
-            return f"date_format({arg}, 'dd')"
-        if fmt == "%w":
-            # SQLite: day of week 0-6, Sunday = 0; Spark dayofweek() is
-            # 1-7 Sunday = 1 (no ICU pattern matches SQLite's numbering)
-            return f"CAST(dayofweek({arg}) - 1 AS STRING)"
-        out = fmt
-        for k, v in _STRFTIME_MAP.items():
-            out = out.replace(k, v)
-        return f"date_format({arg}, '{out}')"
-
-    pat = re.compile(r"strftime\(\s*\x00(\d+)\x00\s*,\s*", re.IGNORECASE)
-    out, i = [], 0
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            break
-        out.append(sql[i : m.start()])
-        fmt = spans[int(m.group(1))].strip("'")
-        j = _close_paren(sql, m.end()) or len(sql)
-        arg = sql[m.end() : j - 1].strip()
-        out.append(render(fmt, arg))
-        i = j
-    return "".join(out)
+def _julianday(c: _Call) -> str | None:
+    """Julian Day number.  ``'now'`` keeps the time of day, as SQLite
+    does; any other argument counts whole days from the epoch (JD
+    2440587.5 = 1970-01-01 00:00 UTC), so SQLite's LLM-facing idiom
+    ``julianday(a) - julianday(b)`` becomes a plain day difference."""
+    if len(c.args) != 1:
+        return None
+    if c.is_now(0):
+        return "(unix_micros(current_timestamp()) / 86400000000.0d + 2440587.5d)"
+    return f"(datediff(to_date({c.args[0]}), DATE'1970-01-01') + 2440587.5)"
 
 
-def _rewrite_scalar_minmax(sql: str) -> str:
-    # MIN(a, b[, ...]) with 2+ args is scalar in SQLite → least();
-    # aggregate MIN(a) is untouched.  Parenthesis-aware scan.
-    out, i = [], 0
-    pat = re.compile(r"\b(min|max)\s*\(", re.IGNORECASE)
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            break
-        out.append(sql[i : m.start()])
-        j = _close_paren(sql, m.end()) or len(sql)
-        fn = m.group(1).lower()
-        inner = _rewrite_scalar_minmax(sql[m.end() : j - 1])  # recurse into args
-        if len(_split_top_level(sql[m.end() : j])) > 1:
-            out.append(("least(" if fn == "min" else "greatest(") + inner + ")")
-        else:
-            out.append(m.group(0) + inner + ")")
-        i = j
-    return "".join(out)
+_UNIT_MOD_RE = re.compile(r"([+-]?\d+)\s+(day|month|year)s?", re.IGNORECASE)
 
 
-def _rewrite_group_concat(sql: str) -> str:
-    def repl(m: re.Match) -> str:
-        args = m.group(1)
-        parts = _split_top_level(args)
-        if len(parts) == 2:
-            return f"array_join(collect_list({parts[0]}), {parts[1]})"
-        return f"array_join(collect_list({args}), ',')"
+def _now_form(fn: str):
+    """``date('now'[, '±N day/month/year'])`` and its ``datetime`` twin
+    as arithmetic on the current date or timestamp: ``to_date('now')``
+    would be a silent wrong value.  Any other modifier ('start of month',
+    'weekday 0', chained modifiers) stays as written and fails loudly at
+    analysis."""
 
-    return re.sub(r"group_concat\(([^()]*)\)", repl, sql, flags=re.IGNORECASE)
-
-
-def _split_top_level(s: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur).strip())
-    return parts
-
-
-def _rewrite_julianday(sql: str) -> str:
-    """``julianday(x)`` → Julian Day number via ``datediff`` from the
-    epoch (JD 2440587.5 = 1970-01-01 00:00 UTC).  SQLite's LLM-facing
-    idiom ``julianday(a) - julianday(b)`` thereby collapses to a plain
-    day difference.  Paren-balanced so nested calls survive."""
-    out, i = [], 0
-    pat = re.compile(r"\bjulianday\s*\(", re.IGNORECASE)
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            break
-        out.append(sql[i : m.start()])
-        j = _close_paren(sql, m.end()) or len(sql)
-        arg = _rewrite_julianday(sql[m.end() : j - 1]).strip()
-        out.append(f"(datediff(to_date({arg}), DATE'1970-01-01') + 2440587.5)")
-        i = j
-    return "".join(out)
-
-
-_UNIT_MOD_RE = re.compile(r"^'([+-]?\d+)\s+(day|month|year)s?'$", re.IGNORECASE)
-
-
-def _rewrite_now_forms(sql: str, spans: list[str]) -> str:
-    """SQLite 'now' idioms that would otherwise turn into SILENT NULLs
-    (``to_date('now')`` parses to NULL under ANSI-off — the worst
-    failure mode, wrong values with no error):
-
-    - ``julianday('now')`` → current Julian Day from
-      ``current_timestamp()`` (time-of-day included, as SQLite does)
-    - ``date('now', '±N day/month/year')`` → ``date_add``/``add_months``
-      arithmetic on ``current_date()``
-    - ``datetime('now', '±N day/month/year')`` → ``timestampadd`` on
-      ``current_timestamp()``
-
-    Multi-modifier forms ('start of month', 'weekday 0', chained
-    modifiers) stay untouched and fail loudly at analysis."""
-
-    def _jd_now(m: re.Match) -> str:
-        if spans[int(m.group(1))].lower() == "'now'":
-            return "(unix_micros(current_timestamp()) / 86400000000.0d + 2440587.5d)"
-        return m.group(0)
-
-    sql = re.sub(
-        r"\bjulianday\s*\(\s*\x00(\d+)\x00\s*\)", _jd_now, sql, flags=re.IGNORECASE
-    )
-
-    def _date_mod(m: re.Match) -> str:
-        fn = m.group(1).lower()
-        if spans[int(m.group(2))].lower() != "'now'":
-            return m.group(0)
-        mod = _UNIT_MOD_RE.match(spans[int(m.group(3))])
+    def render(c: _Call) -> str | None:
+        if not c.is_now(0) or len(c.args) > 2:
+            return None
+        now = "current_date()" if fn == "date" else "current_timestamp()"
+        if len(c.args) == 1:
+            return now
+        mod = _UNIT_MOD_RE.fullmatch(c.lit(1) or "")
         if not mod:
-            return m.group(0)
-        n, unit = int(mod.group(1)), mod.group(2).lower()
-        if fn == "date":
-            if unit == "day":
-                return f"date_add(current_date(), {n})"
-            months = n if unit == "month" else n * 12
-            return f"add_months(current_date(), {months})"
-        return f"timestampadd({unit.upper()}, {n}, current_timestamp())"
+            return None
+        n, unit = int(mod[1]), mod[2].lower()
+        if fn == "datetime":
+            return f"timestampadd({unit.upper()}, {n}, {now})"
+        if unit == "day":
+            return f"date_add({now}, {n})"
+        return f"add_months({now}, {n if unit == 'month' else n * 12})"
 
-    return re.sub(
-        r"\b(date|datetime)\s*\(\s*\x00(\d+)\x00\s*,\s*\x00(\d+)\x00\s*\)",
-        _date_mod,
-        sql,
-        flags=re.IGNORECASE,
-    )
+    return render
+
+
+def _rename(fn: str):
+    return lambda c: f"{fn}({c.inner})"
+
+
+#: SQLite function name → renderer of one call.
+_CALLS = {
+    "strftime": _strftime,
+    # MIN(a, b[, ...]) with 2+ args is scalar in SQLite; MIN(a) is the
+    # aggregate and stays
+    "min": lambda c: f"least({c.inner})" if len(c.args) > 1 else None,
+    "max": lambda c: f"greatest({c.inner})" if len(c.args) > 1 else None,
+    "group_concat": _group_concat,
+    # SQLite's never-NULL sum
+    "total": lambda c: f"coalesce(sum({c.inner}), 0.0d)",
+    "julianday": _julianday,
+    "date": _now_form("date"),
+    "datetime": _now_form("datetime"),
+    "iif": _rename("if"),
+    # the first code point
+    "unicode": _rename("ascii"),
+    # SQLite ≥3.38; a bare unixepoch() is the current epoch second
+    "unixepoch": _rename("unix_timestamp"),
+    # the same C-style format language
+    "printf": _rename("format_string"),
+    "random": lambda c: None if c.inner.strip() else "rand()",
+}
+
+_CALL_RE = re.compile(r"\b(" + "|".join(_CALLS) + r")\s*\(", re.IGNORECASE)
+
+
+def _call(inner: str, spans: list[str], identifiers: set[str]) -> _Call:
+    """``inner`` as a call's arguments.  A double-quoted argument is
+    resolved here, so a renderer reads ``"%Y"`` as it reads ``'%Y'``."""
+    args = _split(inner)
+    for i, a in enumerate(args):
+        if dq := _DOUBLE_QUOTED_RE.fullmatch(a):
+            spans.append(_resolve_double_quoted(dq[1], identifiers))
+            args[i] = f"\x00{len(spans) - 1}\x00"
+    return _Call(inner, args, spans)
+
+
+def _rewrite_calls(sql: str, spans: list[str], identifiers: set[str]) -> str:
+    """Apply ``_CALLS`` to every call in the masked ``sql``, rewriting a
+    call's arguments before the call itself."""
+    out, i = [], 0
+    while m := _CALL_RE.search(sql, i):
+        end = _close(sql, m.end())
+        if end is None:
+            break
+        inner = _rewrite_calls(sql[m.end() : end - 1], spans, identifiers)
+        new = _CALLS[m[1].lower()](_call(inner, spans, identifiers))
+        out += [sql[i : m.start()], m[0] + inner + ")" if new is None else new]
+        i = end
+    return "".join(out) + sql[i:]
+
+
+# ---------------------------------------------------------------------------
+# Token rules
+# ---------------------------------------------------------------------------
+
+_TOKEN_RULES = [
+    (re.compile(r"\bAS\s+TEXT\b", re.IGNORECASE), "AS STRING"),
+    (re.compile(r"\bAS\s+REAL\b", re.IGNORECASE), "AS DOUBLE"),
+    # SQLite NUMERIC affinity preserves the value; Spark NUMERIC is
+    # decimal(10,0) and would TRUNCATE — widen to DOUBLE
+    (re.compile(r"\bAS\s+NUMERIC\b", re.IGNORECASE), "AS DOUBLE"),
+    # a ->> '$.k' / a -> '$.k' → get_json_object(a, '$.k').  (-> returns
+    # JSON text in SQLite; for scalar paths the two coincide with
+    # get_json_object's string result.)
+    (re.compile(r"([A-Za-z_][\w.]*|\))\s*->>?\s*(\x00\d+\x00)"), r"get_json_object(\1, \2)"),
+    # the SQLite/MySQL offset-first form
+    (re.compile(r"\bLIMIT\s+(\d+)\s*,\s*(\d+)", re.IGNORECASE), r"LIMIT \2 OFFSET \1"),
+]
 
 
 def _rewrite_double_quoted_literals(sql: str, identifiers: set[str]) -> str:
-    def repl(m: re.Match) -> str:
-        inner = m.group(1)
-        if inner in identifiers or inner.lower() in identifiers:
-            return f"`{inner}`"
-        return "'" + inner.replace("'", "''") + "'"
-
-    return re.sub(r'"([^"]*)"', repl, sql)
+    return _DOUBLE_QUOTED_RE.sub(lambda m: _resolve_double_quoted(m[1], identifiers), sql)
 
 
 _TABLE_TOKEN_RE = re.compile(r"(?<![\w`'\"])table(?![\w`'\"])", re.IGNORECASE)
@@ -258,71 +291,6 @@ def rewrite_table_placeholder(sql: str, table_name: str) -> str:
     masked, spans = _mask_quoted_spans(sql)
     masked = _TABLE_TOKEN_RE.sub(f"`{table_name}`", masked)
     return _unmask(masked, spans)
-
-
-def _rewrite_misc_sqlite(sql: str, spans: list[str]) -> str:
-    """Small token-level SQLite-isms (applied on the masked string, so
-    literals are never touched):
-
-    - ``iif(c, a, b)`` → ``if(c, a, b)``
-    - ``CAST(x AS TEXT/REAL)`` → Spark type names STRING/DOUBLE
-    - ``date('now')`` / ``datetime('now')`` → current_date/timestamp
-      (plain 'now', no modifiers — modifier forms fail loudly at
-      analysis rather than silently shifting time)
-    - ``LIMIT off, cnt`` (SQLite/MySQL offset-first form) →
-      ``LIMIT cnt OFFSET off``
-    - ``total(x)`` → ``coalesce(sum(x), 0.0d)`` (SQLite's
-      never-NULL sum)
-    """
-    sql = re.sub(r"\biif\s*\(", "if(", sql, flags=re.IGNORECASE)
-    sql = re.sub(r"\bAS\s+TEXT\b", "AS STRING", sql, flags=re.IGNORECASE)
-    sql = re.sub(r"\bAS\s+REAL\b", "AS DOUBLE", sql, flags=re.IGNORECASE)
-    # SQLite NUMERIC affinity preserves the value; Spark NUMERIC is
-    # decimal(10,0) and would TRUNCATE — widen to DOUBLE
-    sql = re.sub(r"\bAS\s+NUMERIC\b", "AS DOUBLE", sql, flags=re.IGNORECASE)
-    # SQLite unicode(c) == Spark ascii(c) (first code point)
-    sql = re.sub(r"\bunicode\s*\(", "ascii(", sql, flags=re.IGNORECASE)
-
-    # a ->> '$.k' / a -> '$.k' → get_json_object(a, '$.k').  (-> returns
-    # JSON text in SQLite; for scalar paths the two coincide with
-    # get_json_object's string result.)
-    sql = re.sub(
-        r"([A-Za-z_][\w.]*|\))\s*->>?\s*\x00(\d+)\x00",
-        lambda m: f"get_json_object({m.group(1)}, \x00{m.group(2)}\x00)",
-        sql,
-    )
-
-    def _now(m: re.Match) -> str:
-        idx = int(m.group(2))
-        if spans[idx].lower() == "'now'":
-            return "current_date()" if m.group(1).lower() == "date" else "current_timestamp()"
-        return m.group(0)
-
-    sql = re.sub(r"\b(date|datetime)\s*\(\s*\x00(\d+)\x00\s*\)", _now, sql, flags=re.IGNORECASE)
-    sql = re.sub(
-        r"\bLIMIT\s+(\d+)\s*,\s*(\d+)",
-        r"LIMIT \2 OFFSET \1",
-        sql,
-        flags=re.IGNORECASE,
-    )
-    sql = re.sub(
-        r"\btotal\s*\(([^()]*)\)",
-        r"coalesce(sum(\1), 0.0d)",
-        sql,
-        flags=re.IGNORECASE,
-    )
-    # unixepoch(x) (SQLite ≥3.38) → unix_timestamp(x); bare
-    # unixepoch() → current epoch seconds
-    sql = re.sub(
-        r"\bunixepoch\s*\(\s*\)",
-        "unix_timestamp()",
-        sql,
-        flags=re.IGNORECASE,
-    )
-    sql = re.sub(r"\bunixepoch\s*\(", "unix_timestamp(", sql, flags=re.IGNORECASE)
-    # printf → format_string (same C-style format language)
-    sql = re.sub(r"\bprintf\s*\(", "format_string(", sql, flags=re.IGNORECASE)
-    return sql
 
 
 _GLOB_SAFE_RE = re.compile(r"^'[^%_\[]*'$")
@@ -462,13 +430,9 @@ def rewrite_sqlite_to_spark(sql: str, identifiers: set[str] | None = None) -> st
     """
     identifiers = {i.lower() for i in (identifiers or set())}
     masked, spans = _mask_quoted_spans(sql)
-    masked = _rewrite_strftime(masked, spans)
-    masked = _rewrite_scalar_minmax(masked)
-    masked = _rewrite_group_concat(masked)
-    masked = re.sub(r"\brandom\s*\(\s*\)", "rand()", masked, flags=re.IGNORECASE)
-    masked = _rewrite_now_forms(masked, spans)
-    masked = _rewrite_julianday(masked)
-    masked = _rewrite_misc_sqlite(masked, spans)
+    masked = _rewrite_calls(masked, spans, identifiers)
+    for rx, repl in _TOKEN_RULES:
+        masked = rx.sub(repl, masked)
     masked = _rewrite_glob(masked, spans, identifiers)
     masked = re.sub(
         r"(\x00\d+\x00|\)|\w+(?:\.\w+)?)(\s+NOT)?(\s+)LIKE\s+",
@@ -488,7 +452,7 @@ def rewrite_sqlite_to_spark(sql: str, identifiers: set[str] | None = None) -> st
 
 #: Function heads that make a select item an aggregate.  Two-argument
 #: scalar MIN/MAX are rewritten to least/greatest BEFORE this check
-#: (``_rewrite_scalar_minmax``), so a surviving ``min(``/``max(`` is
+#: (the ``min``/``max`` call rules), so a surviving ``min(``/``max(`` is
 #: the aggregate form.
 _AGG_HEAD_RE = re.compile(
     r"\b(count|sum|avg|min|max|total|group_concat|listagg|string_agg"
@@ -532,19 +496,11 @@ def rewrite_bare_aggregate(sql: str) -> str:
     if not head:
         return sql
     # top-level FROM (depth-0 only; a FROM inside a subquery is deeper)
-    depth, from_start = 0, None
-    for m in re.finditer(r"[()]|\bfrom\b", masked[head.end():], re.IGNORECASE):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            from_start = head.end() + m.start()
-            break
-    if from_start is None:
+    from_m = next(_depth0(masked, r"\bfrom\b", head.end()), None)
+    if from_m is None or from_m["close"]:
         return sql
-    items = _split_top_level(masked[head.end():from_start])
+    from_start = from_m.start()
+    items = _split(masked[head.end():from_start])
     # the GROUP-BY-present twin (Spark: MISSING_AGGREGATION): SQLite
     # also picks an arbitrary in-group row for select items outside the
     # GROUP BY list — `SELECT city, pop FROM t GROUP BY city`.  Collect
@@ -554,24 +510,15 @@ def rewrite_bare_aggregate(sql: str) -> str:
     gb = re.search(r"\bgroup\s+by\b", masked[from_start:], re.IGNORECASE)
     if gb:
         gb_start = from_start + gb.end()
-        depth, gb_end = 0, len(masked)
-        for m in re.finditer(
-            r"[()]|\border\s+by\b|\bhaving\b|\blimit\b|\bwindow\b",
-            masked[gb_start:],
-            re.IGNORECASE,
-        ):
-            tok = m.group(0)
-            if tok == "(":
-                depth += 1
-            elif tok == ")":
-                depth -= 1
-            elif depth == 0:
-                gb_end = gb_start + m.start()
-                break
-        group_exprs = {
-            g.strip().lower().replace("`", "")
-            for g in _split_top_level(masked[gb_start:gb_end])
-        }
+        gb_end = next(
+            (
+                m.start()
+                for m in _depth0(masked, r"\border\s+by\b|\bhaving\b|\blimit\b|\bwindow\b", gb_start)
+                if not m["close"]
+            ),
+            len(masked),
+        )
+        group_exprs = {g.lower().replace("`", "") for g in _split(masked[gb_start:gb_end])}
         if not group_exprs or any(not g for g in group_exprs):
             return sql
     elif not any(_AGG_HEAD_RE.search(it) for it in items):
@@ -607,14 +554,14 @@ def rewrite_bare_aggregate(sql: str) -> str:
     picker = lambda expr: f"any_value({expr})"  # noqa: E731
     aggs = list(_AGG_HEAD_RE.finditer(masked))
     if len(aggs) == 1 and aggs[0].group(1).lower() in ("min", "max"):
-        j = _close_paren(masked, aggs[0].end())
+        j = _close(masked, aggs[0].end())
         arg = masked[aggs[0].end() : (j or len(masked)) - 1].strip()
         arg = re.sub(r"^distinct\s+", "", arg, flags=re.IGNORECASE)
         # one plain argument only (a 2-arg min/max is SQLite's SCALAR
         # form — rewritten to least/greatest before this repair runs,
         # but stay defensive); ties pick an arbitrary extremum row on
         # both engines
-        if j and arg and len(_split_top_level(arg)) == 1:
+        if j and arg and len(_split(arg)) == 1:
             by = "max_by" if aggs[0].group(1).lower() == "max" else "min_by"
             picker = lambda expr, by=by, arg=arg: f"{by}({expr}, {arg})"  # noqa: E731
     out_items = []

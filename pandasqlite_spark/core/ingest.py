@@ -85,7 +85,8 @@ def _parse_json(reply: str, default):
         start = min(starts)
         opener = reply[start]
         end = reply.rindex("}" if opener == "{" else "]") + 1
-        return json.loads(reply[start:end].replace("NaN", '"NaN"'))
+        # a bare NaN (pandas' missing value) reads as the string "NaN"
+        return json.loads(reply[start:end], parse_constant=lambda c: c if c == "NaN" else float(c))
     except ValueError:
         # no JSON in the reply (min of no openers, no closer) or bad JSON
         # (JSONDecodeError); curriculum JSON errors are swallowed in the

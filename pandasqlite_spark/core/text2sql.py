@@ -122,6 +122,14 @@ _REPAIR_ATTEMPTS = _RepairAttempts()
 PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(_REPAIR_ATTEMPTS)
 
 
+def _analyzed(spark: SparkSession, sql: str) -> DataFrame:
+    """``spark.sql(sql)``, analysed now rather than at its first action."""
+    with _REPAIR_ATTEMPTS.active():
+        df = spark.sql(sql)
+        df.schema
+    return df
+
+
 def run_with_repair(
     spark: SparkSession,
     question: str,
@@ -147,10 +155,7 @@ def run_with_repair(
     for _ in range(max_repairs + 1):
         sql = text2sql(q, ingestions, llm_callback, **kwargs)
         try:
-            with _REPAIR_ATTEMPTS.active():
-                df = spark.sql(sql)
-                df.schema  # force analysis now, not at first action
-            return df
+            return _analyzed(spark, sql)
         except AnalysisException as exc:
             last_exc = exc
             # deterministic repair first: SQLite permits bare
@@ -166,10 +171,7 @@ def run_with_repair(
                 fixed = rewrite_bare_aggregate(sql)
                 if fixed != sql:
                     try:
-                        with _REPAIR_ATTEMPTS.active():
-                            df = spark.sql(fixed)
-                            df.schema
-                        return df
+                        return _analyzed(spark, fixed)
                     except AnalysisException as exc2:
                         last_exc = exc2
             q = (

@@ -277,8 +277,9 @@ def resize_bilinear(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 # The decoder handles the real-world baseline profile — SOF0, 8-bit,
 # greyscale or YCbCr with any JFIF sampling (4:4:4, 4:2:0, 4:2:2),
 # multiple DQT/DHT segments, restart markers, byte stuffing — because a
-# 100 TB multimodal corpus is mostly baseline JPEG.  Progressive (SOF2),
-# arithmetic coding, and 12-bit precision raise NotImplementedError.
+# 100 TB multimodal corpus is mostly baseline JPEG.  Progressive (SOF2)
+# decodes through ``_decode_jpeg_progressive`` below; arithmetic coding,
+# 12-bit precision and hierarchical frames raise NotImplementedError.
 #
 # The encoder emits single-component (greyscale) baseline files with the
 # ITU T.81 Annex K luminance Huffman tables and a caller-chosen

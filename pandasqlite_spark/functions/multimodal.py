@@ -5,12 +5,13 @@ metadata; decode / feature-extract run as Arrow-batched pandas
 functions over ``mapInPandas``.  The decoders are REAL for the
 formats decodable with stdlib + numpy (see
 :mod:`pandasqlite_spark.functions.imaging`): PNG (zlib inflate, CRC
-verify, all five scanline filters), baseline JPEG (SOF0 Huffman DCT,
-greyscale/YCbCr, restart markers), RIFF/WAV 16-bit PCM, and
-YUV4MPEG2 frame sampling.  Formats that genuinely need native libs
-(progressive JPEG, mp3, mp4) raise ``NotImplementedError`` — swap the
-decoder body for PIL/soundfile/pyav on a cluster that has them; the
-``mapInPandas`` plumbing does not change.
+verify, all five scanline filters), baseline and progressive JPEG
+(SOF0/SOF2 Huffman DCT, greyscale/YCbCr, restart markers), RIFF/WAV
+16-bit PCM, and YUV4MPEG2 frame sampling.  Formats that genuinely need
+native libs (arithmetic-coded JPEG, mp3, mp4) raise
+``NotImplementedError`` — swap the decoder body for PIL/soundfile/pyav
+on a cluster that has them; the ``mapInPandas`` plumbing does not
+change.
 
 - ``attach_payload``      — deterministic md5-digest payload (production:
                             ``spark.read.format("binaryFile")`` or a lazy
@@ -105,16 +106,16 @@ def _pil_decode(payload: bytes):
 
 def decode_image(payload: bytes):
     """REAL image decoder: PNG (8-bit grey/RGB/RGBA, any scanline
-    filter, CRC-verified) and baseline JPEG (SOF0 Huffman, greyscale or
-    YCbCr 4:4:4/4:2:0/4:2:2, restart markers) via the pure-numpy codecs
-    in :mod:`pandasqlite_spark.functions.imaging`.  Returns a uint8
-    numpy array (H,W[,C]).
+    filter, CRC-verified) and baseline or progressive JPEG (SOF0/SOF2
+    Huffman, greyscale or YCbCr 4:4:4/4:2:0/4:2:2, restart markers) via
+    the pure-numpy codecs in :mod:`pandasqlite_spark.functions.imaging`.
+    Returns a uint8 numpy array (H,W[,C]).
 
-    Formats the numpy codecs can't handle (progressive JPEG, WebP,
-    TIFF, …) fall back to Pillow WHEN IMPORTABLE — a cluster that ships
-    Pillow gets full-format coverage with zero plumbing change, and a
-    container without it keeps the loud ``NotImplementedError``
-    contract.  The numpy codec stays primary (deterministic,
+    Formats the numpy codecs can't handle (arithmetic-coded, 12-bit or
+    hierarchical JPEG, WebP, TIFF, …) fall back to Pillow WHEN
+    IMPORTABLE — a cluster that ships Pillow gets full-format coverage
+    with zero plumbing change, and a container without it keeps the
+    loud ``NotImplementedError`` contract.  The numpy codec stays primary (deterministic,
     oracle-backed); PIL is the breadth escape hatch."""
     try:
         if payload[:8] == b"\x89PNG\r\n\x1a\n":

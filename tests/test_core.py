@@ -182,6 +182,51 @@ def test_dialect_rules(src, expected):
     assert rewrite_sqlite_to_spark(src) == expected
 
 
+# --- a rewritten statement answers as SQLite does: each case runs on the
+# stdlib sqlite3 and, rewritten, on Spark, over the same rows -----------------
+
+_SQLITE_ROWS = [
+    ("ab", "north", 1, "2023-01-05"),
+    ("cd", "south", None, "2024-07-30"),
+    ("ef", "northeast", 3, "2024-12-31"),
+]
+
+
+@pytest.mark.parametrize(
+    "select, sep",
+    [
+        ("GROUP_CONCAT(upper(x))", ","),
+        ("GROUP_CONCAT(substr(n, 1, 3), ';')", ";"),
+        ('GROUP_CONCAT(x, ", ")', ", "),
+        ("total(coalesce(a, 0))", None),
+        ('strftime("%Y", d)', None),
+        ('julianday("now")', None),
+    ],
+)
+def test_rewrite_answers_as_sqlite_does(spark, select, sep):
+    """``sep``: the GROUP_CONCAT separator; its output is compared as a
+    sorted list, since neither engine orders the group."""
+    import sqlite3
+
+    sql = f"SELECT {select} AS v FROM answers_t"
+    con = sqlite3.connect(":memory:")
+    con.execute("CREATE TABLE answers_t (x TEXT, n TEXT, a INTEGER, d TEXT)")
+    con.executemany("INSERT INTO answers_t VALUES (?, ?, ?, ?)", _SQLITE_ROWS)
+    want = sorted(r[0] for r in con.execute(sql))
+    con.close()
+    rows = spark.createDataFrame(_SQLITE_ROWS, "x string, n string, a int, d string")
+    rows.createOrReplaceTempView("answers_t")
+    rewritten = rewrite_sqlite_to_spark(sql, {"x", "n", "a", "d", "answers_t"})
+    got = sorted(r[0] for r in spark.sql(rewritten).collect())
+    if sep is not None:
+        want, got = ([sorted(v.split(sep)) for v in vs] for vs in (want, got))
+    if "now" in select:
+        # 'now' is read once by each engine, moments apart: one minute's slack
+        assert [float(v) for v in got] == pytest.approx(want, abs=1 / 1440), rewritten
+    else:
+        assert got == want, rewritten
+
+
 def test_dialect_keeps_known_identifiers_quoted():
     out = rewrite_sqlite_to_spark('SELECT "Unit_cost" FROM t', identifiers={"unit_cost"})
     assert out == "SELECT `Unit_cost` FROM t"
@@ -606,6 +651,8 @@ def test_parse_json_swallows_only_missing_or_bad_json():
     assert _parse_json("no JSON here", {}) == {}  # no opener: min([])
     assert _parse_json('{"a": 1', None) is None  # no closer: rindex
     assert _parse_json("{a: 1}", {}) == {}  # JSONDecodeError
+    assert _parse_json('{"a": NaN}', {}) == {"a": "NaN"}
+    assert _parse_json('{"NaN": "missing", "A": "alpha"}', {}) == {"NaN": "missing", "A": "alpha"}
     with pytest.raises(AttributeError):  # not a reply at all: raised
         _parse_json(None, {})
 

@@ -3,7 +3,9 @@ rewrite/repair rule in core/dialect.py must be exercised by >= 1
 GO-Sales eval golden case, so a new rule cannot land untested.  Probes
 call the ACTUAL rewrite functions (a probe fires only when the rule
 changes the SQL), evaluated over the raw golden completions from
-tests/test_gosales_eval.py with placeholder table hashes."""
+tests/test_gosales_eval.py with placeholder table hashes.  The call-rule
+probes are built from the dialect's call table, one per entry, so a new
+call rule gets a probe by being added to the table."""
 
 from __future__ import annotations
 
@@ -31,6 +33,41 @@ def _masked_probe(fn):
             return False
 
     return probe
+
+
+def _call_probe(names: set[str]):
+    """Some call of a function in ``names`` that its ``_CALLS`` renderer
+    rewrites."""
+
+    def probe(sql: str) -> bool:
+        masked, spans = D._mask_quoted_spans(sql)
+        for m in D._CALL_RE.finditer(masked):
+            end = D._close(masked, m.end())
+            name = m[1].lower()
+            if name in names and end:
+                call = D._call(masked[m.end() : end - 1], spans, set())
+                if D._CALLS[name](call) is not None:
+                    return True
+        return False
+
+    return probe
+
+
+#: call-table entries probed under one shared rule name
+_CALL_RULE_NAMES = {
+    "min": "scalar-minmax",
+    "max": "scalar-minmax",
+    "group_concat": "group-concat",
+    "date": "now-forms",
+    "datetime": "now-forms",
+}
+
+
+def _call_probes() -> dict:
+    rules: dict[str, set[str]] = {}
+    for name in D._CALLS:
+        rules.setdefault(_CALL_RULE_NAMES.get(name, name), set()).add(name)
+    return {rule: _call_probe(names) for rule, names in rules.items()}
 
 
 def _regex_probe(pat: str):
@@ -73,11 +110,7 @@ def _glob_edge_probe(edge_rx: str):
 
 
 PROBES = {
-    "strftime": _masked_probe(D._rewrite_strftime),
-    "julianday": _masked_probe(lambda m, s: D._rewrite_julianday(m)),
-    "scalar-minmax": _masked_probe(lambda m, s: D._rewrite_scalar_minmax(m)),
-    "group-concat": _masked_probe(lambda m, s: D._rewrite_group_concat(m)),
-    "now-forms": _masked_probe(D._rewrite_now_forms),
+    **_call_probes(),
     "glob": _masked_probe(lambda m, s: D._rewrite_glob(m, s, set())),
     "glob-caret-escape": _glob_edge_probe(r"\^"),
     "glob-negated-class-rbracket": _glob_edge_probe(r"\[\^\]"),
@@ -87,17 +120,11 @@ PROBES = {
     "double-quoted-literal": _masked_probe(
         lambda m, s: D._rewrite_double_quoted_literals(m, set())
     ),
-    "random": _regex_probe(r"\brandom\s*\(\s*\)"),
-    "iif": _regex_probe(r"\biif\s*\("),
     "cast-text": _regex_probe(r"\bAS\s+TEXT\b"),
     "cast-real": _regex_probe(r"\bAS\s+REAL\b"),
     "cast-numeric": _regex_probe(r"\bAS\s+NUMERIC\b"),
-    "unicode": _regex_probe(r"\bunicode\s*\("),
     "json-arrow": _regex_probe(r"->>?\s*\x00"),
     "limit-offset-comma": _regex_probe(r"\bLIMIT\s+\d+\s*,\s*\d+"),
-    "total": _regex_probe(r"\btotal\s*\("),
-    "unixepoch": _regex_probe(r"\bunixepoch\s*\("),
-    "printf": _regex_probe(r"\bprintf\s*\("),
     "repair-any-value": _bare_agg_probe("any_value("),
     "repair-max-by": _bare_agg_probe("max_by("),
     "repair-min-by": _bare_agg_probe("min_by("),
