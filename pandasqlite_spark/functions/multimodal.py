@@ -115,8 +115,9 @@ def decode_image(payload: bytes):
     hierarchical JPEG, WebP, TIFF, …) fall back to Pillow WHEN
     IMPORTABLE — a cluster that ships Pillow gets full-format coverage
     with zero plumbing change, and a container without it keeps the
-    loud ``NotImplementedError`` contract.  The numpy codec stays primary (deterministic,
-    oracle-backed); PIL is the breadth escape hatch."""
+    loud ``NotImplementedError`` contract.  The numpy codec stays
+    primary (deterministic, oracle-backed); PIL is the breadth escape
+    hatch."""
     try:
         if payload[:8] == b"\x89PNG\r\n\x1a\n":
             return decode_png(payload)
